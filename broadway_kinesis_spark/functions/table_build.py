@@ -22,8 +22,8 @@ The registry staleness scanner follows this import, so an edit here
 correctly stales every layout-backed query's driver row.
 
 :func:`vacuum_warehouse` is the protocol's RETENTION step (round 11): the
-daily roll-forward loop (operators/incremental_batch.py,
-embedding_incremental.py, fingerprint_incremental.py) keys version N+1's
+daily roll-forward loop (every ``functions/versioned_fold.VersionedArtifact``
+family, plus the split labels and the IVF index) keys version N+1's
 artifacts to new names, so superseded versions, superseded policies, and
 dead sessions' pid-diverted copies accumulate until something drops them.
 Vacuum drops exactly the provably-unservable: tables whose embedded

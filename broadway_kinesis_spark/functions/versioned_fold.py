@@ -50,6 +50,12 @@ Two artifact SHAPES ride on the same primitive:
   delta-keyed probes aggregate AFTER their delta-bounded join (never a
   corpus-wide pre-aggregation).
 
+Every table family is declared ONCE as a :class:`VersionedArtifact` —
+its name prefix, policy, id space, bucket spec, merge-on-read key and
+row transform — and the spec's ``ensure``/``roll_forward`` methods run
+the versioning protocol above for all of them; the channel modules keep
+only their row transforms and probes.
+
 Reference parity: [TGT] — engine extension (SURVEY §2.B infra family).
 """
 
@@ -59,6 +65,7 @@ import hashlib
 import os
 import shutil
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,8 +76,10 @@ from broadway_kinesis_spark.functions.table_build import (
     _OWNER_MARKER,
     _pid_alive,
     _release_build_lock,
+    corpus_sig,
     ensure_table,
 )
+from broadway_kinesis_spark.session import load
 
 
 def _warehouse_loc(spark: SparkSession, name: str) -> str:
@@ -422,3 +431,155 @@ def served_counts(spark: SparkSession, tbl: str, key: str, count_col: str) -> Da
         .groupBy(key)
         .agg(F.sum(count_col).alias(count_col))
     )
+
+
+#: the version-N / delta boundary the registered fixture queries pin (the
+#: convention ``dedup_incremental`` established: ids < 400 are "yesterday").
+BOUNDARY = 400
+
+#: each source table's id column — the id space a boundary slices
+_ID_COL = {"documents": "doc_id", "embeddings": "vec_id"}
+
+
+@dataclass(frozen=True)
+class VersionedArtifact:
+    """One incremental warehouse family: version N's table(s) built from
+    ``ids < boundary`` and rolled forward by folding
+    ``[boundary_n, boundary_n1)`` onto them (module docstring).
+
+    Table names are ``{prefix}{policy token}_{corpus_sig(source)}``; the
+    token hashes ``policy`` with the boundary (build) or with both
+    boundaries and the chained src (fold, :func:`fold_policy`), so a fold
+    never shadows a from-scratch build and a policy change keys new
+    tables. ``rows`` maps an id slice of ``source`` to the artifact rows;
+    ``fold_rows(delta, base)`` replaces it on folds whose delta rows depend
+    on version N's stored rows. ``mor=(key, count_col)`` marks a per-key
+    count table served merge-on-read; ``counts=(prefix, key, count_col)``
+    adds a companion merge-on-read table counting the main table's rows
+    per key (the ngram/video DF statistic)."""
+
+    #: family name in the corpus_versioning registry
+    name: str
+    prefix: str
+    policy: str
+    rows: Callable[[DataFrame], DataFrame]
+    source: str = "documents"
+    bucket_by: tuple[int, str] | None = None
+    mor: tuple[str, str] | None = None
+    counts: tuple[str, str, str] | None = None
+    fold_rows: Callable[[DataFrame, DataFrame], DataFrame] | None = None
+
+    @property
+    def prefixes(self) -> tuple[str, ...]:
+        """Warehouse name-prefixes of this family's tables (vacuum scope)."""
+        return (self.prefix,) + (() if self.counts is None else (self.counts[0],))
+
+    @property
+    def vec_keyed(self) -> bool:
+        """Boundaries are embeddings vec_ids, not doc_ids — a deployment's
+        vector and document id spaces advance independently."""
+        return self.source == "embeddings"
+
+    def _names(self, sf_dir: str, pol: str) -> tuple[str, ...]:
+        sig = corpus_sig(sf_dir, (self.source,))
+        return tuple(f"{p}{pol}_{sig}" for p in self.prefixes)
+
+    def _slice(
+        self, spark: SparkSession, sf_dir: str, lo: int | None, hi: int
+    ) -> DataFrame:
+        col = F.col(_ID_COL[self.source])
+        cond = col < hi if lo is None else (col >= lo) & (col < hi)
+        return load(spark, sf_dir, self.source).filter(cond)
+
+    def _count_rows(self, rows: DataFrame) -> DataFrame:
+        _, key, cnt = self.counts
+        return rows.groupBy(key).agg(F.count(F.lit(1)).alias(cnt))
+
+    def ensure(
+        self, spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
+    ) -> str | tuple[str, str]:
+        """Build (once per corpus + policy + boundary) version N's table(s)
+        for ``ids < boundary``; returns the table name, or the (main,
+        counts) pair for a family with a count companion."""
+        pol = hashlib.md5(f"{self.policy}:v{boundary}".encode()).hexdigest()[:8]
+        names = self._names(sf_dir, pol)
+        tbl = ensure_table(
+            spark,
+            names[0],
+            lambda: self.rows(self._slice(spark, sf_dir, None, boundary)),
+            bucket_by=self.bucket_by,
+        )
+        if self.counts is None:
+            return tbl
+        return tbl, ensure_table(
+            spark, names[1], lambda: self._count_rows(spark.table(tbl))
+        )
+
+    def roll_forward(
+        self,
+        spark: SparkSession,
+        sf_dir: str,
+        boundary_n: int,
+        boundary_n1: int,
+        src: str | tuple[str, str] | None = None,
+    ) -> str | tuple[str, str]:
+        """Fold the accepted delta ``[boundary_n, boundary_n1)`` into
+        version N → version N+1, computing and writing only the delta's
+        rows (:func:`link_forward_table`). ``src`` chains the fold onto the
+        previous day's rolled artifact (same shape as the return) instead
+        of the from-scratch version-N build. fold == build(N+1) is fenced
+        per family (SERVED content for merge-on-read tables), inode
+        identity of the linked remainder by tests/test_versioned_fold.py."""
+        base = src if src is not None else self.ensure(spark, sf_dir, boundary_n)
+        bases = base if isinstance(base, tuple) else (base,)
+        names = self._names(
+            sf_dir, fold_policy(self.policy, boundary_n, boundary_n1, src)
+        )
+
+        def delta_rows() -> DataFrame:
+            # spread the raw slice before the row transform's per-row work
+            # (spread_delta); never on the version-N build, whose full
+            # scan parallelizes across the corpus's splits already
+            delta = spread_delta(
+                self._slice(spark, sf_dir, boundary_n, boundary_n1)
+            )
+            if self.fold_rows is None:
+                return self.rows(delta)
+            return self.fold_rows(delta, spark.table(bases[0]))
+
+        if self.counts is None:
+            return link_forward_table(
+                spark, names[0], bases[0], delta_rows, bucket_by=self.bucket_by
+            )
+        if all(spark.catalog.tableExists(n) for n in names):
+            return names
+        # ONE delta pass feeds both writes (round-12 x100 lesson: two
+        # delta closures paid the delta's dominant compute — shingling,
+        # media decode — twice); the checkpoint is delta-sized.
+        delta = delta_rows().localCheckpoint(eager=True)
+        tbl = link_forward_table(
+            spark, names[0], bases[0], lambda: delta, bucket_by=self.bucket_by
+        )
+        cnt_tbl = link_forward_table(
+            spark, names[1], bases[1], lambda: self._count_rows(delta)
+        )
+        return tbl, cnt_tbl
+
+    def compact(
+        self,
+        spark: SparkSession,
+        tables: tuple[str, ...],
+        max_data_files: int | None = None,
+    ) -> tuple[str, ...]:
+        """Pass each of this family's rolled tables (aligned with the
+        ``roll_forward`` return) through the fragmentation trigger with its
+        own merge-on-read key and bucket spec."""
+        specs = [(self.mor, self.bucket_by)]
+        if self.counts is not None:
+            specs.append((self.counts[1:], None))
+        return tuple(
+            compact_if_fragmented_table(
+                spark, t, mor=mor, bucket_by=bucket_by, max_data_files=max_data_files
+            )
+            for t, (mor, bucket_by) in zip(tables, specs, strict=True)
+        )

@@ -48,15 +48,12 @@ Reference parity: [TGT] — engine extension (SURVEY §2.B dedup family).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
     probe_counts,
     spread_delta,
 )
@@ -70,12 +67,6 @@ from broadway_kinesis_spark.operators.incremental_batch import (
 )
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load, spread_small_scan
-
-#: version-N / delta boundary for the registered fixture query (the
-#: dedup_incremental convention).
-BOUNDARY = 400
-
-_PROBES_POLICY = f"r11:bk{K_BOTTOM}:w3:b{IDX_BUCKETS}"
 
 #: the inline channel's oracle OBJECT — importing containment_bottomk
 #: above ran its @query decorator, so this lookup can never miss nor drift.
@@ -94,57 +85,20 @@ def _bottomk_rows(docs: DataFrame) -> DataFrame:
     return _shingled(docs).select("doc_id", F.explode(probes).alias("shingle"))
 
 
-def ensure_bottomk_probes(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's bottom-K probe sketches, bucketed by shingle so
-    the old-as-contained direction joins the delta's index rows without
-    shuffling the stored side."""
-    pol = hashlib.md5(f"{_PROBES_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_bkprobes_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < boundary
-        )
-        return _bottomk_rows(docs)
-
-    return ensure_table(spark, name, build, bucket_by=(IDX_BUCKETS, "shingle"))
-
-
-def roll_forward_bottomk_probes(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta's probe sketches into version N's table →
-    N+1 (a doc's sketch never changes, so the fold is a pure append —
-    only the delta is shingled, and round 12 makes the WRITE delta-only
-    too: version N's data files hard-link into the new location, VERDICT
-    r11 #1). fold == scratch is pinned by
-    tests/test_incremental_channels.py, inode identity of the linked
-    remainder by tests/test_versioned_fold.py; the index/DF artifacts
-    roll forward through incremental_batch.roll_forward_ngram_index,
-    shared with the ngram channel."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_bottomk_probes(spark, sf_dir, boundary_n)
-    pol = fold_policy(_PROBES_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_bkprobes_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-        )
-        return _bottomk_rows(spread_delta(docs))
-
-    return link_forward_table(
-        spark, name, old_tbl, delta_build, bucket_by=(IDX_BUCKETS, "shingle")
-    )
+#: bottom-K probe sketches, bucketed by shingle so the old-as-contained
+#: direction joins the delta's index rows without shuffling the stored
+#: side; a doc's sketch never changes, so a fold is a pure append. The
+#: index/DF artifacts roll forward through incremental_batch.NGRAM_INDEX,
+#: shared with the ngram channel.
+BOTTOMK_PROBES = VersionedArtifact(
+    name="bottomk_probes",
+    prefix="_bks_bkprobes_",
+    policy=f"r11:bk{K_BOTTOM}:w3:b{IDX_BUCKETS}",
+    rows=_bottomk_rows,
+    bucket_by=(IDX_BUCKETS, "shingle"),
+)
+ensure_bottomk_probes = BOTTOMK_PROBES.ensure
+roll_forward_bottomk_probes = BOTTOMK_PROBES.roll_forward
 
 
 @query(

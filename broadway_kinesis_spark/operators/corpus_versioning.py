@@ -23,16 +23,21 @@ that a daily job actually calls:
   still-serving version-N inputs) as exact pins — dropping every older
   table-backed version in one pass.
 
-Families are REGISTERED declaratively (name → fold callable + the
-warehouse name-prefixes its tables use), so adding a channel is one
-entry, and the orchestrator can never silently skip a family: the e2e
-fence (tests/test_round11_s3_channels.py) asserts the registry covers
-every ``roll_forward_*`` the package exports. The IVF family is the one
-non-table artifact (a directory index under a deterministic per-corpus
-location with its own staging-rename atomicity and idempotence); it
-folds with everything else but is vacuumed by its own NAME-derived
-retention (`ann_incremental.vacuum_ivf_versions` — digest-named dirs
-cannot be safely prefix-listed), not the warehouse protocol.
+Families are REGISTERED from their specs: each table family is one
+``versioned_fold.VersionedArtifact``, which already states its
+name-prefixes, id space and compaction spec, so :func:`_families` only
+lists the specs — plus the two folds with their own protocol: the split
+labels (a fold REWRITES touched components instead of appending) and the
+IVF directory index. Adding a channel is one entry, and the orchestrator
+can never silently skip a family: the e2e fence
+(tests/test_round11_s3_channels.py) asserts every spec and every
+hand-written ``roll_forward_*`` under ``operators/`` is registered. The
+IVF family is the one non-table artifact (a directory index under a
+deterministic per-corpus location with its own staging-rename atomicity
+and idempotence); it folds with everything else but is vacuumed by its
+own NAME-derived retention (`ann_incremental.vacuum_ivf_versions` —
+digest-named dirs cannot be safely prefix-listed), not the warehouse
+protocol.
 
 Correctness burden stays with the per-family fences (equality proofs
 live next to each fold); the orchestrator's own fences prove COVERAGE
@@ -45,53 +50,36 @@ Reference parity: [TGT] — engine extension (SURVEY §2.B infra family).
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
 from broadway_kinesis_spark.functions.table_build import vacuum_warehouse
-from broadway_kinesis_spark.functions.versioned_fold import (
-    compact_if_fragmented_table,
-)
+from broadway_kinesis_spark.functions.versioned_fold import VersionedArtifact
 
 
 @dataclass(frozen=True)
-class Compaction:
-    """How one returned table artifact compacts (round 13, VERDICT r12
-    weak #1): ``mor=(key, count_col)`` for the merge-on-read count
-    families (compaction re-collapses the per-fold segments to one row
-    per key via ``SUM GROUP BY`` — the served view, already fence-proven
-    equal to from-scratch); ``bucket_by`` is the family's own bucket spec
-    so probes stay zero-exchange across a compaction."""
+class _HandWrittenFold:
+    """A family outside the ``VersionedArtifact`` spec, with the spec's
+    registry interface. The split labels REWRITE touched components on
+    every fold (so compaction is inherent); the IVF family is a directory
+    index (module docstring), bounded by the drift-triggered retrain."""
 
-    mor: tuple[str, str] | None = None
-    bucket_by: tuple[int, str] | None = None
-
-
-@dataclass(frozen=True)
-class Family:
     name: str
-    #: fold(spark, sf_dir, boundary_n, boundary_n1, src=...) -> table
-    #: name(s) / dir; ``src`` (same shape as the return) chains day k+1's
-    #: fold onto day k's rolled artifacts instead of a from-scratch
-    #: version-N build
-    fold: Callable
-    #: warehouse name-prefixes this family's tables use (empty for
-    #: non-table artifacts like the IVF directory index)
+    roll_forward: Callable
     prefixes: tuple[str, ...]
-    #: True for families whose boundaries are vec_ids (the embeddings
-    #: table), not doc_ids — a deployment's vector and document id spaces
-    #: advance independently
     vec_keyed: bool = False
-    #: one entry per returned artifact, aligned with the fold's return
-    #: order: its Compaction spec, or None when the artifact is not a
-    #: fold-fragmented table (the split family REWRITES each fold, so
-    #: compaction is inherent; the IVF directory index is bounded by the
-    #: drift-triggered retrain instead)
-    compaction: tuple[Compaction | None, ...] = field(default=(None,))
+
+    def compact(
+        self,
+        spark: SparkSession,
+        tables: tuple[str, ...],
+        max_data_files: int | None = None,
+    ) -> tuple[str, ...]:
+        return tables
 
 
-def _families() -> list[Family]:
+def _families() -> list[VersionedArtifact | _HandWrittenFold]:
     # imports are local so loading this module never drags every channel
     # module (and its inline-twin registration) into an unrelated session
     from broadway_kinesis_spark.operators import (
@@ -111,121 +99,25 @@ def _families() -> list[Family]:
     )
 
     return [
-        Family(
-            "digests",
-            incremental_batch.roll_forward_digests,
-            ("_bks_digests_",),
-            compaction=(Compaction(),),
-        ),
-        Family(
-            "ngram_index",
-            incremental_batch.roll_forward_ngram_index,
-            ("_bks_ngidx_", "_bks_ngdf_"),
-            compaction=(
-                Compaction(bucket_by=(incremental_batch.IDX_BUCKETS, "shingle")),
-                Compaction(mor=("shingle", "df_old")),
-            ),
-        ),
-        Family(
-            "minhash_bands",
-            minhash_incremental.roll_forward_minhash_bands,
-            ("_bks_mhbands_",),
-            compaction=(
-                Compaction(bucket_by=(minhash_incremental.BAND_BUCKETS, "bkc")),
-            ),
-        ),
-        Family(
-            "simhash_counts",
-            simhash_incremental.roll_forward_simhash_counts,
-            ("_bks_shcounts_",),
-            compaction=(Compaction(mor=("simhash", "n_old")),),
-        ),
-        Family(
-            "bottomk_probes",
-            containment_incremental.roll_forward_bottomk_probes,
-            ("_bks_bkprobes_",),
-            compaction=(
-                Compaction(
-                    bucket_by=(containment_incremental.IDX_BUCKETS, "shingle")
-                ),
-            ),
-        ),
-        Family(
-            "embedding_norms",
-            embedding_incremental.roll_forward_embedding_norms,
-            ("_bks_embnorms_",),
-            vec_keyed=True,
-            compaction=(Compaction(),),
-        ),
-        Family(
-            "phash_bands",
-            fingerprint_incremental.roll_forward_phash_bands,
-            ("_bks_phbands_",),
-            compaction=(
-                Compaction(
-                    bucket_by=(fingerprint_incremental.BAND_BUCKETS, "bkeyc")
-                ),
-            ),
-        ),
-        Family(
-            "audio_bands",
-            audiohash_incremental.roll_forward_audio_bands,
-            ("_bks_aubands_",),
-            compaction=(
-                Compaction(
-                    bucket_by=(audiohash_incremental.BAND_BUCKETS, "bkeyc")
-                ),
-            ),
-        ),
-        Family(
-            "video_index",
-            videohash_incremental.roll_forward_video_index,
-            ("_bks_vidx_", "_bks_vdf_"),
-            compaction=(
-                Compaction(
-                    bucket_by=(videohash_incremental.IDX_BUCKETS, "shingle")
-                ),
-                Compaction(mor=("shingle", "df_old")),
-            ),
-        ),
-        Family(
-            "fuzzy_prefixes",
-            fuzzy_incremental.roll_forward_fuzzy_prefixes,
-            ("_bks_fzpfx_",),
-            compaction=(
-                Compaction(bucket_by=(fuzzy_incremental.PFX_BUCKETS, "blk")),
-            ),
-        ),
-        Family(
-            "span_counts",
-            substring_incremental.roll_forward_span_counts,
-            ("_bks_sscounts_",),
-            compaction=(
-                Compaction(
-                    mor=("span", "n_old"),
-                    bucket_by=(substring_incremental.SPAN_BUCKETS, "span"),
-                ),
-            ),
-        ),
-        Family(
-            "semantic_assignments",
-            semantic_incremental.roll_forward_semantic_assignments,
-            ("_bks_semasg_",),
-            vec_keyed=True,
-            compaction=(Compaction(),),
-        ),
-        Family(
+        incremental_batch.DIGESTS,
+        incremental_batch.NGRAM_INDEX,
+        minhash_incremental.MINHASH_BANDS,
+        simhash_incremental.SIMHASH_COUNTS,
+        containment_incremental.BOTTOMK_PROBES,
+        embedding_incremental.EMBEDDING_NORMS,
+        fingerprint_incremental.PHASH_BANDS,
+        audiohash_incremental.AUDIO_BANDS,
+        videohash_incremental.VIDEO_INDEX,
+        fuzzy_incremental.FUZZY_PREFIXES,
+        substring_incremental.SPAN_COUNTS,
+        semantic_incremental.SEMANTIC_ASSIGNMENTS,
+        _HandWrittenFold(
             "split_labels",
             split_incremental.roll_forward_split_labels,
             ("_bks_split_labels_",),
-            compaction=(None,),
         ),
-        Family(
-            "ivf_index",
-            ann_incremental.roll_forward_ivf_index,
-            (),
-            vec_keyed=True,
-            compaction=(None,),
+        _HandWrittenFold(
+            "ivf_index", ann_incremental.roll_forward_ivf_index, (), vec_keyed=True
         ),
     ]
 
@@ -298,21 +190,10 @@ def roll_forward_corpus(
         if prior is not None and fam.name in prior:
             arts = prior[fam.name]
             src = arts if len(arts) > 1 else arts[0]
-        rolled = fam.fold(spark, sf_dir, b_n, b_n1, src=src)
+        rolled = fam.roll_forward(spark, sf_dir, b_n, b_n1, src=src)
         arts_out = rolled if isinstance(rolled, tuple) else (rolled,)
         if compact:
-            arts_out = tuple(
-                a
-                if spec is None
-                else compact_if_fragmented_table(
-                    spark,
-                    a,
-                    mor=spec.mor,
-                    bucket_by=spec.bucket_by,
-                    max_data_files=max_data_files,
-                )
-                for a, spec in zip(arts_out, fam.compaction, strict=True)
-            )
+            arts_out = fam.compact(spark, arts_out, max_data_files)
         out[fam.name] = arts_out
     if recall_floor is not None and "ivf_index" in out:
         from broadway_kinesis_spark.operators.ann_incremental import (

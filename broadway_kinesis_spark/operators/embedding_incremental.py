@@ -34,8 +34,8 @@ bitwise-equal to DuckDB's.
 
 Roll-forward (VERDICT r10 #3 applied to this channel):
 :func:`roll_forward_embedding_norms` folds the accepted delta's
-normalized rows into version N's table to produce version N+1's — the
-stored side passes through as a scan, only the delta is normalized, and
+normalized rows into version N's table to produce version N+1's — only
+the delta is normalized (the ``EMBEDDING_NORMS`` spec), and
 fold(N, delta) == build(N+1) is pinned by tests/test_incremental_channels.py
 (table equality), with probe-on-rolled == probe-on-scratch proving the
 fold is consumable by the next day's delta.
@@ -49,26 +49,17 @@ Reference parity: [TGT] — no relational/dedup surface in the reference
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
 )
 from broadway_kinesis_spark.operators.dedup import COS_T
 from broadway_kinesis_spark.operators import dedup as _dedup  # noqa: F401 (registers the inline twin)
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
-
-#: version-N / delta boundary for the registered fixture queries (the
-#: dedup_incremental convention: ids below are "yesterday's corpus").
-BOUNDARY = 400
-
-_NORMS_POLICY = "r11:cosnorm"
 
 #: the inline channel's oracle OBJECT — importing operators.dedup above ran
 #: its @query decorator, so this lookup can never miss nor drift.
@@ -86,56 +77,17 @@ def _norms(e: DataFrame) -> DataFrame:
     return e.select("vec_id", "label", v.alias("v"), F.sqrt(dot).alias("nrm"))
 
 
-def ensure_embedding_norms(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's normalized-vector table (vec_id, label, v,
-    nrm) for ``vec_id < boundary`` — the artifact an embedding pipeline
-    carries between corpus versions (normalization is paid once)."""
-    pol = hashlib.md5(f"{_NORMS_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("embeddings",))
-    name = f"_bks_embnorms_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        e = load(spark, sf_dir, "embeddings")
-        return _norms(e.filter(F.col("vec_id") < boundary))
-
-    return ensure_table(spark, name, build)
-
-
-def roll_forward_embedding_norms(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta ``[boundary_n, boundary_n1)`` into version
-    N's persisted norms table to produce version N+1's: only the delta is
-    normalized AND only the delta's rows are written (round 12, VERDICT
-    r11 #1) — version N's data files hard-link into the new location, so
-    the fold's write cost tracks the delta, never the artifact. The table
-    name keys the roll-forward policy + BOTH boundaries so a fold can
-    never shadow a from-scratch build; fold(N, delta) == build(N+1) is
-    pinned by tests/test_incremental_channels.py, inode identity of the
-    linked remainder by tests/test_versioned_fold.py."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_embedding_norms(spark, sf_dir, boundary_n)
-    pol = fold_policy(_NORMS_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("embeddings",))
-    name = f"_bks_embnorms_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        e = load(spark, sf_dir, "embeddings")
-        return _norms(
-            e.filter(
-                (F.col("vec_id") >= boundary_n)
-                & (F.col("vec_id") < boundary_n1)
-            )
-        )
-
-    return link_forward_table(spark, name, old_tbl, delta_build)
+#: the normalized-vector table (vec_id, label, v, nrm) an embedding
+#: pipeline carries between corpus versions (normalization is paid once)
+EMBEDDING_NORMS = VersionedArtifact(
+    name="embedding_norms",
+    prefix="_bks_embnorms_",
+    policy="r11:cosnorm",
+    rows=_norms,
+    source="embeddings",
+)
+ensure_embedding_norms = EMBEDDING_NORMS.ensure
+roll_forward_embedding_norms = EMBEDDING_NORMS.roll_forward
 
 
 @query(

@@ -46,16 +46,14 @@ family; the reference has no media surface).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
     spread_delta,
 )
 from broadway_kinesis_spark.operators import imagehash as _imagehash  # noqa: F401 (registers the inline twin)
@@ -71,15 +69,9 @@ from broadway_kinesis_spark.operators.multimodal import as_ppm_media, decode_ima
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
-#: version-N / delta boundary for the registered fixture query (the
-#: dedup_incremental convention).
-BOUNDARY = 400
-
 #: bucket count for the persisted band table — the protocol knob, sized
 #: like any bucketed table at deployment scale (incremental_batch.IDX_BUCKETS).
 BAND_BUCKETS = 8
-
-_BANDS_POLICY = f"r11:phash185:h{HAM_T}:b{BAND_BUCKETS}"
 
 _W = w_cols()
 _N_WORDS = len(_W)
@@ -127,57 +119,17 @@ def _band_rows(fps: DataFrame) -> DataFrame:
     )
 
 
-def ensure_phash_bands(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's band index — decode + fingerprint + band
-    explosion for ``media_id < boundary``, bucketed by the packed band
-    key so delta probes never shuffle the stored side."""
-    pol = hashlib.md5(f"{_BANDS_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_phbands_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < boundary
-        )
-        return _band_rows(_fingerprints(docs))
-
-    return ensure_table(spark, name, build, bucket_by=(BAND_BUCKETS, "bkeyc"))
-
-
-def roll_forward_phash_bands(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta ``[boundary_n, boundary_n1)`` into version
-    N's persisted band index to produce version N+1's — only the delta is
-    decoded AND only the delta's rows are written (round 12, VERDICT r11
-    #1): version N's data files hard-link into the new location in the
-    same bucketed layout, so the fold's write cost tracks the delta,
-    never the artifact. Name keys the roll-forward policy + BOTH
-    boundaries; fold(N, delta) == build(N+1) is pinned by
-    tests/test_incremental_channels.py, inode identity of the linked
-    remainder by tests/test_versioned_fold.py."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_phash_bands(spark, sf_dir, boundary_n)
-    pol = fold_policy(_BANDS_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_phbands_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-        )
-        return _band_rows(_fingerprints(spread_delta(docs)))
-
-    return link_forward_table(
-        spark, name, old_tbl, delta_build, bucket_by=(BAND_BUCKETS, "bkeyc")
-    )
+#: decode + fingerprint + band explosion, bucketed by the packed band key
+#: so delta probes never shuffle the stored side
+PHASH_BANDS = VersionedArtifact(
+    name="phash_bands",
+    prefix="_bks_phbands_",
+    policy=f"r11:phash185:h{HAM_T}:b{BAND_BUCKETS}",
+    rows=lambda docs: _band_rows(_fingerprints(docs)),
+    bucket_by=(BAND_BUCKETS, "bkeyc"),
+)
+ensure_phash_bands = PHASH_BANDS.ensure
+roll_forward_phash_bands = PHASH_BANDS.roll_forward
 
 
 @query(

@@ -39,29 +39,20 @@ the reference has no relational surface).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
 )
 from broadway_kinesis_spark.operators import dedup as _dedup  # noqa: F401 (registers the inline twin)
 from broadway_kinesis_spark.operators.dedup import EDIT_T, PREFIX_N
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
-#: version-N / delta boundary for the registered fixture query (the
-#: dedup_incremental convention).
-BOUNDARY = 400
-
 #: bucket count for the persisted prefix table (the protocol knob).
 PFX_BUCKETS = 8
-
-_PFX_POLICY = f"r12:fz{PREFIX_N}e{EDIT_T}t0:b{PFX_BUCKETS}"
 
 #: the inline channel's oracle OBJECT — importing operators.dedup above ran
 #: its @query decorator, so this lookup can never miss nor drift.
@@ -84,56 +75,17 @@ def _prefixes(docs: DataFrame) -> DataFrame:
     )
 
 
-def ensure_fuzzy_prefixes(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's blocked prefix table for ``doc_id < boundary``,
-    bucketed by the packed block key so delta probes never shuffle the
-    stored side."""
-    pol = hashlib.md5(f"{_PFX_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_fzpfx_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < boundary
-        )
-        return _prefixes(docs)
-
-    return ensure_table(spark, name, build, bucket_by=(PFX_BUCKETS, "blk"))
-
-
-def roll_forward_fuzzy_prefixes(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta ``[boundary_n, boundary_n1)`` into version
-    N's persisted prefix table → N+1's (pure append; only the delta's
-    text is read AND only the delta's rows are written — round 12,
-    VERDICT r11 #1: version N's data files hard-link into the new
-    location in the same bucketed layout). Name keys the roll-forward
-    policy + BOTH boundaries; fold(N, delta) == build(N+1) is pinned by
-    tests/test_round11_s3_channels.py, inode identity of the linked
-    remainder by tests/test_versioned_fold.py."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_fuzzy_prefixes(spark, sf_dir, boundary_n)
-    pol = fold_policy(_PFX_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_fzpfx_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-        )
-        return _prefixes(docs)
-
-    return link_forward_table(
-        spark, name, old_tbl, delta_build, bucket_by=(PFX_BUCKETS, "blk")
-    )
+#: the blocked prefix table, bucketed by the packed block key so delta
+#: probes never shuffle the stored side; a fold is a pure append
+FUZZY_PREFIXES = VersionedArtifact(
+    name="fuzzy_prefixes",
+    prefix="_bks_fzpfx_",
+    policy=f"r12:fz{PREFIX_N}e{EDIT_T}t0:b{PFX_BUCKETS}",
+    rows=_prefixes,
+    bucket_by=(PFX_BUCKETS, "blk"),
+)
+ensure_fuzzy_prefixes = FUZZY_PREFIXES.ensure
+roll_forward_fuzzy_prefixes = FUZZY_PREFIXES.roll_forward
 
 
 @query(

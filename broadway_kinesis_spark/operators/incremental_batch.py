@@ -49,15 +49,12 @@ Reference parity: [TGT] — engine extension (SURVEY §2.B dedup family).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
     probe_counts,
     spread_delta,
 )
@@ -71,197 +68,55 @@ from broadway_kinesis_spark.operators.dedup import (
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load, spread_small_scan
 
-#: the version-N / delta boundary the registered queries pin (the fixture
-#: convention dedup_incremental established: ids < 400 are "yesterday").
-BOUNDARY = 400
-
 #: bucket count for the persisted inverted index: at fixture scale a
 #: handful; a 100 TB deployment sizes this like any bucketed table
 #: (target bucket ≈ one task's memory) — the PROTOCOL is what's pinned.
 IDX_BUCKETS = 8
 
-_DIGEST_POLICY = "r10:md5"
-_IDX_POLICY = f"r10:w3:b{IDX_BUCKETS}"
+
+def _digest_rows(docs: DataFrame) -> DataFrame:
+    """Distinct content digests (one 16-byte md5 per distinct text) — the
+    exact-dedup index a production pipeline carries between corpus
+    versions."""
+    return docs.select(F.md5("text").alias("text_md5")).distinct()
 
 
-def ensure_corpus_digests(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's distinct content digests (one 16-byte md5 per
-    distinct text) — the exact-dedup index a production pipeline carries
-    between corpus versions."""
-    pol = hashlib.md5(f"{_DIGEST_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_digests_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        d = load(spark, sf_dir, "documents")
-        return (
-            d.filter(F.col("doc_id") < boundary)
-            .select(F.md5("text").alias("text_md5"))
-            .distinct()
-        )
-
-    return ensure_table(spark, name, build)
+def _new_digest_rows(delta: DataFrame, stored: DataFrame) -> DataFrame:
+    # only the genuinely NEW digests are written: the delta's distinct
+    # digests anti-join the stored table (hash join on 16-byte keys)
+    return _digest_rows(delta).join(stored, "text_md5", "left_anti")
 
 
-def ensure_ngram_index(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> tuple[str, str]:
-    """Persist version N's inverted shingle index — two tables:
-
-    - ``idx``: (shingle, doc_id), UNCAPPED (the cap depends on future
-      deltas' document frequencies, so capping at build time would bake
-      in a stale policy), bucketed+sorted by shingle so delta probes
-      join without shuffling the big side;
-    - ``df``: (shingle, df_old) per-shingle document frequency — the
-      running statistic the combined-corpus cap needs without
-      re-aggregating the index.
-    """
-    pol = hashlib.md5(f"{_IDX_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    idx_name = f"_bks_ngidx_{pol}_{sig}"
-    df_name = f"_bks_ngdf_{pol}_{sig}"
-
-    def build_idx() -> DataFrame:
-        d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < boundary)
-        return _shingled(d).select(
-            "doc_id", F.explode("shingles").alias("shingle")
-        )
-
-    idx_tbl = ensure_table(
-        spark, idx_name, build_idx, bucket_by=(IDX_BUCKETS, "shingle")
-    )
-
-    def build_df() -> DataFrame:
-        return (
-            spark.table(idx_tbl)
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df_old"))
-        )
-
-    df_tbl = ensure_table(spark, df_name, build_df)
-    return idx_tbl, df_tbl
+def _index_rows(docs: DataFrame) -> DataFrame:
+    """(shingle, doc_id) rows of the inverted index, UNCAPPED: the cap
+    depends on future deltas' document frequencies, so capping at build
+    time would bake in a stale policy."""
+    return _shingled(docs).select("doc_id", F.explode("shingles").alias("shingle"))
 
 
-def roll_forward_digests(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the ACCEPTED delta ``[boundary_n, boundary_n1)`` into version
-    N's persisted digest table to produce version N+1's (VERDICT r10 #3)
-    — the step a daily production loop runs after serving the delta:
-    version N+1's artifacts come from version N's artifacts plus the
-    delta, never from a fresh boundary scan of the whole corpus.
-
-    Compute is delta-bounded: the delta's distinct digests anti-join the
-    stored table (hash join against 16-byte keys) and only the genuinely
-    NEW digests are WRITTEN (round 12, VERDICT r11 #1) — version N's data
-    files hard-link into the new location, so the fold's write cost
-    tracks the delta, never the digest population. Equality with the
-    from-scratch ``ensure_corpus_digests(boundary_n1)`` build is pinned
-    by tests/test_round11_ops.py (the fold(N, delta) == build(N+1)
-    fence), inode identity of the linked remainder by
-    tests/test_versioned_fold.py.
-    """
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = (
-        src
-        if src is not None
-        else ensure_corpus_digests(spark, sf_dir, boundary_n)
-    )
-    pol = fold_policy(_DIGEST_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_digests_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        d = load(spark, sf_dir, "documents")
-        delta = (
-            d.filter(
-                (F.col("doc_id") >= boundary_n)
-                & (F.col("doc_id") < boundary_n1)
-            )
-            .select(F.md5("text").alias("text_md5"))
-            .distinct()
-        )
-        return delta.join(spark.table(old_tbl), "text_md5", "left_anti")
-
-    return link_forward_table(spark, name, old_tbl, delta_build)
-
-
-def roll_forward_ngram_index(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: tuple[str, str] | None = None,
-) -> tuple[str, str]:
-    """Fold the accepted delta into version N's persisted inverted index
-    + DF statistic to produce version N+1's (VERDICT r10 #3), writing
-    ONLY the delta's contribution (round 12, VERDICT r11 #1):
-
-    - ``idx``: only the delta is shingled and only its (shingle, doc_id)
-      rows are written; version N's data files hard-link into the new
-      location in the same bucketed-by-shingle layout (multiple files per
-      bucket id read as one bucket — the Spark bucketed-append shape);
-    - ``df``: the delta's per-shingle counts append as a SEGMENT — the
-      statistic table becomes merge-on-read (>= 1 row per shingle;
-      readers serve ``SUM(df_old) GROUP BY shingle`` after their
-      delta-bounded join — ``versioned_fold.probe_counts``), the Hudi-MoR
-      discipline that keeps a daily fold from rewriting a corpus-sized
-      statistic.
-
-    Both carry the roll-forward policy + both boundaries in the table
-    name, so a fold can never shadow (or be shadowed by) a from-scratch
-    build. Output schemas match ``ensure_ngram_index`` exactly, so
-    :func:`incremental_ngram_pairs` probes a rolled index via its
-    ``idx_tbl``/``df_tbl`` overrides — the next day's delta runs on
-    today's fold. fold(N, delta) == build(N+1) is pinned by
-    tests/test_round11_ops.py (SERVED content for the segmented ``df``),
-    inode identity of the linked remainder by
-    tests/test_versioned_fold.py.
-    """
-    # chained daily loop: ``src`` is the previous day's rolled (idx, df)
-    # pair (fold-on-fold); default is the from-scratch version-N build.
-    idx_n, df_n = (
-        src if src is not None else ensure_ngram_index(spark, sf_dir, boundary_n)
-    )
-    pol = fold_policy(_IDX_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    idx_name = f"_bks_ngidx_{pol}_{sig}"
-    df_name = f"_bks_ngdf_{pol}_{sig}"
-    if spark.catalog.tableExists(idx_name) and spark.catalog.tableExists(
-        df_name
-    ):
-        return idx_name, df_name
-
-    # ONE shingling pass feeds both writes (the video channel's round-12
-    # x100 lesson: two delta closures paid the delta's dominant compute
-    # twice); delta-sized checkpoint, the module's retention argument.
-    d = load(spark, sf_dir, "documents").filter(
-        (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-    )
-    delta = (
-        _shingled(spread_delta(d))
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-        .localCheckpoint(eager=True)
-    )
-
-    idx_tbl = link_forward_table(
-        spark, idx_name, idx_n, lambda: delta, bucket_by=(IDX_BUCKETS, "shingle")
-    )
-
-    def delta_df_segment() -> DataFrame:
-        return delta.groupBy("shingle").agg(
-            F.count(F.lit(1)).alias("df_old")
-        )
-
-    df_tbl = link_forward_table(spark, df_name, df_n, delta_df_segment)
-    return idx_tbl, df_tbl
+DIGESTS = VersionedArtifact(
+    name="digests",
+    prefix="_bks_digests_",
+    policy="r10:md5",
+    rows=_digest_rows,
+    fold_rows=_new_digest_rows,
+)
+#: the inverted index (bucketed+sorted by shingle so delta probes join
+#: without shuffling the big side) + its per-shingle document-frequency
+#: companion ``df_old`` — the running statistic the combined-corpus cap
+#: needs without re-aggregating the index
+NGRAM_INDEX = VersionedArtifact(
+    name="ngram_index",
+    prefix="_bks_ngidx_",
+    policy=f"r10:w3:b{IDX_BUCKETS}",
+    rows=_index_rows,
+    bucket_by=(IDX_BUCKETS, "shingle"),
+    counts=("_bks_ngdf_", "shingle", "df_old"),
+)
+ensure_corpus_digests = DIGESTS.ensure
+roll_forward_digests = DIGESTS.roll_forward
+ensure_ngram_index = NGRAM_INDEX.ensure
+roll_forward_ngram_index = NGRAM_INDEX.roll_forward
 
 
 @query(

@@ -48,15 +48,12 @@ Reference parity: [TGT] — engine extension (SURVEY §2.B dedup family).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
     spread_delta,
 )
 from broadway_kinesis_spark.operators.dedup import (
@@ -69,16 +66,11 @@ from broadway_kinesis_spark.operators.dedup import (
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load, spread_small_scan
 
-#: version-N / delta boundary for the registered fixture query (the
-#: dedup_incremental convention).
-BOUNDARY = 400
-
 #: bucket count for the persisted band table (the protocol knob — sized
 #: like any bucketed table at deployment scale).
 BAND_BUCKETS = 8
 
 _N_BANDS = N_SIG // BAND_R
-_BANDS_POLICY = f"r11:mh:s{N_SIG}r{BAND_R}:b{BAND_BUCKETS}"
 
 #: the inline channel's oracle OBJECT — importing operators.dedup above ran
 #: its @query decorator, so this lookup can never miss nor drift.
@@ -109,57 +101,15 @@ def _band_rows(docs: DataFrame) -> DataFrame:
     ).selectExpr("doc_id", "concat(cast(bi AS string), ':', bk) AS bkc")
 
 
-def ensure_minhash_bands(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's band table — signatures + banding for
-    ``doc_id < boundary``, bucketed by the packed band key so delta
-    probes never shuffle the stored side."""
-    pol = hashlib.md5(f"{_BANDS_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_mhbands_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < boundary
-        )
-        return _band_rows(docs)
-
-    return ensure_table(spark, name, build, bucket_by=(BAND_BUCKETS, "bkc"))
-
-
-def roll_forward_minhash_bands(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta ``[boundary_n, boundary_n1)`` into version
-    N's persisted band table to produce version N+1's — only the delta is
-    shingled/hashed AND only the delta's rows are written (round 12,
-    VERDICT r11 #1): version N's data files hard-link into the new
-    location in the same bucketed layout, so the fold's write cost tracks
-    the delta, never the artifact. Name keys the roll-forward policy +
-    BOTH boundaries; fold(N, delta) == build(N+1) is pinned by
-    tests/test_incremental_channels.py, and the linked remainder's inode
-    identity by tests/test_versioned_fold.py."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_minhash_bands(spark, sf_dir, boundary_n)
-    pol = fold_policy(_BANDS_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_mhbands_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-        )
-        return _band_rows(spread_delta(docs))
-
-    return link_forward_table(
-        spark, name, old_tbl, delta_build, bucket_by=(BAND_BUCKETS, "bkc")
-    )
+MINHASH_BANDS = VersionedArtifact(
+    name="minhash_bands",
+    prefix="_bks_mhbands_",
+    policy=f"r11:mh:s{N_SIG}r{BAND_R}:b{BAND_BUCKETS}",
+    rows=_band_rows,
+    bucket_by=(BAND_BUCKETS, "bkc"),
+)
+ensure_minhash_bands = MINHASH_BANDS.ensure
+roll_forward_minhash_bands = MINHASH_BANDS.roll_forward
 
 
 @query(

@@ -39,26 +39,17 @@ SemDedup: Abbas et al. 2023, public literature).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
 )
 from broadway_kinesis_spark.operators import semantic as _semantic  # noqa: F401 (registers the inline twin)
 from broadway_kinesis_spark.operators.semantic import SEM_K, SEM_T, _dot
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
-
-#: version-N / delta boundary for the registered fixture query (the
-#: embedding-channel convention: vec_ids below are "yesterday's corpus").
-BOUNDARY = 400
-
-_ASG_POLICY = f"r11s3:semasg:k{SEM_K}"
 
 #: the inline channel's oracle OBJECT — importing operators.semantic above
 #: ran its @query decorator, so this lookup can never miss nor drift.
@@ -108,61 +99,33 @@ def stored_centroids(stored: DataFrame) -> DataFrame:
     )
 
 
-def ensure_semantic_assignments(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's assignment table (vec_id, v, nrm, cid) for
-    ``vec_id < boundary`` — seeds are version N's lowest {SEM_K} ids,
-    which equal the full corpus's seeds (module note)."""
-    pol = hashlib.md5(f"{_ASG_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("embeddings",))
-    name = f"_bks_semasg_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        e = load(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") < boundary
-        )
-        vecs = _norm_vecs(e)
-        c = (
-            vecs.orderBy("vec_id")
-            .limit(SEM_K)
-            .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-        )
-        return _assign_to(vecs, c)
-
-    return ensure_table(spark, name, build)
+def _seeded_assignments(e: DataFrame) -> DataFrame:
+    """Version N's assignment rows (vec_id, v, nrm, cid) — seeds are
+    version N's lowest {SEM_K} ids, which equal the full corpus's seeds
+    (module note)."""
+    vecs = _norm_vecs(e)
+    c = (
+        vecs.orderBy("vec_id")
+        .limit(SEM_K)
+        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    )
+    return _assign_to(vecs, c)
 
 
-def roll_forward_semantic_assignments(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta ``[boundary_n, boundary_n1)`` into version
-    N's assignment table → N+1's: the delta assigns under version N's
-    FROZEN centroids and ONLY the delta's rows are written (round 12,
-    VERDICT r11 #1) — version N's data files hard-link into the new
-    location, so the fold's write cost tracks the delta, never the
-    artifact. fold == scratch EXACTLY (the seed-set argument in the
-    module note); pinned by tests/test_round11_s3_channels.py, inode
-    identity of the linked remainder by tests/test_versioned_fold.py."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_semantic_assignments(spark, sf_dir, boundary_n)
-    pol = fold_policy(_ASG_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("embeddings",))
-    name = f"_bks_semasg_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        stored = spark.table(old_tbl)
-        e = load(spark, sf_dir, "embeddings").filter(
-            (F.col("vec_id") >= boundary_n) & (F.col("vec_id") < boundary_n1)
-        )
-        return _assign_to(_norm_vecs(e), stored_centroids(stored))
-
-    return link_forward_table(spark, name, old_tbl, delta_build)
+#: a fold assigns the delta under version N's FROZEN centroids, so fold ==
+#: scratch EXACTLY (the seed-set argument in the module note)
+SEMANTIC_ASSIGNMENTS = VersionedArtifact(
+    name="semantic_assignments",
+    prefix="_bks_semasg_",
+    policy=f"r11s3:semasg:k{SEM_K}",
+    rows=_seeded_assignments,
+    source="embeddings",
+    fold_rows=lambda e, stored: _assign_to(
+        _norm_vecs(e), stored_centroids(stored)
+    ),
+)
+ensure_semantic_assignments = SEMANTIC_ASSIGNMENTS.ensure
+roll_forward_semantic_assignments = SEMANTIC_ASSIGNMENTS.roll_forward
 
 
 @query(

@@ -32,15 +32,12 @@ Reference parity: [TGT] — engine extension (SURVEY §2.B dedup family).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
     probe_counts,
     spread_delta,
 )
@@ -48,12 +45,6 @@ from broadway_kinesis_spark.operators.dedup import SIM_BITS
 from broadway_kinesis_spark.operators import dedup as _dedup  # noqa: F401 (registers the inline twin)
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
-
-#: version-N / delta boundary for the registered fixture query (the
-#: dedup_incremental convention).
-BOUNDARY = 400
-
-_COUNTS_POLICY = f"r11:sh{SIM_BITS}"
 
 #: the inline channel's oracle OBJECT — importing operators.dedup above ran
 #: its @query decorator, so this lookup can never miss nor drift.
@@ -91,64 +82,21 @@ def _fingerprints(docs: DataFrame) -> DataFrame:
     return bitsums.select("doc_id", fp_col.alias("simhash"))
 
 
-def ensure_simhash_counts(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's per-fingerprint count table (simhash, n_old) —
-    one row per distinct fingerprint, the running statistic a delta
-    needs; version-N documents are never re-tokenized."""
-    pol = hashlib.md5(f"{_COUNTS_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_shcounts_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < boundary
-        )
-        return (
-            _fingerprints(docs)
-            .groupBy("simhash")
-            .agg(F.count(F.lit(1)).alias("n_old"))
-        )
-
-    return ensure_table(spark, name, build)
-
-
-def roll_forward_simhash_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta's per-fingerprint counts into version N's
-    table → N+1 (the ngram DF-statistic fold in fingerprint space; only
-    the delta tokenizes). Round 12 (VERDICT r11 #1): the delta's counts
-    append as a merge-on-read SEGMENT — version N's data files hard-link
-    into the new location and only the delta's per-fingerprint rows are
-    written; readers serve ``SUM(n_old) GROUP BY simhash`` after their
-    delta-bounded restriction (``versioned_fold.probe_counts``). fold ==
-    scratch on SERVED content pinned by
-    tests/test_incremental_channels.py, inode identity of the linked
-    remainder by tests/test_versioned_fold.py."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_simhash_counts(spark, sf_dir, boundary_n)
-    pol = fold_policy(_COUNTS_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_shcounts_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-        )
-        return (
-            _fingerprints(spread_delta(docs))
-            .groupBy("simhash")
-            .agg(F.count(F.lit(1)).alias("n_old"))
-        )
-
-    return link_forward_table(spark, name, old_tbl, delta_build)
+#: per-fingerprint counts (simhash, n_old) — one row per distinct
+#: fingerprint on a build; a fold appends the delta's counts as a
+#: merge-on-read segment (readers serve ``SUM(n_old) GROUP BY simhash``
+#: after their delta-bounded restriction, ``versioned_fold.probe_counts``)
+SIMHASH_COUNTS = VersionedArtifact(
+    name="simhash_counts",
+    prefix="_bks_shcounts_",
+    policy=f"r11:sh{SIM_BITS}",
+    rows=lambda docs: (
+        _fingerprints(docs).groupBy("simhash").agg(F.count(F.lit(1)).alias("n_old"))
+    ),
+    mor=("simhash", "n_old"),
+)
+ensure_simhash_counts = SIMHASH_COUNTS.ensure
+roll_forward_simhash_counts = SIMHASH_COUNTS.roll_forward
 
 
 @query(

@@ -40,15 +40,12 @@ Lee et al. 2022, public literature).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
     probe_counts,
     spread_delta,
 )
@@ -57,14 +54,8 @@ from broadway_kinesis_spark.operators.substring_spans import K_SPAN, MIN_DOCS
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
-#: version-N / delta boundary for the registered fixture query (the
-#: dedup_incremental convention).
-BOUNDARY = 400
-
 #: bucket count for the persisted span-count table (the protocol knob).
 SPAN_BUCKETS = 8
-
-_SPAN_POLICY = f"r11s3:ss{K_SPAN}m{MIN_DOCS}:b{SPAN_BUCKETS}"
 
 #: the inline channel's oracle OBJECT — importing operators.substring_spans
 #: above ran its @query decorator, so this lookup can never miss nor drift.
@@ -98,60 +89,20 @@ def _span_doc_counts(spans: DataFrame, out: str) -> DataFrame:
     return spans.groupBy("span").agg(F.count_distinct("doc_id").alias(out))
 
 
-def ensure_span_counts(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> str:
-    """Persist version N's per-span distinct-document counts for
-    ``doc_id < boundary`` — one row per distinct span, bucketed by span
-    so delta probes never shuffle the stored side."""
-    pol = hashlib.md5(f"{_SPAN_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_sscounts_{pol}_{sig}"
-
-    def build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < boundary
-        )
-        return _span_doc_counts(_span_positions(docs), "n_old")
-
-    return ensure_table(spark, name, build, bucket_by=(SPAN_BUCKETS, "span"))
-
-
-def roll_forward_span_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: str | None = None,
-) -> str:
-    """Fold the accepted delta ``[boundary_n, boundary_n1)`` into version
-    N's span-count table → N+1's (distinct-doc counts over disjoint id
-    ranges add losslessly; only the delta is windowed). Round 12 (VERDICT
-    r11 #1): the delta's counts append as a merge-on-read SEGMENT —
-    version N's data files hard-link into the new location in the same
-    bucketed layout and only the delta's per-span rows are written;
-    readers serve ``SUM(n_old) GROUP BY span`` after their delta-bounded
-    restriction (``versioned_fold.probe_counts``). Name keys the
-    roll-forward policy + BOTH boundaries; fold(N, delta) == build(N+1)
-    on SERVED content is pinned by tests/test_round11_s3_channels.py,
-    inode identity of the linked remainder by
-    tests/test_versioned_fold.py."""
-    # chained daily loop: ``src`` names the previous day's rolled table
-    # (fold-on-fold); default is the from-scratch version-N build.
-    old_tbl = src if src is not None else ensure_span_counts(spark, sf_dir, boundary_n)
-    pol = fold_policy(_SPAN_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    name = f"_bks_sscounts_{pol}_{sig}"
-
-    def delta_build() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-        )
-        return _span_doc_counts(_span_positions(spread_delta(docs)), "n_old")
-
-    return link_forward_table(
-        spark, name, old_tbl, delta_build, bucket_by=(SPAN_BUCKETS, "span")
-    )
+#: per-span distinct-document counts, bucketed by span so delta probes
+#: never shuffle the stored side. Distinct-doc counts over disjoint id
+#: ranges add losslessly, so a fold appends the delta's counts as a
+#: merge-on-read segment (``SUM(n_old) GROUP BY span`` on read).
+SPAN_COUNTS = VersionedArtifact(
+    name="span_counts",
+    prefix="_bks_sscounts_",
+    policy=f"r11s3:ss{K_SPAN}m{MIN_DOCS}:b{SPAN_BUCKETS}",
+    rows=lambda docs: _span_doc_counts(_span_positions(docs), "n_old"),
+    bucket_by=(SPAN_BUCKETS, "span"),
+    mor=("span", "n_old"),
+)
+ensure_span_counts = SPAN_COUNTS.ensure
+roll_forward_span_counts = SPAN_COUNTS.roll_forward
 
 
 @query(

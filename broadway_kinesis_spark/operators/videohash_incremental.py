@@ -42,16 +42,14 @@ family; the reference has no media surface).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from broadway_kinesis_spark.functions.table_build import corpus_sig, ensure_table
 from broadway_kinesis_spark.functions.versioned_fold import (
-    fold_policy,
-    link_forward_table,
+    BOUNDARY,
+    VersionedArtifact,
     probe_counts,
     spread_delta,
 )
@@ -62,14 +60,8 @@ from broadway_kinesis_spark.operators.videohash import J_DEN, J_NUM, clip_shingl
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
-#: version-N / delta boundary for the registered fixture query (the
-#: dedup_incremental convention).
-BOUNDARY = 400
-
 #: bucket count for the persisted inverted index (the ngram protocol knob).
 IDX_BUCKETS = 8
-
-_IDX_POLICY = f"r11s3:vts:j{J_NUM}-{J_DEN}:b{IDX_BUCKETS}"
 
 #: the inline channel's oracle OBJECT — importing operators.videohash above
 #: ran its @query decorator, so this lookup can never miss nor drift.
@@ -99,89 +91,20 @@ def _shingle_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def ensure_video_index(
-    spark: SparkSession, sf_dir: str, boundary: int = BOUNDARY
-) -> tuple[str, str]:
-    """Persist version N's temporal-shingle index (idx + df tables, the
-    ngram artifact pair) for ``media_id < boundary``."""
-    pol = hashlib.md5(f"{_IDX_POLICY}:v{boundary}".encode()).hexdigest()[:8]
-    sig = corpus_sig(sf_dir, ("documents",))
-    idx_name = f"_bks_vidx_{pol}_{sig}"
-    df_name = f"_bks_vdf_{pol}_{sig}"
-
-    def build_idx() -> DataFrame:
-        docs = load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < boundary
-        )
-        return _shingle_rows(docs)
-
-    idx_tbl = ensure_table(
-        spark, idx_name, build_idx, bucket_by=(IDX_BUCKETS, "shingle")
-    )
-
-    def build_df() -> DataFrame:
-        return (
-            spark.table(idx_tbl)
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df_old"))
-        )
-
-    df_tbl = ensure_table(spark, df_name, build_df)
-    return idx_tbl, df_tbl
-
-
-def roll_forward_video_index(
-    spark: SparkSession,
-    sf_dir: str,
-    boundary_n: int,
-    boundary_n1: int,
-    src: tuple[str, str] | None = None,
-) -> tuple[str, str]:
-    """Fold the accepted delta ``[boundary_n, boundary_n1)`` into version
-    N's persisted index → N+1's, writing ONLY the delta's contribution
-    (round 12, VERDICT r11 #1): only the delta decodes and only its
-    shingle rows are written — version N's data files hard-link into the
-    new location in the same bucketed layout; the DF statistic appends
-    the delta's per-shingle counts as a merge-on-read SEGMENT (readers
-    serve ``SUM(df_old) GROUP BY shingle`` after their delta-bounded
-    restriction — ``versioned_fold.probe_counts``). Names key the
-    roll-forward policy + BOTH boundaries; fences:
-    tests/test_round11_s3_channels.py (served content),
-    tests/test_versioned_fold.py (inode identity)."""
-    # chained daily loop: ``src`` is the previous day's rolled (idx, df)
-    # pair (fold-on-fold); default is the from-scratch version-N build.
-    idx_n, df_n = (
-        src if src is not None else ensure_video_index(spark, sf_dir, boundary_n)
-    )
-    pol = fold_policy(_IDX_POLICY, boundary_n, boundary_n1, src)
-    sig = corpus_sig(sf_dir, ("documents",))
-    idx_name = f"_bks_vidx_{pol}_{sig}"
-    df_name = f"_bks_vdf_{pol}_{sig}"
-    if spark.catalog.tableExists(idx_name) and spark.catalog.tableExists(
-        df_name
-    ):
-        return idx_name, df_name
-
-    # ONE decode pass feeds both writes (round-12 x100 lesson: two
-    # delta_rows() closures decoded the delta twice, costing more than
-    # the copy the link-forward removed); the checkpoint is delta-sized,
-    # the incremental_batch retention argument applies.
-    docs = load(spark, sf_dir, "documents").filter(
-        (F.col("doc_id") >= boundary_n) & (F.col("doc_id") < boundary_n1)
-    )
-    delta = _shingle_rows(spread_delta(docs)).localCheckpoint(eager=True)
-
-    idx_tbl = link_forward_table(
-        spark, idx_name, idx_n, lambda: delta, bucket_by=(IDX_BUCKETS, "shingle")
-    )
-
-    def delta_df_segment() -> DataFrame:
-        return delta.groupBy("shingle").agg(
-            F.count(F.lit(1)).alias("df_old")
-        )
-
-    df_tbl = link_forward_table(spark, df_name, df_n, delta_df_segment)
-    return idx_tbl, df_tbl
+#: the temporal-shingle index + its DF companion (the ngram artifact pair);
+#: a fold decodes the delta ONCE for both writes (round-12 x100 lesson:
+#: two delta closures decoded the delta twice, costing more than the
+#: copy the link-forward removed)
+VIDEO_INDEX = VersionedArtifact(
+    name="video_index",
+    prefix="_bks_vidx_",
+    policy=f"r11s3:vts:j{J_NUM}-{J_DEN}:b{IDX_BUCKETS}",
+    rows=_shingle_rows,
+    bucket_by=(IDX_BUCKETS, "shingle"),
+    counts=("_bks_vdf_", "shingle", "df_old"),
+)
+ensure_video_index = VIDEO_INDEX.ensure
+roll_forward_video_index = VIDEO_INDEX.roll_forward
 
 
 @query(

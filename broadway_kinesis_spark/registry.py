@@ -159,17 +159,12 @@ def _load_all_modules() -> None:
 # slots fill with the OLDEST-green rows so signal currency improves across
 # the registry. Any overflow must be declared in _DEFERRED explicitly.
 _PRIORITY: tuple[str, ...] = (
-    # Round-14 OPTIMIZATION window. Demand at rotation time is 3 — the
-    # three queries round 13 deferred (composite_curation_report and the
-    # two persisted split serving tiers), whose staleness survived the
-    # round-13 driver run because they sat outside the checked window.
-    # The window therefore holds them PLUS this round's planned-edit
-    # closure (dedup.py verify-join scale fix, the containment family's
-    # verify-split port, paragraphs.py re-measure — 37 further queries,
-    # so any of those edits keeps the window legal without a re-rotation)
-    # PLUS 10 oldest-green filler rows (round-8 confirmations — the
-    # stalest driver rows in the registry, per the mechanical
-    # oldest-green-first fill rule). _DEFERRED is empty again.
+    # VersionedArtifact window. Demand is 26: every query whose closure
+    # reaches functions/versioned_fold.py or functions/table_build.py (the
+    # incremental warehouse families, the bucketed/partitioned layouts and
+    # the persisted dedup/split tiers). The 24 remaining slots keep the
+    # round-14 window's other rows; the eight join_*/multimodal_* filler
+    # rows rotate out (all green at round 14, outside any planned edit).
     "composite_curation_report",
     "composite_dedup_recall",
     "composite_fuzzy_blocking_recall",
@@ -186,15 +181,19 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_exact_docs",
     "dedup_fuzzy_prefix",
     "dedup_incremental",
+    "dedup_incremental_audiohash",
     "dedup_incremental_containment",
     "dedup_incremental_embedding",
     "dedup_incremental_fuzzy",
     "dedup_incremental_fuzzy_tight",
+    "dedup_incremental_imagehash",
     "dedup_incremental_minhash",
     "dedup_incremental_minhash_90",
     "dedup_incremental_ngram",
     "dedup_incremental_persisted",
+    "dedup_incremental_semantic",
     "dedup_incremental_simhash",
+    "dedup_incremental_substring",
     "dedup_incremental_video",
     "dedup_keep_best",
     "dedup_minhash_lsh",
@@ -208,24 +207,19 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_split_leakage_safe_tiered",
     "dedup_split_leakage_safe_tiered_persisted",
     "dedup_video_temporal",
-    "join_left_outer",
-    "join_range_interval",
-    "join_semi",
-    "multimodal_audio_stats",
-    "multimodal_byte_features",
-    "multimodal_frame_sample",
-    "multimodal_image_stats",
-    "multimodal_metadata_stats",
+    "graph_pagerank",
+    "graph_pagerank_bucketed",
+    "join_bucketed",
     "pipeline_clean_corpus",
     "pipeline_clean_corpus_best",
     "pipeline_daily_increment",
     "pipeline_quality_funnel",
+    "scan_partition_pruned",
     )
 
 # Queries whose staleness rule demands a window slot but which the 50-slot
-# window cannot hold. Round 14: none — demand is 40 even after every
-# planned edit lands (see the _PRIORITY comment), so the overflow
-# mechanism is unused and the round-13 deferrals are rotated IN.
+# window cannot hold: none — demand is 26 (see the _PRIORITY comment), so
+# the overflow mechanism is unused.
 _DEFERRED: tuple[str, ...] = ()
 
 

@@ -148,27 +148,31 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
+def _table_bytes(sf_dir: str, table: str) -> int | None:
+    """On-disk bytes of one parquet source, or ``None`` when it is missing.
+    A source may be a single file (the fixtures) or a directory-layout
+    table (standard Spark output) — for a directory, ``st_size`` is the
+    ~4 KB inode size, which silently under-estimated scan parallelism to 1
+    (ADVICE r13), so directories sum their data files instead."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        if not os.path.isdir(path):
+            return os.stat(path).st_size
+        total = 0
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                if not f.startswith(("_", ".")):
+                    total += os.stat(os.path.join(root, f)).st_size
+        return total
+    except OSError:
+        return None
+
+
 def _source_bytes(sf_dir: str, tables: tuple[str, ...]) -> int | None:
     """Total on-disk bytes of the named parquet sources, or ``None`` when
-    any is missing. A source may be a single file (the fixtures) or a
-    directory-layout table (standard Spark output) — for a directory,
-    ``st_size`` is the ~4 KB inode size, which silently under-estimated
-    scan parallelism to 1 (ADVICE r13), so directories sum their data
-    files instead."""
-    total = 0
-    for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            if os.path.isdir(path):
-                for root, _dirs, files in os.walk(path):
-                    for f in files:
-                        if not f.startswith(("_", ".")):
-                            total += os.stat(os.path.join(root, f)).st_size
-            else:
-                total += os.stat(path).st_size
-        except OSError:
-            return None
-    return total
+    any is missing."""
+    sizes = [_table_bytes(sf_dir, t) for t in tables]
+    return None if None in sizes else sum(sizes)
 
 
 def scan_is_small(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> bool:
@@ -280,7 +284,10 @@ def size_shuffle_partitions(
     floor is inert; locally it keeps tiny-but-expensive shuffles
     cores-wide. AQE coalesces any stage this over-partitions.
     """
-    total = _source_bytes(sf_dir, tables) or 0
+    # sum the tables that ARE present: one missing table must not size the
+    # whole set as 0 bytes (the all-or-None rule is scan_is_small's, where
+    # unknown means big)
+    total = sum(_table_bytes(sf_dir, t) or 0 for t in tables)
     cores = max(spark.sparkContext.defaultParallelism, 1)
     per_task = max(int(0.3 * _mem_bytes(spark)) // cores, 8 << 20)
     target = min(TARGET_PARTITION_BYTES, per_task)

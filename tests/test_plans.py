@@ -375,11 +375,19 @@ def test_correlated_subquery_is_decorrelated(spark, sf_dir):
     assert broadcast_join_count(df) + plan.count("SortMergeJoin") >= 1, plan
 
 
-def test_boilerplate_applies_via_broadcast_set_not_per_doc_join(spark, sf_dir):
+def test_boilerplate_applies_via_broadcast_set_not_per_doc_join(
+    spark, sf_dir, monkeypatch
+):
     """The boilerplate EDIT must be a projection: the small repeated-segment
     set rides a broadcast single-row cross join onto each document (a
     BroadcastNestedLoopJoin over one row), never a per-segment equi-join +
-    per-doc re-aggregation; both scans prune documents to (doc_id, text)."""
+    per-doc re-aggregation; both scans prune documents to (doc_id, text).
+    The exchange budget is the at-scale plan: ``scan_is_small`` is forced
+    to its big-corpus branch, so the fixture-only ``spread_small_scan``
+    repartitions (one per document scan) stay out of the count."""
+    from broadway_kinesis_spark import session
+
+    monkeypatch.setattr(session, "scan_is_small", lambda *args: False)
     df = QUERIES["dedup_boilerplate"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastNestedLoopJoin" in plan, plan

@@ -347,20 +347,194 @@ def test_split_labels_and_rollforward_policy_tokens():
     discipline)."""
     import inspect
 
-    from broadway_kinesis_spark.operators import incremental_batch as ib
     from broadway_kinesis_spark.operators import split_incremental as si
 
     # round 13: the ":rf:v{n}-v{n1}" token moved into the shared
     # versioned_fold.fold_policy helper (which also folds the chained
-    # fold's src identity in); the folds must route through it
+    # fold's src identity in); the table families' names are pinned
+    # behaviourally by test_versioned_artifact_names_are_golden
     from broadway_kinesis_spark.functions.versioned_fold import fold_policy
 
     pol_src = inspect.getsource(fold_policy)
     assert ":rf:v{boundary_n}-v{boundary_n1}" in pol_src
     assert "src=" in pol_src or "src is not None" in pol_src
-    src = inspect.getsource(ib.roll_forward_digests)
-    assert "boundary_n" in src and "boundary_n1" in src and "fold_policy(" in src
-    src = inspect.getsource(ib.roll_forward_ngram_index)
-    assert "boundary_n" in src and "boundary_n1" in src and "fold_policy(" in src
     src = inspect.getsource(si.ensure_split_labels)
     assert "labels:v{boundary}" in src
+
+
+#: (module, ensure, roll_forward, source table) -> the ``_bks_<prefix>_<token>_``
+#: stems of ensure(400), roll_forward(400, 450) and the chained
+#: roll_forward(450, 500, src=<fixed-name tables>), as the hand-written
+#: folds named them before the VersionedArtifact spec: every stored table,
+#: fold==scratch, inode and vacuum fence depends on these staying
+#: byte-identical.
+_GOLDEN_NAMES = {
+    (
+        "incremental_batch",
+        "ensure_corpus_digests",
+        "roll_forward_digests",
+        "documents",
+    ): (
+        ("_bks_digests_de0c4a30_",),
+        ("_bks_digests_22499e1a_",),
+        ("_bks_digests_a4d8d612_",),
+    ),
+    (
+        "incremental_batch",
+        "ensure_ngram_index",
+        "roll_forward_ngram_index",
+        "documents",
+    ): (
+        ("_bks_ngidx_f3570fe5_", "_bks_ngdf_f3570fe5_"),
+        ("_bks_ngidx_766a1d17_", "_bks_ngdf_766a1d17_"),
+        ("_bks_ngidx_802dc1ab_", "_bks_ngdf_802dc1ab_"),
+    ),
+    (
+        "minhash_incremental",
+        "ensure_minhash_bands",
+        "roll_forward_minhash_bands",
+        "documents",
+    ): (
+        ("_bks_mhbands_f665309a_",),
+        ("_bks_mhbands_550de58f_",),
+        ("_bks_mhbands_b8c00dd0_",),
+    ),
+    (
+        "simhash_incremental",
+        "ensure_simhash_counts",
+        "roll_forward_simhash_counts",
+        "documents",
+    ): (
+        ("_bks_shcounts_9260dcdc_",),
+        ("_bks_shcounts_8fd0649a_",),
+        ("_bks_shcounts_1c3b48b6_",),
+    ),
+    (
+        "containment_incremental",
+        "ensure_bottomk_probes",
+        "roll_forward_bottomk_probes",
+        "documents",
+    ): (
+        ("_bks_bkprobes_8d71665a_",),
+        ("_bks_bkprobes_495bfba6_",),
+        ("_bks_bkprobes_428629b0_",),
+    ),
+    (
+        "embedding_incremental",
+        "ensure_embedding_norms",
+        "roll_forward_embedding_norms",
+        "embeddings",
+    ): (
+        ("_bks_embnorms_aead60c3_",),
+        ("_bks_embnorms_6eee649d_",),
+        ("_bks_embnorms_6a1d3ca0_",),
+    ),
+    (
+        "fingerprint_incremental",
+        "ensure_phash_bands",
+        "roll_forward_phash_bands",
+        "documents",
+    ): (
+        ("_bks_phbands_5dc76f67_",),
+        ("_bks_phbands_d6890ba5_",),
+        ("_bks_phbands_8d879f80_",),
+    ),
+    (
+        "audiohash_incremental",
+        "ensure_audio_bands",
+        "roll_forward_audio_bands",
+        "documents",
+    ): (
+        ("_bks_aubands_2da57bf7_",),
+        ("_bks_aubands_9020407b_",),
+        ("_bks_aubands_b0d3d92b_",),
+    ),
+    (
+        "videohash_incremental",
+        "ensure_video_index",
+        "roll_forward_video_index",
+        "documents",
+    ): (
+        ("_bks_vidx_6aa9ebc2_", "_bks_vdf_6aa9ebc2_"),
+        ("_bks_vidx_2c557b75_", "_bks_vdf_2c557b75_"),
+        ("_bks_vidx_c2e77663_", "_bks_vdf_c2e77663_"),
+    ),
+    (
+        "fuzzy_incremental",
+        "ensure_fuzzy_prefixes",
+        "roll_forward_fuzzy_prefixes",
+        "documents",
+    ): (
+        ("_bks_fzpfx_7189056a_",),
+        ("_bks_fzpfx_20a7982d_",),
+        ("_bks_fzpfx_19e19ee5_",),
+    ),
+    (
+        "substring_incremental",
+        "ensure_span_counts",
+        "roll_forward_span_counts",
+        "documents",
+    ): (
+        ("_bks_sscounts_e945afa4_",),
+        ("_bks_sscounts_faed46c1_",),
+        ("_bks_sscounts_1ca9d81d_",),
+    ),
+    (
+        "semantic_incremental",
+        "ensure_semantic_assignments",
+        "roll_forward_semantic_assignments",
+        "embeddings",
+    ): (
+        ("_bks_semasg_6bcb233f_",),
+        ("_bks_semasg_3b8598be_",),
+        ("_bks_semasg_ad1bf64e_",),
+    ),
+}
+
+
+def test_versioned_artifact_names_are_golden(spark, sf_dir):
+    """Behavioural name pin for all 12 table families: the prefix + policy
+    token of the build, the fold and a chained fold equal the golden
+    strings, the suffix is the corpus signature of the family's source
+    table, and the three versions never share a name. The chained fold's
+    src is renamed to fixed table names first, so its src identity (which
+    enters the token) does not depend on the fixture path's signature."""
+    import importlib
+    import shutil
+
+    from broadway_kinesis_spark.functions.table_build import corpus_sig
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def tup(x):
+        return x if isinstance(x, tuple) else (x,)
+
+    def split(name):
+        stem, sig = name.rsplit("_", 1)
+        return stem + "_", sig
+
+    for (mod, ens, rf, source), golden in _GOLDEN_NAMES.items():
+        m = importlib.import_module(f"broadway_kinesis_spark.operators.{mod}")
+        built = tup(getattr(m, ens)(spark, sf_dir, 400))
+        rolled = tup(getattr(m, rf)(spark, sf_dir, 400, 450))
+        fixed = tuple(f"golden_src_{i}_{rf}" for i in range(len(rolled)))
+        for a, b in zip(rolled, fixed):
+            spark.sql(f"DROP TABLE IF EXISTS {b}")
+            shutil.rmtree(os.path.join(wh, b), ignore_errors=True)
+            spark.sql(f"ALTER TABLE {a} RENAME TO {b}")
+        try:
+            chained = tup(
+                getattr(m, rf)(
+                    spark, sf_dir, 450, 500, src=fixed if len(fixed) > 1 else fixed[0]
+                )
+            )
+        finally:
+            for a, b in zip(rolled, fixed):
+                spark.sql(f"ALTER TABLE {b} RENAME TO {a}")
+        sig = corpus_sig(sf_dir, (source,))
+        versions = (built, rolled, chained)
+        for names, stems in zip(versions, golden, strict=True):
+            assert tuple(split(n)[0] for n in names) == stems, (rf, names)
+            assert all(split(n)[1] == sig for n in names), (rf, names)
+        flat = [n for names in versions for n in names]
+        assert len(set(flat)) == len(flat), (rf, flat)

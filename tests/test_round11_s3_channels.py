@@ -760,30 +760,34 @@ def test_vacuum_retention_covers_session3_families(spark, sf_dir):
 
 # ---------------------------------------------- corpus-version orchestrator
 def test_roll_forward_registry_covers_every_exported_fold():
-    """Coverage fence: every ``roll_forward_*`` the package exports is a
-    registered family — adding a channel without registering it here is a
-    CI failure, not a silent skip in the daily job."""
+    """Coverage fence: every ``VersionedArtifact`` spec defined under
+    ``operators/`` and every ``roll_forward_*`` there (a spec's alias or a
+    hand-written fold) belongs to a registered family — adding a channel
+    without registering it is a CI failure, not a silent skip in the daily
+    job. Specs are matched by identity and folds by the registered
+    callable, because every spec alias shares one ``__name__``."""
     import importlib
     import pkgutil
 
     import broadway_kinesis_spark.operators as ops
+    from broadway_kinesis_spark.functions.versioned_fold import VersionedArtifact
     from broadway_kinesis_spark.operators.corpus_versioning import _families
 
-    exported = set()
+    families = _families()
+    spec_ids = {id(f) for f in families if isinstance(f, VersionedArtifact)}
+    folds = [f.roll_forward for f in families]
+    missing = set()
     for m in pkgutil.iter_modules(ops.__path__):
         if m.name == "corpus_versioning":
             continue
         mod = importlib.import_module(f"broadway_kinesis_spark.operators.{m.name}")
-        for attr in dir(mod):
-            if attr.startswith("roll_forward_") and callable(getattr(mod, attr)):
-                # attribute may be a re-import from another module; key by
-                # the defining module so each fold counts once
-                fn = getattr(mod, attr)
-                exported.add(f"{fn.__module__}.{fn.__name__}")
-    registered = {
-        f"{f.fold.__module__}.{f.fold.__name__}" for f in _families()
-    }
-    missing = exported - registered
+        for attr, val in vars(mod).items():
+            if isinstance(val, VersionedArtifact):
+                if id(val) not in spec_ids:
+                    missing.add(f"{m.name}.{attr}")
+            elif attr.startswith("roll_forward_") and callable(val):
+                if val not in folds:
+                    missing.add(f"{m.name}.{attr}")
     assert not missing, f"folds not in the corpus_versioning registry: {sorted(missing)}"
 
 

@@ -43,6 +43,10 @@ def test_scales_with_corpus_and_sets_conf(spark):
             assert int(spark.conf.get("spark.sql.shuffle.partitions")) == parts
             # per-partition expanded bytes within the target
             assert expanded / parts <= TARGET_PARTITION_BYTES + 1
+            # a partially missing table set sizes from the tables present
+            # (ADVICE r14), never as an empty corpus
+            docs_and_missing = ("documents", "embeddings")
+            assert size_shuffle_partitions(spark, td, docs_and_missing) == parts
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
 

@@ -1,9 +1,15 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for every headline bench query into
-plans/r14/<query>_<tag>.txt (tag = before/after), using the same session
-geometry as bench.py so plan shapes match what the bench actually runs.
+"""Capture .explain("formatted") for registered queries into
+<out_dir>/<query>_<tag>.txt, using the same session geometry as bench.py so
+plan shapes match what the bench actually runs. With no query names, every
+headline bench query is captured.
 
-Usage: python tools/capture_plans_r14.py [before|after] [query ...]
+Usage: python tools/capture_plans.py <out_dir> <tag> [query ...]
+
+The corpus is ``$SPARK_GRAFT_SF_DIR`` (required; the bench's sf0.1 fixture
+for bench-geometry plans). Two captures of the same corpus from two
+checkouts diff directly: ``diff -r`` on the two out_dirs
+after renaming the tags, or per-file ``diff a/<q>_before.txt b/<q>_after.txt``.
 """
 
 from __future__ import annotations
@@ -21,14 +27,18 @@ from broadway_kinesis_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(REPO, "plans", "r14")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if len(sys.argv) < 3 or not sf_dir:
+        sys.exit(__doc__)
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
     os.makedirs(out_dir, exist_ok=True)
 
     queries = _registry.queries()
     if only:
+        missing = sorted(only - set(queries))
+        if missing:
+            sys.exit(f"unknown queries: {missing}")
         names = [n for n in queries if n in only]
     else:
         names = [n for n in HEADLINE if n in queries]
