@@ -7,18 +7,18 @@ sub-document duplication CCNet/RefinedWeb-style curation wants flagged:
 containment(A→B) = |A∩B| / |A| is ~1 whenever A's shingles live inside
 B, regardless of how much bigger B is.
 
-Machinery is shared with ``dedup_ngram_jaccard`` by IMPORT (the
-candidate-generation lesson of rounds 4-5: one shingle implementation,
-many consumers): the same 3-gram shingle arrays, the same DF-capped
-inverted index for candidates — a shingle in more than DF_CAP docs is a
-stop shingle — and the same array-intersect verification, except scored
-DIRECTIONALLY: each unordered candidate pair verifies both ways and
-emits a (contained, container) row per direction clearing C_T. The
-division is one exact int/int per row, identical in both engines.
+Everything up to the score is ``dedup_ngram_jaccard``'s pipeline, shared
+as one function: ``dedup._pair_overlap`` (over ``dedup._capped_index``)
+builds the 3-gram shingle arrays, the DF-capped inverted index — a
+shingle in more than DF_CAP docs is a stop shingle — the candidate pairs
+and their exact |A∩B| with both set sizes. This module only scores them
+DIRECTIONALLY: each unordered candidate pair verifies both ways and emits
+a (contained, container) row per direction clearing C_T. The division is
+one exact int/int per row, identical in both engines.
 
-Scale posture: identical to the ngram operator's (it is the same index
-build + a different verification projection); candidate volume is
-bounded by the DF cap, verification is O(candidates · shingles/doc).
+Scale posture: the ngram operator's, by construction (candidate volume is
+bounded by the DF cap; the scale guards are documented on the shared
+functions).
 
 Reference parity: [TGT] — engine extension (SURVEY §2.B dedup family).
 """
@@ -31,10 +31,9 @@ from pyspark.sql import functions as F
 from broadway_kinesis_spark.operators.dedup import (
     DF_CAP,
     _SQL_SHINGLES,
-    _shingled,
+    _pair_overlap,
 )
 from broadway_kinesis_spark.registry import query
-from broadway_kinesis_spark.session import load
 
 C_T = 0.8  # containment threshold: >= 80% of the contained doc's shingles
 
@@ -99,95 +98,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional sub-document duplication: (contained, container) pairs
     where >= {C_T} of the contained doc's 3-gram shingles appear in the
     container — including excerpt-in-page pairs symmetric Jaccard misses."""
-    from broadway_kinesis_spark.session import size_shuffle_partitions
-
-    # Shares the ngram index's shuffle-expansion profile: size partitions
-    # to the corpus before planning (no-op at fixture scale), cores floor
-    # included — the round-14 floor-removal experiment on the ngram twin
-    # showed the floor costs ~0.35 s of task overhead at sf0.1 but
-    # carries the candidate explode at x10 (3x regression without it;
-    # compressed text defeats the bytes rule — see minhash_candidates'
-    # note), and this operator shares that explode shape exactly.
-    size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
-    from broadway_kinesis_spark.session import spread_small_scan
-
-    docs = spread_small_scan(
-        load(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        ("documents",),
-        "doc_id",
-    )
-    shingled = _shingled(docs).cache()
-    sh = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
-    # Round-14 port of the ngram channel's round-13 verify split — same
-    # candidates, same answer (oracle unchanged), the per-pair big-array
-    # intersects replaced by an uncapped-count the candidate explode
-    # yields for free plus a small per-doc hot intersect:
-    # 1. the DF cap is a broadcast ANTI-join against the (Zipf-tiny) HOT
-    #    shingle set instead of a corpus-wide window — the window sorted
-    #    and buffered EVERY shingle occurrence, hot partitions included
-    #    (the skew the cap exists to kill);
-    # 2. candidate pairs explode from per-shingle doc lists (bounded by
-    #    DF_CAP after the anti-join) — no self-join rescan — and the
-    #    group count IS |S1 ∩ S2 ∩ UNCAPPED|;
-    # 3. |S1 ∩ S2| = that count + |S1 ∩ S2 ∩ HOT|, the hot part from
-    #    per-CANDIDATE-doc hot-restricted lists (never a one-row hot
-    #    array, never a corpus-wide broadcast — the VERDICT r13 #1
-    #    hazards this port starts without).
-    df_cnt = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    hot = df_cnt.filter(F.col("df") > DF_CAP).select("shingle")
-    idx = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    grp = idx.groupBy("shingle").agg(F.collect_list("doc_id").alias("ds"))
-    pair = F.expr(
-        "flatten(transform(ds, (x, i) ->"
-        " transform(slice(ds, i + 2, size(ds) - i - 1), y ->"
-        " struct(least(x, y) AS d1, greatest(x, y) AS d2))))"
-    )
-    pair_cnt = (
-        grp.select(F.explode(pair).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_uncapped"))
-        .cache()  # read twice: candidate-doc pruning + the verify join
-    )
-    cand_docs = (
-        pair_cnt.select(F.col("d1").alias("doc_id"))
-        .union(pair_cnt.select(F.col("d2").alias("doc_id")))
-        .distinct()
-    )
-    sh_c = sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    doc_caps = (
-        sh_c.join(
-            F.broadcast(hot.withColumn("_hot", F.lit(True))), "shingle", "left"
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("s"),
-            F.sort_array(
-                F.collect_list(F.when(F.col("_hot"), F.col("shingle")))
-            ).alias("capped"),
-        )
-    )
-    x1 = doc_caps.select(
-        F.col("doc_id").alias("d1"), F.col("s").alias("s1"), F.col("capped").alias("c1")
-    )
-    x2 = doc_caps.select(
-        F.col("doc_id").alias("d2"), F.col("s").alias("s2"), F.col("capped").alias("c2")
-    )
-    from broadway_kinesis_spark.session import scan_is_small
-
-    bc = F.broadcast if scan_is_small(spark, sf_dir, ("documents",)) else (lambda d: d)
-    ni = F.col("n_uncapped") + F.size(F.array_intersect("c1", "c2"))
-    scored = (
-        pair_cnt.join(bc(x1), "d1")
-        .join(bc(x2), "d2")
-        .select(
-            "d1",
-            "d2",
-            ni.cast("long").alias("ni"),
-            F.col("s1").cast("long").alias("n1"),
-            F.col("s2").cast("long").alias("n2"),
-        )
+    pairs, ni = _pair_overlap(spark, sf_dir)
+    scored = pairs.select(
+        "d1",
+        "d2",
+        ni.cast("long").alias("ni"),
+        F.col("s1").cast("long").alias("n1"),
+        F.col("s2").cast("long").alias("n2"),
     )
     fwd = scored.select(
         F.col("d1").alias("contained_id"),

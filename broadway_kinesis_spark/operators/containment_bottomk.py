@@ -25,22 +25,27 @@ the shingle makes keys distinct) and slice the first K — no window, no
 exchange. The candidate join is directional by construction: probe side
 = potential contained doc, index side = potential container.
 
+The index probed is shared, not rebuilt: ``dedup._capped_index`` gives
+this operator the same cached shingle arrays and DF-capped index (with
+the same partition sizing and scan spread) as ``dedup_ngram_jaccard``
+and ``dedup_containment``. Only the bottom-K probe, the candidate join
+and the full-array verify live here.
+
 Reference parity: [TGT] — engine extension (SURVEY §2.B dedup family).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from broadway_kinesis_spark.operators.containment import C_T
 from broadway_kinesis_spark.operators.dedup import (
     DF_CAP,
     _SQL_SHINGLES,
-    _shingled,
+    _capped_index,
 )
 from broadway_kinesis_spark.registry import query
-from broadway_kinesis_spark.session import load
 
 K_BOTTOM = 16
 
@@ -120,25 +125,7 @@ def dedup_containment_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional sub-document duplication through a bottom-{K_BOTTOM}
     sketch probe: candidate volume bounded by K·DF per document, exact
     full-set containment verify >= {C_T}."""
-    from broadway_kinesis_spark.session import size_shuffle_partitions
-
-    # The probe bounds candidates by K·DF/doc but the verify still joins
-    # full shingle streams: size partitions to the corpus before planning
-    # (no-op at fixture scale), cores floor included — the probe join +
-    # distinct + verify run post-shuffle over data whose parquet bytes
-    # wildly under-state the work (compressed text; see
-    # minhash_candidates' round-14 note), and the floor costs only noise
-    # here at sf0.1 (1.49 vs 1.33 interleaved).
-    size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
-    from broadway_kinesis_spark.session import spread_small_scan
-
-    docs = spread_small_scan(
-        load(spark, sf_dir, "documents").select("doc_id", "text"),
-        sf_dir,
-        ("documents",),
-        "doc_id",
-    )
-    shingled = _shingled(docs).cache()
+    shingled, _, _, capped = _capped_index(spark, sf_dir)
     keyed = F.transform("shingles", lambda s: F.concat(F.md5(s), s))
     probes = F.transform(
         F.slice(F.array_sort(keyed), 1, K_BOTTOM), lambda e: F.substring(e, 33, 1 << 20)
@@ -146,15 +133,6 @@ def dedup_containment_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pe = shingled.select(
         "doc_id", F.explode(probes).alias("shingle")
     )
-    idx = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
-    # Round 14: the DF cap as a broadcast ANTI-join against the hot set
-    # (the ngram channel's round-13 form) instead of a corpus-wide window
-    # — the window sorted and buffered every shingle occurrence of the
-    # corpus (at fresh-x100, the operator's dominant stage), hot
-    # partitions included.
-    df_cnt = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    hot = df_cnt.filter(F.col("df") > DF_CAP).select("shingle")
-    capped = idx.join(F.broadcast(hot), "shingle", "left_anti")
     cand = (
         pe.select(F.col("doc_id").alias("contained_id"), "shingle")
         .join(

@@ -32,7 +32,7 @@ driver/BASELINE.json north star).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from broadway_kinesis_spark.registry import query
@@ -231,7 +231,7 @@ def minhash_candidates(
     # doc_id exchange: floor the partition count at the session's cores
     # (round 13 — at 8 bench partitions the hash pass used 1/4 of the
     # host; bytes-sizing still governs at corpus scale).
-    size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
+    size_shuffle_partitions(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
     # Signature path uses the shingle stream WITH repetition — min() is
     # duplicate-insensitive, so skipping the distinct keeps everything in
@@ -294,57 +294,81 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     than {DF_CAP} docs are dropped from the index (stop-shingle cap — the
     skew guard that keeps hot shingles from emitting quadratic pairs), then
     exact Jaccard over the full shingle sets filters to >= {JACCARD_T}."""
-    from broadway_kinesis_spark.session import size_shuffle_partitions
+    pairs, n_common = _pair_overlap(spark, sf_dir)
+    jac = n_common / (F.col("s1") + F.col("s2") - n_common)
+    return pairs.select("d1", "d2", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= JACCARD_T
+    )
 
-    # The shingle explode + candidate explode expand the corpus ~two
-    # orders of magnitude in-shuffle: size partitions to the corpus BEFORE
-    # planning, or the x100 tier dies spilling at the session default
-    # (round-6 forensics). cpu_bound keeps a cores floor under the bytes
-    # rule. Round 14 measured REMOVING it both ways before keeping it:
-    # sf0.1 pays ~0.5 s of task overhead for it (0.89 s without, 1.40
-    # with, interleaved), but at x10 the floor is what carries the
-    # candidate explode + group counts — text parquet compresses so hard
-    # (2.5 MB at x10) that the bytes rule says 8 partitions for ~30 s of
-    # shingle CPU, and the x10 key regressed 32.5 -> 98.5 s without the
-    # floor. The fixture overhead is the price of the scale posture.
-    size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
-    from broadway_kinesis_spark.session import spread_small_scan
 
+def _capped_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The DF-capped inverted index shared by the n-gram, containment and
+    bottom-K operators: ``(shingled, sh, hot, idx)`` = the cached per-doc
+    distinct shingle arrays, their exploded ``(doc_id, shingle)`` stream,
+    the ``df > DF_CAP`` hot shingles, and the stream minus the hot ones.
+
+    The shingle explode + candidate explode downstream expand the corpus
+    ~two orders of magnitude in-shuffle: partitions are sized to the corpus
+    BEFORE planning, or the x100 tier dies spilling at the session default
+    (round-6 forensics). The scan is spread first (round 13): a
+    single-row-group input otherwise materializes the cache as ONE
+    partition, serializing every explode-from-cache stage. The arrays are
+    cached once (compact: one row/doc) because they feed both the index and
+    verification — measured faster than rebuilding via the window-lead
+    stream, since these pipelines need the distinct arrays anyway.
+
+    The cap is a broadcast ANTI-join against the (by Zipf, tiny) hot set,
+    not a corpus-wide window: the window buffered every shingle partition
+    (hot ones included, the exact skew the cap exists to kill) and sorted
+    50+ rows/doc."""
+    from broadway_kinesis_spark.session import size_shuffle_partitions, spread_small_scan
+
+    size_shuffle_partitions(spark, sf_dir)
     docs = spread_small_scan(
         load(spark, sf_dir, "documents").select("doc_id", "text"),
         sf_dir,
         ("documents",),
         "doc_id",
     )
-    # Arrays are cached once (compact: one row/doc) and feed BOTH the index
-    # explode and pair verification — measured faster here than rebuilding
-    # via the window-lead stream, because this pipeline needs the distinct
-    # arrays anyway. The scan is spread first (round 13): a single-row-group
-    # input otherwise materializes the cache as ONE partition, serializing
-    # the per-run explode-from-cache stage.
     shingled = _shingled(docs).cache()
     sh = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
-    # Round-13 rewrite of the candidate + verify tail — same answer (the
-    # oracle is unchanged and hash-exact), ~2x less work, skew-safer:
-    #
-    # 1. The df-cap is applied as a broadcast ANTI-join against the (by
-    #    Zipf, tiny) HOT-shingle set instead of a corpus-wide window — the
-    #    window buffered every shingle partition (hot ones included, the
-    #    exact skew the cap exists to kill) and sorted 50+ rows/doc.
-    # 2. Candidate pairs come from per-shingle doc lists (bounded by
-    #    DF_CAP AFTER the anti-join, so no collect_list blowup) exploded
-    #    in place — no self-join rescan.
-    # 3. The exact-Jaccard intersection splits EXACTLY into
-    #    |S1 n S2| = (# shared UNCAPPED shingles)  — the pair count the
-    #                candidate explode already yields for free —
-    #              + |S1 n S2 n HOT|               — an intersect over the
-    #                tiny hot set, precomputed per DOC (not per pair).
-    #    The old tail intersected two ~150-string arrays per candidate
-    #    pair (1.1M pairs at sf0.1 — the query's dominant cost, measured
-    #    1.8 s of pure CPU at full parallelism).
     df_cnt = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     hot = df_cnt.filter(F.col("df") > DF_CAP).select("shingle")
     idx = sh.join(F.broadcast(hot), "shingle", "left_anti")
+    return shingled, sh, hot, idx
+
+
+def _pair_overlap(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """Every candidate pair of the capped index with its exact overlap:
+    ``(pairs, n_common)`` where ``pairs`` carries ``d1 < d2`` and the full
+    shingle-set sizes ``s1``/``s2``, and ``n_common`` = |S1 ∩ S2| over it.
+    ``n_common`` is a Column, not a projected field, so each consumer's
+    projection inlines it: a projected non-trivial field referenced twice
+    (Jaccard's numerator and denominator) would keep Catalyst from
+    collapsing the two Projects.
+
+    The intersection splits EXACTLY into
+    |S1 ∩ S2| = (# shared UNCAPPED shingles) — the pair count the candidate
+    explode yields for free — + |S1 ∩ S2 ∩ HOT|, an intersect over the tiny
+    hot set precomputed per DOC, not per pair. (Intersecting two
+    ~150-string arrays per candidate pair was the query's dominant cost:
+    1.1M pairs at sf0.1, 1.8 s of pure CPU at full parallelism.) Candidate
+    pairs come from per-shingle doc lists, bounded by DF_CAP after the
+    anti-join (no collect_list blowup), exploded in place — no self-join
+    rescan.
+
+    Scale posture (VERDICT r13 #1): doc stats are computed for CANDIDATE
+    docs only (broadcast semi-join on the pair set — candidates are few by
+    the DF cap's design), the hot-restricted list per doc comes from a left
+    join against the hot TABLE (never a one-row array, whose size grows with
+    the corpus), and the verify join's broadcast hints survive only while
+    the corpus scan is provably small (``scan_is_small``); at scale the
+    planner/AQE chooses."""
+    from broadway_kinesis_spark.session import scan_is_small
+
+    _, sh, hot, idx = _capped_index(spark, sf_dir)
     grp = idx.groupBy("shingle").agg(F.collect_list("doc_id").alias("ds"))
     pair = F.expr(
         "flatten(transform(ds, (x, i) ->"
@@ -358,21 +382,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_uncapped"))
         .cache()  # read twice: candidate-doc pruning + the verify join
     )
-    # Round-14 scale fix (VERDICT r13 #1): the round-13 form broadcast a
-    # per-CORPUS-document stats table into the verify join (driver OOM at
-    # 100 TB — guide §3's "broadcasting a big table") and collected the
-    # whole df>CAP hot-shingle set into ONE row (its absolute size grows
-    # with the corpus). Now:
-    # 1. doc stats are computed for CANDIDATE docs only (broadcast
-    #    semi-join on the pair set — the minhash channel's own pruning
-    #    pattern; candidates are few by the DF-cap's design);
-    # 2. the per-doc hot-restricted shingle list comes from a left join
-    #    of the candidate docs' exploded stream against the hot TABLE
-    #    (never a one-row array) folded into the same aggregation that
-    #    counts the set size — no cartesian, no unbounded row;
-    # 3. the broadcast hints on the verify join survive only while the
-    #    corpus scan is provably small (scan_is_small — the
-    #    spread_small_scan guard); at scale the planner/AQE chooses.
     cand_docs = (
         pair_cnt.select(F.col("d1").alias("doc_id"))
         .union(pair_cnt.select(F.col("d2").alias("doc_id")))
@@ -397,17 +406,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     x2 = doc_caps.select(
         F.col("doc_id").alias("d2"), F.col("s").alias("s2"), F.col("capped").alias("c2")
     )
-    from broadway_kinesis_spark.session import scan_is_small
-
     bc = F.broadcast if scan_is_small(spark, sf_dir, ("documents",)) else (lambda d: d)
     n_common = F.col("n_uncapped") + F.size(F.array_intersect("c1", "c2"))
-    jac = n_common / (F.col("s1") + F.col("s2") - n_common)
-    return (
-        pair_cnt.join(bc(x1), "d1")
-        .join(bc(x2), "d2")
-        .select("d1", "d2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
-    )
+    return pair_cnt.join(bc(x1), "d1").join(bc(x2), "d2"), n_common
 
 
 _SQL_BITSUMS = ", ".join(
@@ -685,7 +686,7 @@ def fuzzy_prefix_pairs(
     # The banded Levenshtein over every same-block pair is pure CPU and
     # runs downstream of the block-key exchange: floor partitions at the
     # session's cores (round 13; bytes-sizing governs at corpus scale).
-    size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
+    size_shuffle_partitions(spark, sf_dir)
     from broadway_kinesis_spark.session import spread_small_scan
 
     d = load(spark, sf_dir, "documents")
@@ -781,7 +782,7 @@ def composite_fuzzy_blocking_recall(
 
     # Same CPU floor as fuzzy_prefix_pairs: the per-pair banded
     # Levenshtein downstream of the block join is the whole cost.
-    size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
+    size_shuffle_partitions(spark, sf_dir)
     from broadway_kinesis_spark.session import spread_small_scan
 
     p = _fuzzy_prefixes(load(spark, sf_dir, "documents"))

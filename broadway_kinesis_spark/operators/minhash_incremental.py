@@ -179,7 +179,7 @@ def incremental_minhash_pairs(
     # the array-intersect verify run downstream of exchanges — floor the
     # partition count at the session's cores (bytes-sizing still governs
     # at corpus scale; the helper is reset by the registry wrapper).
-    size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
+    size_shuffle_partitions(spark, sf_dir)
     stored = spark.table(
         bands_tbl
         if bands_tbl is not None

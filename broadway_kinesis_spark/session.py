@@ -142,6 +142,8 @@ def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     raw = raw.strip().lower().removesuffix("b")
     try:
         if raw[-1] in units:
+            # float math BEFORE the shift: "1.5g" is 1.5 GiB, not 1
+            # (ADVICE r7 — int(float(...)) << unit truncated "0.5g" to 0)
             return int(float(raw[:-1]) * (1 << units[raw[-1]]))
         return int(raw)
     except (ValueError, IndexError):
@@ -236,18 +238,9 @@ TARGET_PARTITION_BYTES = 64 << 20
 
 def _mem_bytes(spark: SparkSession) -> int:
     for key in ("spark.executor.memory", "spark.driver.memory"):
-        try:
-            raw = spark.conf.get(key)
-        except Exception:
-            continue
-        if raw:
-            units = {"k": 10, "m": 20, "g": 30, "t": 40}
-            raw = raw.strip().lower().removesuffix("b")
-            if raw[-1] in units:
-                # float math BEFORE the shift: "1.5g" is 1.5 GiB, not 1
-                # (ADVICE r7 — int(float(...)) << unit truncated "0.5g" to 0)
-                return int(float(raw[:-1]) * (1 << units[raw[-1]]))
-            return int(raw)
+        mem = _conf_bytes(spark, key, 0)
+        if mem:
+            return mem
     return 1 << 30  # Spark's own driver default
 
 
@@ -255,34 +248,29 @@ def size_shuffle_partitions(
     spark: SparkSession,
     sf_dir: str,
     tables: tuple[str, ...] = ("documents",),
-    expansion: int = INDEX_SHUFFLE_EXPANSION,
-    cpu_bound: bool = False,
 ) -> int:
     """Size ``spark.sql.shuffle.partitions`` from corpus bytes and executor
     memory for shuffle-EXPANDING operators (the inverted-index dedup
     family), replacing the hand-tuned per-run env var the round-6 x100
     runs needed (VERDICT r6 #10/#7).
 
-    The rule: expanded shuffle bytes = parquet bytes x ``expansion``; each
-    partition should hold at most ``min(TARGET_PARTITION_BYTES, 30% of
-    per-core memory)`` of that, never fewer partitions than the session
-    already has. At fixture scale (<= a few MB) this is a no-op — the
-    floor wins — so correctness-harness sessions are untouched; at the
-    fresh-x100 tier it lands at the ~128-plus-partition layout the
-    measured runs required. On a real cluster the same rule runs against
-    executor memory; AQE still coalesces any stage that comes out finer
-    than needed.
+    The rule: expanded shuffle bytes = parquet bytes x
+    ``INDEX_SHUFFLE_EXPANSION``; each partition should hold at most
+    ``min(TARGET_PARTITION_BYTES, 30% of per-core memory)`` of that, never
+    fewer partitions than the session already has nor than it has cores.
+    At fixture scale (<= a few MB) the floor wins, so correctness-harness
+    sessions keep their own setting; at the fresh-x100 tier it lands at
+    the ~128-plus-partition layout the measured runs required. On a real
+    cluster the same rule runs against executor memory; AQE still
+    coalesces any stage that comes out finer than needed.
 
-    ``cpu_bound=True`` (round 13) additionally floors the result at the
-    session's ``defaultParallelism``: operators whose post-shuffle stages
-    are CPU-dominated (salted-md5 signature passes, banded Levenshtein,
-    per-pair array intersection) need at least one partition per core, or
-    the compute serializes onto however few partitions the BYTES rule says
-    the shuffle needs — bytes-sizing is the memory guard, the CPU floor is
-    the parallelism guard. Scale-adaptive by construction: at cluster
-    scale the bytes rule dominates (corpus >> cores x target) and the
-    floor is inert; locally it keeps tiny-but-expensive shuffles
-    cores-wide. AQE coalesces any stage this over-partitions.
+    The cores floor (round 13) is the parallelism guard next to the bytes
+    rule's memory guard: every caller's post-shuffle stages are
+    CPU-dominated (salted-md5 signature passes, banded Levenshtein,
+    per-pair array intersection), and would otherwise serialize onto
+    however few partitions the BYTES rule says the shuffle needs. At
+    cluster scale the bytes rule dominates (corpus >> cores x target) and
+    the floor is inert.
     """
     # sum the tables that ARE present: one missing table must not size the
     # whole set as 0 bytes (the all-or-None rule is scan_is_small's, where
@@ -306,9 +294,12 @@ def size_shuffle_partitions(
         floor = int(base)
     except Exception:
         floor = cores
-    parts = max(floor, -(-total * expansion // target))
-    if cpu_bound:
-        parts = max(parts, cores)
+    # The cores floor was measured both ways before it was kept: sf0.1
+    # n-gram Jaccard pays ~0.5 s of task overhead for it (0.89 s without,
+    # 1.40 s with), but at x10 text parquet compresses so hard (2.5 MB)
+    # that the bytes rule says 8 partitions for ~30 s of shingle CPU, and
+    # the x10 n-gram key went 32.5 -> 98.5 s without the floor.
+    parts = max(floor, cores, -(-total * INDEX_SHUFFLE_EXPANSION // target))
     # The helpers are the only writers of this conf between the registry
     # wrapper's per-query resets, so the inflated FLAG (not a conf.get
     # round-trip) decides whether anything needs restoring — that keeps

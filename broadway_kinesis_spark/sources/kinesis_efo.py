@@ -205,6 +205,14 @@ def _seq_int(seq) -> int | None:
         return None
 
 
+def _with_lag(records: list[dict], millis_behind) -> list[dict]:
+    """Copies of one response's records, each carrying the response's
+    ``MillisBehindLatest`` (lag is reported per GetRecords response and per
+    SubscribeToShardEvent, not per record) for the envelope's
+    ``millis_behind_latest`` column."""
+    return [{**r, "MillisBehindLatest": millis_behind} for r in records]
+
+
 @dataclass
 class _ShardRange(InputPartition):
     shard_id: str
@@ -352,7 +360,7 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
                         it = self._iterator(shard_id, after_seq=after_seq, at_seq=at_seq)
                     continue
                 raise
-            records += resp.get("Records", [])
+            records += _with_lag(resp.get("Records", []), resp.get("MillisBehindLatest"))
             it = resp.get("NextShardIterator")  # None => shard closed (A7)
             if resp.get("MillisBehindLatest") == 0 and not resp.get("Records"):
                 break  # caught up
@@ -365,12 +373,7 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
             return {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": partition.start_seq}
         if partition.at_seq is not None:
             return {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": partition.at_seq}
-        pos = self.position
-        if pos.kind in ("latest", "trim_horizon"):
-            return {"Type": pos.kind.upper()}
-        if pos.kind == "at_timestamp":
-            return {"Type": "AT_TIMESTAMP", "Timestamp": float(pos.value)}
-        return {"Type": pos.kind.upper(), "SequenceNumber": pos.value}
+        return self.position.wire_format()
 
     def _subscribe_range(self, partition: _ShardRange) -> list[dict]:
         """A1: consume the planned range over the EFO push event stream.
@@ -408,7 +411,7 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
                         continue  # initial-response etc. (subscribe_to_shard.ex:341)
                     got_event = True
                     progressed = True
-                    recs = ev.get("Records", [])
+                    recs = _with_lag(ev.get("Records", []), ev.get("MillisBehindLatest"))
                     out += recs
                     if any(r["SequenceNumber"] == partition.end_seq for r in recs):
                         return out
@@ -548,8 +551,7 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
         a prior cursor exists, else AT the pinned first sequence — never a
         floating LATEST resolution at task time. EFO push pipe when a
         consumer ARN is configured, get_records otherwise."""
-        reader = KinesisEfoStreamReader.__new__(KinesisEfoStreamReader)
-        reader.__init__(None, partition.options)
+        reader = KinesisEfoStreamReader(None, partition.options)
         if partition.consumer_arn:
             records = reader._subscribe_range(partition)
         else:
@@ -587,7 +589,7 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
                 rec.get("Data"),
                 partition.shard_id,
                 partition.stream_name,
-                None,
+                rec.get("MillisBehindLatest"),
             )
             if seq == partition.end_seq:
                 break

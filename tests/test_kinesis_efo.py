@@ -50,8 +50,12 @@ class FakeKinesisClient:
         shards: dict[str, list[dict]],
         fail_first: list[Exception] | None = None,
         subscriptions: list[list] | None = None,
+        millis_behind: int = 0,
     ):
         self.shards = shards
+        # MillisBehindLatest reported with every non-empty response; an
+        # empty response is caught up (0), which is what ends a poll loop
+        self.millis_behind = millis_behind
         self.fail_first = list(fail_first or [])
         self.calls: list[str] = []
         # scripted subscribe_to_shard event streams (each a list of events /
@@ -94,7 +98,7 @@ class FakeKinesisClient:
             "ContinuationSequenceNumber": (
                 None if closed else (out[-1]["SequenceNumber"] if out else "cont")
             ),
-            "MillisBehindLatest": 0,
+            "MillisBehindLatest": self.millis_behind if out else 0,
         }
         return {"EventStream": _evstream([{"SubscribeToShardEvent": ev}])}
 
@@ -136,7 +140,7 @@ class FakeKinesisClient:
         return {
             "Records": out,
             "NextShardIterator": None if closed else f"{shard_id}:{nxt}",
-            "MillisBehindLatest": 0,
+            "MillisBehindLatest": self.millis_behind if out else 0,
         }
 
 
@@ -208,7 +212,7 @@ def test_latest_offset_pending_plan_is_cached_not_repolled():
 
 
 def test_read_yields_envelope_rows_in_range(monkeypatch):
-    client = FakeKinesisClient(SHARDS)
+    client = FakeKinesisClient(SHARDS, millis_behind=1234)
     # read() builds a fresh reader (executor-side shape) -> inject at class level
     monkeypatch.setattr(
         KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
@@ -221,6 +225,7 @@ def test_read_yields_envelope_rows_in_range(monkeypatch):
         ("2", b"b", "shard-0001", "test-stream"),
     ]
     assert rows[0][2] == datetime(1970, 1, 1, 0, 1, 40)  # arrival 100.0 as naive UTC
+    assert [x[6] for x in rows] == [1234, 1234]  # millis_behind_latest
 
 
 def test_read_starts_after_previous_cursor(monkeypatch):
@@ -354,13 +359,14 @@ def efo_part(shard_id="shard-0001", start_seq=None, at_seq="1", end_seq="3", **o
 
 
 def test_efo_read_uses_subscribe_not_get_records(monkeypatch):
-    client = FakeKinesisClient(SHARDS)
+    client = FakeKinesisClient(SHARDS, millis_behind=567)
     monkeypatch.setattr(
         KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
     )
     r = make_reader(client)
     rows = list(r.read(efo_part()))
     assert [(x[0], x[3]) for x in rows] == [("1", b"a"), ("2", b"b"), ("3", b"c")]
+    assert [x[6] for x in rows] == [567, 567, 567]  # millis_behind_latest
     assert "subscribe_to_shard" in client.calls
     assert "get_records" not in client.calls
     assert client.subscribe_calls[0] == (

@@ -9,7 +9,7 @@ gets a focused test. Three internals changed:
    (b) the guard makes it a NO-OP when the bytes estimate says the scan
    already has >= cores splits (the 100 TB case, simulated by shrinking
    ``maxPartitionBytes``); (c) unknown source size -> no-op.
-2. ``session.size_shuffle_partitions(cpu_bound=True)`` — the CPU floor.
+2. ``session.size_shuffle_partitions`` — the CPU floor.
    Fence: result >= defaultParallelism while the bytes rule still
    dominates for large corpora (monotonicity unchanged).
 3. ``dedup_ngram_jaccard``'s candidate+verify rewrite (broadcast
@@ -75,19 +75,19 @@ def test_spread_small_scan_noop_on_unknown_source(spark, sf_dir):
     assert out is df
 
 
-def test_cpu_floor_sizes_to_cores(spark, sf_dir):
+def test_cpu_floor_sizes_to_cores(spark, sf_dir, monkeypatch):
+    from broadway_kinesis_spark import session
     from broadway_kinesis_spark.session import reset_shuffle_partitions
 
     cores = spark.sparkContext.defaultParallelism
     try:
-        parts = size_shuffle_partitions(spark, sf_dir, cpu_bound=True)
+        parts = size_shuffle_partitions(spark, sf_dir)
         assert parts >= cores
         # and the bytes rule still dominates when it asks for more: a
         # fake huge expansion must exceed the floor
-        parts_big = size_shuffle_partitions(
-            spark, sf_dir, expansion=1 << 24, cpu_bound=True
-        )
-        assert parts_big >= parts
+        monkeypatch.setattr(session, "INDEX_SHUFFLE_EXPANSION", 1 << 24)
+        parts_big = size_shuffle_partitions(spark, sf_dir)
+        assert parts_big > parts
     finally:
         reset_shuffle_partitions(spark)
 

@@ -11,7 +11,8 @@ operator's internals gets a focused test. This round's changed internals:
 2. ``dedup_ngram_jaccard``'s verify join scale fix (VERDICT r13 #1):
    doc stats are candidate-restricted, the hot set is never collected
    to one row, and the verify join's broadcast hints survive only while
-   ``scan_is_small`` holds. Fence: the query returns IDENTICAL rows in
+   ``scan_is_small`` holds. Fence: every operator built on the shared
+   core (n-gram, containment, bottom-K) returns IDENTICAL rows in
    fixture geometry and simulated at-scale geometry (where every guard
    flips to its scale branch).
 3. ``dedup_containment``'s round-14 port of the verify split (anti-join
@@ -26,6 +27,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+
+import pytest
 
 import __spark_entry__ as entrymod
 from broadway_kinesis_spark.session import _source_bytes, scan_is_small
@@ -53,24 +56,25 @@ def test_source_bytes_sums_directory_parquet(spark):
     assert _source_bytes(td, ("documents",)) is None  # gone -> unknown
 
 
-def test_ngram_jaccard_identical_rows_at_simulated_scale(spark, sf_dir):
-    """The round-14 scale guards (candidate-restricted doc stats, guarded
-    broadcast hints) must be PLAN-only: flipping every guard to its
-    at-scale branch (tiny maxPartitionBytes => scan_is_small False,
-    spread_small_scan no-op, no broadcast hints on the verify join) must
-    return byte-identical rows."""
-    fixture = {
-        (r.d1, r.d2, r.jaccard)
-        for r in QUERIES["dedup_ngram_jaccard"](spark, sf_dir).collect()
-    }
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_ngram_jaccard", "dedup_containment", "dedup_containment_bottomk"],
+)
+def test_capped_index_consumers_identical_rows_at_simulated_scale(
+    spark, sf_dir, name
+):
+    """The scale guards of the shared capped-index / pair-overlap core
+    (candidate-restricted doc stats, guarded broadcast hints, the scan
+    spread) must be PLAN-only for every operator built on it: flipping
+    every guard to its at-scale branch (tiny maxPartitionBytes =>
+    scan_is_small False, spread_small_scan no-op, no broadcast hints on
+    the verify join) must return byte-identical rows."""
+    fixture = {tuple(r) for r in QUERIES[name](spark, sf_dir).collect()}
     base = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
         assert not scan_is_small(spark, sf_dir, ("documents",))
-        at_scale = {
-            (r.d1, r.d2, r.jaccard)
-            for r in QUERIES["dedup_ngram_jaccard"](spark, sf_dir).collect()
-        }
+        at_scale = {tuple(r) for r in QUERIES[name](spark, sf_dir).collect()}
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", base)
     assert fixture == at_scale
