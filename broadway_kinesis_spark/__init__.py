@@ -4,11 +4,12 @@ Re-expresses the capabilities of the reference Elixir library
 ``mbta/broadway_kinesis`` (an AWS Kinesis enhanced-fan-out Broadway producer,
 see ``/root/reference/lib/broadway_kinesis/``) idiomatically on Apache Spark:
 
-- :mod:`broadway_kinesis_spark.sources` — Structured Streaming sources that
-  mirror the reference's subscription semantics (starting positions, offset
-  cursors, shard-close EOF, at-least-once restart) via the Spark 4 Python
-  ``DataSource`` API, plus a hermetic replay source (the moral equivalent of
-  the reference's ``test/support/fake_kinesis.ex``).
+- :mod:`broadway_kinesis_spark.sources` — the Kinesis Structured Streaming
+  source that mirrors the reference's subscription semantics (starting
+  positions, offset cursors, shard-close EOF, at-least-once restart) via the
+  Spark 4 Python ``DataSource`` API, and its hermetic replay format: the same
+  reader over a file-backed SDK client (the moral equivalent of the
+  reference's ``test/support/fake_kinesis.ex``).
 - :mod:`broadway_kinesis_spark.operators` — the batch relational operator
   surface (scans, filters, joins, aggregations, windows, set ops) plus
   LLM-data-pipeline operators (dedup, similarity search, text analysis),

@@ -1,8 +1,9 @@
 """`kinesis_efo` — AWS Kinesis streaming source (Spark 4 Python DataSource).
 
-The production twin of the replay source: same envelope schema, same
-starting-position/offset/EOF semantics, but reading a live Kinesis stream
-through the AWS SDK. Feature-parity map to the reference
+The engine's one Kinesis reader: it reads a live stream through the AWS SDK,
+and the hermetic ``kinesis_replay`` format (sources/replay.py) is this same
+reader over a file-backed SDK client, so replay tests exercise these offsets,
+positions, pacing, shard close and retry rules. Feature-parity map to the reference
 (mbta/broadway_kinesis), by SURVEY.md §2.A row:
 
 - A1: enhanced-fan-out subscribe — when ``consumerArn`` is set, executors

@@ -1,5 +1,5 @@
-"""`kinesis_replay` — file-drop replay streaming source (hermetic twin of the
-Kinesis EFO source; the engine's FakeKinesis, SURVEY.md §5).
+"""`kinesis_replay` — the `kinesis_efo` source over a directory of shard files
+(hermetic FakeKinesis twin, SURVEY.md §5).
 
 Layout: a directory with one JSONL file per shard (``<shard_id>.jsonl``).
 Each line is one SubscribeToShardEvent in the exact JSON shapes the
@@ -9,231 +9,190 @@ reference's test server encodes (FIXTURES.md §A / `fake_kinesis.ex:28-42`):
      "Records": [{"Data": "<base64>", "SequenceNumber": "2",
                   "PartitionKey": "pk", "ApproximateArrivalTimestamp": 1.7e9}],
      "MillisBehindLatest": 0}
+    {"ExceptionType": "ResourceInUseException", "message": "..."}
     {"ContinuationSequenceNumber": null}        # shard-close sentinel
 
-Semantics carried over from the reference, re-expressed on Spark's
-pull-based micro-batch offset contract:
+There is one streaming reader: ``format("kinesis_replay")`` returns
+:class:`~broadway_kinesis_spark.sources.kinesis_efo.KinesisEfoStreamReader`
+with :class:`ReplayKinesisClient` as its ``clientFactory``, so offsets
+(sequence cursors), the five starting positions, ``maxRecordsPerBatch``
+pacing (records per shard per batch, default 10,000), shard close and the
+A10 retry taxonomy are the production reader's. The client maps the file
+onto the SDK calls that reader makes:
 
-- **Offsets (A6)**: the checkpoint cursor advances per event; here the
-  offset is ``{shard_id: next_line_index}`` — written to Spark's offset log
-  per batch, committed after the sink succeeds (at-least-once, A14), so a
-  restart replays exactly the uncommitted tail (A15: `startingPosition`
-  seeds only the FIRST run; afterwards the checkpoint owns the cursor).
-- **Starting positions (A2)**: all five variants resolve to a line index in
-  ``initialOffset()`` (`at_sequence_number` matches the line's
-  ContinuationSequenceNumber; `at_timestamp` the first event whose records
-  arrive at/after the given unix time).
-- **Shard close / EOF (A7)**: a null ContinuationSequenceNumber stops the
-  cursor before the sentinel; the shard simply yields no further rows
-  (the reference crashes-and-logs `:closed`; the engine degrades gracefully
-  and `closed_shards()` reports which shards hit EOF).
-- **Bounded batches (A16 — an improvement the reference lacks)**: option
-  ``maxRecordsPerBatch`` caps each shard's per-batch advance, replacing the
-  reference's unbounded push mailbox with pull-based pacing.
-- **Multi-shard (A11 generalized)**: one input partition per shard per
-  batch — the reference's single-shard limitation (`producer.ex:172-173`)
-  becomes the partition axis Spark parallelizes over.
+- ``get_shard_iterator`` resolves a position to an (event, record) index:
+  ``at/after_sequence_number`` match a record's SequenceNumber, else an
+  event's ContinuationSequenceNumber (unknown -> InvalidArgumentException,
+  fatal); ``at_timestamp`` takes the first event with a record arriving
+  at/after T.
+- ``get_records`` answers with at most one record-bearing event, so each
+  row carries its own event's MillisBehindLatest; record-less events are
+  skipped, and an empty answer is the tip (MillisBehindLatest 0). A record
+  without a SequenceNumber takes its event's continuation number.
+- The close sentinel ends the shard: a null NextShardIterator once drained
+  (A7; events after it are never served).
+- An exception event raises a botocore-shaped error carrying its type, so
+  it surfaces at the driver's planning poll through the A10 taxonomy.
 
-Re-subscribe / reconnect (A8/A9/A13) need no state here: each ``read()``
-opens the file fresh, the micro-batch model's equivalent of issuing a new
-subscribe call per batch; transient read errors surface to Spark's task
-retry (`spark.task.maxFailures`), the engine's outer retry loop.
-
-Options: ``path`` (required), ``startingPosition`` (default latest),
-``streamName`` (default: directory name), ``maxRecordsPerBatch``.
+Options: ``path`` (required), ``streamName`` (default: directory name),
+``reconnectDelayMs`` (default 0: a file has no consumer re-registration
+window to outlast), plus every other ``kinesis_efo`` option. Checkpoints
+hold sequence cursors, so checkpoints written by the former line-index
+replay reader do not resume.
 """
 
 from __future__ import annotations
 
 import base64
+import hashlib
 import json
 import os
 from dataclasses import dataclass
-from datetime import datetime, timezone
 
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSource
 
-from broadway_kinesis_spark.streaming.envelope import (
-    ENVELOPE_SCHEMA,
-    parse_starting_position,
-)
+from broadway_kinesis_spark.sources.kinesis_efo import KinesisEfoStreamReader
+from broadway_kinesis_spark.streaming.envelope import ENVELOPE_SCHEMA
 
 
-def _shard_files(path: str) -> dict[str, str]:
-    return {
-        fn[: -len(".jsonl")]: os.path.join(path, fn)
-        for fn in sorted(os.listdir(path))
-        if fn.endswith(".jsonl")
-    }
+class ReplayClientError(Exception):
+    """botocore.ClientError-shaped 4xx: carries the AWS ``__type`` code and
+    HTTP status in ``.response``, which is all the A10 taxonomy
+    (`kinesis_efo._error_code`/`_http_status`) reads."""
 
-
-def _scan(file_path: str) -> list[dict]:
-    with open(file_path, encoding="utf-8") as f:
-        return [json.loads(line) for line in f if line.strip()]
-
-
-class KinesisReplayException(RuntimeError):
-    """Typed stream exception — replay twin of the reference's
-    `:message-type "exception"` dispatch (`subscribe_to_shard.ex:329-337`):
-    the exception type rides in a header, the message in the body."""
-
-    def __init__(self, exception_type: str, message: str):
-        super().__init__(f"{exception_type}: {message}")
-        self.exception_type = exception_type
-
-
-def _open_events(events: list[dict]) -> list[dict]:
-    """Events before the shard-close sentinel (null continuation = EOF, A7).
-
-    Exception events ({"ExceptionType": ..., "message": ...}) stay in the
-    stream — they surface when read() crosses them, not during offset
-    resolution — and do not terminate the scan the way a close sentinel does.
-    """
-    out = []
-    for ev in events:
-        if "ExceptionType" not in ev and ev.get("ContinuationSequenceNumber") is None:
-            break
-        out.append(ev)
-    return out
+    def __init__(self, code: str, message: str):
+        super().__init__(f"{code}: {message}")
+        self.response = {
+            "Error": {"Code": code, "Message": message},
+            "ResponseMetadata": {"HTTPStatusCode": 400},
+        }
 
 
 @dataclass
-class _ShardSlice(InputPartition):
-    shard_id: str
-    file_path: str
-    start: int
-    end: int
-    stream_name: str
+class _Shard:
+    events: list[dict]  # before the close sentinel; exception events kept
+    closed: bool
 
 
-class ReplayStreamReader(DataSourceStreamReader):
-    def __init__(self, schema, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("kinesis_replay requires .option('path', <dir>)")
-        self.stream_name = options.get("streamName") or os.path.basename(
-            self.path.rstrip("/")
-        )
-        self.position = parse_starting_position(options.get("startingPosition"))
-        mrb = options.get("maxRecordsPerBatch")
-        self.max_per_batch = int(mrb) if mrb else None
+#: path -> (content md5, parsed shard). The engine builds a client per
+#: reader and per partition read, so each file parses (json + base64) at
+#: most once per process per content version. The key hashes the bytes,
+#: not (mtime, size): a same-length rewrite within the filesystem's mtime
+#: granularity must not serve stale records.
+_PARSE_CACHE: dict[str, tuple[str, _Shard]] = {}
 
-    # -- offset resolution ------------------------------------------------
 
-    def _resolve_start(self, events: list[dict]) -> int:
-        pos = self.position
-        if pos.kind == "trim_horizon":
-            return 0
-        if pos.kind == "latest":
-            return len(events)
-        if pos.kind in ("at_sequence_number", "after_sequence_number"):
-            for i, ev in enumerate(events):
-                if str(ev.get("ContinuationSequenceNumber")) == pos.value:
-                    return i if pos.kind == "at_sequence_number" else i + 1
-            raise ValueError(
-                f"sequence number {pos.value!r} not found in shard "
-                f"(replay twin of AWS's invalid-position error)"
-            )
-        # at_timestamp: first event with any record arriving at/after T
-        t = float(pos.value)
-        for i, ev in enumerate(events):
-            arrivals = [
-                r.get("ApproximateArrivalTimestamp")
-                for r in ev.get("Records", [])
-                if r.get("ApproximateArrivalTimestamp") is not None
-            ]
-            if arrivals and max(arrivals) >= t:
-                return i
-        return len(events)
-
-    def initialOffset(self) -> dict:
-        return {
-            shard: self._resolve_start(_open_events(_scan(fp)))
-            for shard, fp in _shard_files(self.path).items()
-        }
-
-    def latestOffset(self) -> dict:
-        # Pacing base = the furthest position we know was reached. Spark may
-        # call latestOffset BEFORE initialOffset (offset prefetch), so an
-        # unknown base falls back to the resolved starting position — never
-        # to "everything", which would blow the cap on batch one and (since
-        # MicroBatchExecution triggers on offset INEQUALITY) could plan a
-        # backwards batch and re-deliver rows. Restart caveat: the base
-        # resets to the starting position, so with pacing enabled the first
-        # post-restart batches may lag (and replay) until the base catches
-        # the checkpoint — at-least-once holds; leave maxRecordsPerBatch
-        # unset if the sink cannot tolerate replays across restarts.
-        # NOTE: the base is advanced ONLY in partitions() (when a batch is
-        # actually planned) — Spark calls latestOffset more often than it
-        # plans batches (offset prefetch at start, idle polls), and advancing
-        # per call would let one batch span several caps' worth of events.
-        out = {}
-        base = getattr(self, "_last_end", None)
-        for shard, fp in _shard_files(self.path).items():
-            events = _open_events(_scan(fp))
-            n = len(events)
-            if self.max_per_batch is not None:
-                at = base.get(shard) if base else None
-                if at is None:
-                    at = self._resolve_start(events)
-                n = min(n, at + self.max_per_batch)
-            if base and shard in base:
-                n = max(n, base[shard])
-            out[shard] = n
-        return out
-
-    def partitions(self, start: dict, end: dict):
-        files = _shard_files(self.path)
-        # Learn true batch bounds (covers checkpoint restarts, where the
-        # engine replans from the offset log without calling initialOffset).
-        known = getattr(self, "_last_end", None) or {}
-        self._last_end = {
-            s: max(known.get(s, 0), start.get(s, 0), end.get(s, 0)) for s in set(known) | set(end)
-        }
-        parts = [
-            _ShardSlice(shard, files[shard], start.get(shard, 0), end[shard], self.stream_name)
-            for shard in end
-            if shard in files and end[shard] > start.get(shard, 0)
-        ]
-        return parts
-
-    def read(self, partition: _ShardSlice):
-        events = _open_events(_scan(partition.file_path))
-        for ev in events[partition.start : partition.end]:
-            if "ExceptionType" in ev:
-                # A5/A10: typed stream exception -> raise; Spark's task retry
-                # and query restart are the engine's retry loop. A replay
-                # fixture's exception is persistent by construction, so the
-                # query fails deterministically — that's the point (tests
-                # the error path); the live source classifies and retries
-                # transient errors instead (kinesis_efo._call_with_retry).
-                raise KinesisReplayException(
-                    ev["ExceptionType"], ev.get("message", "")
-                )
+def _parse(lines) -> _Shard:
+    events = []
+    for line in lines:
+        if not line.strip():
+            continue
+        ev = json.loads(line)
+        if "ExceptionType" not in ev:
             csn = ev.get("ContinuationSequenceNumber")
-            millis = ev.get("MillisBehindLatest")
-            for rec in ev.get("Records", []):
-                data = rec.get("Data")
-                arrival = rec.get("ApproximateArrivalTimestamp")
-                yield (
-                    str(rec.get("SequenceNumber", csn)),
-                    rec.get("PartitionKey"),
-                    (
-                        datetime.fromtimestamp(arrival, tz=timezone.utc).replace(tzinfo=None)
-                        if arrival is not None
-                        else None
-                    ),
-                    base64.b64decode(data) if data is not None else None,
-                    partition.shard_id,
-                    partition.stream_name,
-                    int(millis) if millis is not None else None,
-                )
+            if csn is None:
+                return _Shard(events, closed=True)
+            ev["ContinuationSequenceNumber"] = csn = str(csn)
+            for r in ev.setdefault("Records", []):
+                r["SequenceNumber"] = str(r.get("SequenceNumber", csn))
+                if r.get("Data") is not None:
+                    r["Data"] = base64.b64decode(r["Data"])
+        events.append(ev)
+    return _Shard(events, closed=False)
 
-    def commit(self, end: dict) -> None:
-        # Offsets live in Spark's checkpoint (offset log + commit log); the
-        # replay files need no server-side ack — parity with A15 where the
-        # checkpoint, not the source, owns the resume position.
-        pass
+
+def _load(path: str) -> _Shard:
+    with open(path, "rb") as f:
+        raw = f.read()
+    digest = hashlib.md5(raw).hexdigest()
+    hit = _PARSE_CACHE.get(path)
+    if hit is None or hit[0] != digest:
+        hit = _PARSE_CACHE[path] = (digest, _parse(raw.decode("utf-8").splitlines()))
+    return hit[1]
+
+
+def _start(events: list[dict], kind: str, seq: str | None = None, ts: float | None = None):
+    """(event, record) index where an iterator of type ``kind`` starts."""
+    if kind == "TRIM_HORIZON":
+        return 0, 0
+    if kind == "LATEST":
+        return len(events), 0
+    if kind == "AT_TIMESTAMP":
+        for i, ev in enumerate(events):
+            arrivals = [r.get("ApproximateArrivalTimestamp") for r in ev.get("Records", [])]
+            if any(a is not None and a >= ts for a in arrivals):
+                return i, 0
+        return len(events), 0
+    after = kind == "AFTER_SEQUENCE_NUMBER"
+    for i, ev in enumerate(events):
+        seqs = [r["SequenceNumber"] for r in ev.get("Records", [])]
+        if seq in seqs:
+            j = seqs.index(seq) + after
+            return (i, j) if j < len(seqs) else (i + 1, 0)
+        if ev.get("ContinuationSequenceNumber") == seq:
+            return i + after, 0
+    raise ReplayClientError(
+        "InvalidArgumentException", f"sequence number {seq!r} not found in shard"
+    )
+
+
+class ReplayKinesisClient:
+    """The SDK subset ``kinesis_efo`` polls with (list_shards /
+    get_shard_iterator / get_records), served from ``<shard_id>.jsonl``
+    files. Iterators are ``<shard_id>:<event>:<record>``. A client re-reads
+    a shard file when it resolves an iterator and when a read reaches the
+    end of what it last saw; shard files are append-only streams."""
+
+    def __init__(self, data_dir: str):
+        self.data_dir = data_dir
+        self._seen: dict[str, _Shard] = {}
+
+    def shard(self, shard_id: str) -> _Shard:
+        self._seen[shard_id] = _load(os.path.join(self.data_dir, f"{shard_id}.jsonl"))
+        return self._seen[shard_id]
+
+    def list_shards(self, **kw):
+        names = sorted(
+            fn[: -len(".jsonl")] for fn in os.listdir(self.data_dir) if fn.endswith(".jsonl")
+        )
+        return {"Shards": [{"ShardId": s} for s in names]}
+
+    def get_shard_iterator(
+        self, StreamName, ShardId, ShardIteratorType, StartingSequenceNumber=None, Timestamp=None
+    ):
+        events = self.shard(ShardId).events
+        i, j = _start(events, ShardIteratorType, StartingSequenceNumber, Timestamp)
+        return {"ShardIterator": f"{ShardId}:{i}:{j}"}
+
+    def get_records(self, ShardIterator, Limit=10_000):
+        shard_id, i, j = ShardIterator.rsplit(":", 2)
+        i, j = int(i), int(j)
+        shard = self._seen.get(shard_id)
+        if shard is None or i >= len(shard.events):
+            shard = self.shard(shard_id)
+        for i in range(i, len(shard.events)):
+            ev = shard.events[i]
+            if "ExceptionType" in ev:
+                raise ReplayClientError(ev["ExceptionType"], ev.get("message", ""))
+            recs = ev["Records"][j : j + Limit]
+            if recs:
+                lag = ev.get("MillisBehindLatest")
+                j += len(recs)
+                if j == len(ev["Records"]):
+                    i, j = i + 1, 0
+                nxt = f"{shard_id}:{i}:{j}"
+                return {"Records": recs, "NextShardIterator": nxt, "MillisBehindLatest": lag}
+            j = 0
+        return {
+            "Records": [],
+            "NextShardIterator": None if shard.closed else f"{shard_id}:{len(shard.events)}:0",
+            "MillisBehindLatest": 0,
+        }
+
+
+def client(options: dict) -> ReplayKinesisClient:
+    """``clientFactory`` entry point (options arrive lower-cased)."""
+    return ReplayKinesisClient(options["path"])
 
 
 class ReplayDataSource(DataSource):
@@ -251,20 +210,19 @@ class ReplayDataSource(DataSource):
         return ENVELOPE_SCHEMA
 
     def streamReader(self, schema):
-        return ReplayStreamReader(schema, self.options)
+        path = self.options.get("path")
+        if not path:
+            raise ValueError("kinesis_replay requires .option('path', <dir>)")
+        options = {
+            "streamname": os.path.basename(path.rstrip("/")),
+            "reconnectdelayms": "0",
+            **{str(k).lower(): v for k, v in self.options.items()},
+            "clientfactory": f"{__name__}:client",
+        }
+        return KinesisEfoStreamReader(schema, options)
 
 
 def closed_shards(path: str) -> list[str]:
     """Shards whose stream hit the close sentinel (split/merge EOF, A7)."""
-    out = []
-    for shard, fp in _shard_files(path).items():
-        events = _scan(fp)
-        # Exception events carry no ContinuationSequenceNumber either —
-        # only a non-exception event with a null continuation is the
-        # split/merge EOF sentinel (mirrors _open_events' exclusion).
-        if any(
-            "ExceptionType" not in ev and ev.get("ContinuationSequenceNumber") is None
-            for ev in events
-        ):
-            out.append(shard)
-    return sorted(out)
+    cli = ReplayKinesisClient(path)
+    return [s["ShardId"] for s in cli.list_shards()["Shards"] if cli.shard(s["ShardId"]).closed]

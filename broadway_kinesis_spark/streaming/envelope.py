@@ -22,6 +22,7 @@ actors).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql.types import (
@@ -75,6 +76,13 @@ class StartingPosition:
         }
 
 
+def _is_unix_seconds(s: str) -> bool:
+    try:
+        return math.isfinite(float(s))
+    except ValueError:
+        return False
+
+
 def parse_starting_position(raw: str | None) -> StartingPosition:
     """Parse the ``startingPosition`` option (default: latest, matching the
     reference's default resume position, `producer.ex:209-210`)."""
@@ -84,8 +92,10 @@ def parse_starting_position(raw: str | None) -> StartingPosition:
     if s in _SIMPLE:
         return StartingPosition(s)
     head, sep, tail = raw.strip().partition(":")
-    if sep and head.lower() in _PARAM and tail != "":
-        return StartingPosition(head.lower(), tail)
+    kind = head.lower()
+    if sep and kind in _PARAM and tail != "":
+        if kind != "at_timestamp" or _is_unix_seconds(tail):
+            return StartingPosition(kind, tail)
     raise ValueError(
         f"invalid startingPosition {raw!r}: expected latest | trim_horizon | "
         "at_sequence_number:<seq> | after_sequence_number:<seq> | at_timestamp:<unix-seconds>"

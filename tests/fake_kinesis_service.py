@@ -4,105 +4,31 @@ PYTHONPATH, set pre-JVM in conftest).
 
 This is what makes hermetic END-TO-END streaming tests of the `kinesis_efo`
 source possible: the source's `clientFactory` option carries the dotted path
-`tests.fake_kinesis_service:factory`, each process imports it independently,
-and every instance reconstructs an identical in-memory stream from the JSON
-shard files under ``options["fakeDataDir"]`` — the same trick the replay
-source uses, but speaking the SDK surface (list_shards / get_shard_iterator /
-get_records / subscribe_to_shard) instead of raw envelope files.
+`tests.fake_kinesis_service:factory`, and each process rebuilds the stream
+from the replay-format shard files (``<shard_id>.jsonl``) under
+``options["fakeDataDir"]`` through the package's
+:class:`~broadway_kinesis_spark.sources.replay.ReplayKinesisClient`. This
+subclass adds only the test hooks:
 
-Calls are appended to ``options["callLogDir"]/calls.log`` (one line per SDK
-call, prefixed by pid) so tests can assert WHICH API served the data and
-from which side of the driver/executor boundary.
+- every SDK call is appended to ``options["callLogDir"]/calls.log`` (one
+  line per call, prefixed by pid) so tests can assert WHICH API served the
+  data and from which side of the driver/executor boundary;
+- ``subscribe_to_shard`` serves the EFO push path as one event holding the
+  rest of the shard;
+- a ``consumer.expired`` marker file makes that subscribe call fail.
 """
 
 from __future__ import annotations
 
-import base64
-import json
 import os
 
-#: process-level parse cache keyed by (path, content_md5): the engine
-#: constructs a fresh client per partition read, and the old eager
-#: _load_shards made every construction re-parse EVERY shard file — an
-#: O(shards x polls x file) cost that dominated the 16-32-shard ingest
-#: scaling rows and measured the double, not the engine (VERDICT r4 #9 /
-#: BASELINE.md round-4 caveat). Shards now parse lazily (only the shard a
-#: call touches) and at most once per process per file version. The key
-#: hashes the BYTES, not (mtime_ns, size): an in-place rewrite of identical
-#: length landing within the filesystem's mtime granularity would have
-#: served stale records under a stat-based key (ADVICE r5) — fixture files
-#: are small, so the re-read+md5 per construction is cheap while the parse
-#: (json + per-record base64) it avoids is the expensive part.
-_PARSE_CACHE: dict[tuple[str, str], list[dict]] = {}
+from broadway_kinesis_spark.sources.replay import ReplayClientError, ReplayKinesisClient, _start
 
 
-def _load_shard_file(path: str) -> list[dict]:
-    import hashlib
-
-    with open(path, "rb") as f:
-        raw = f.read()
-    key = (path, hashlib.md5(raw).hexdigest())
-    cached = _PARSE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    recs = json.loads(raw.decode("utf-8"))
-    for r in recs:
-        if isinstance(r.get("Data"), str):
-            r["Data"] = base64.b64decode(r["Data"])
-    # drop stale versions of this path before inserting the fresh one
-    for k in [k for k in _PARSE_CACHE if k[0] == path]:
-        del _PARSE_CACHE[k]
-    _PARSE_CACHE[key] = recs
-    return recs
-
-
-class FakeClientError(Exception):
-    """botocore.ClientError-shaped: carries the parsed AWS ``__type`` code
-    and HTTP status in ``.response``, which is all the source's A10 taxonomy
-    (`kinesis_efo._error_code`/`_http_status`) reads."""
-
-    def __init__(self, code: str, message: str, status: int = 400):
-        super().__init__(f"{code}: {message}")
-        self.response = {
-            "Error": {"Code": code, "Message": message},
-            "ResponseMetadata": {"HTTPStatusCode": status},
-        }
-
-
-class _LazyShards:
-    """dict-like view that parses a shard's file only when that shard is
-    actually read (and then from the process cache)."""
-
-    def __init__(self, data_dir: str):
-        self._dir = data_dir
-
-    def _names(self) -> list[str]:
-        return sorted(
-            fn[: -len(".json")]
-            for fn in os.listdir(self._dir)
-            if fn.endswith(".json")
-        )
-
-    def __iter__(self):
-        return iter(self._names())
-
-    def __getitem__(self, shard_id: str) -> list[dict]:
-        path = os.path.join(self._dir, f"{shard_id}.json")
-        if not os.path.isfile(path):
-            raise KeyError(shard_id)
-        return _load_shard_file(path)
-
-
-class FileBackedKinesisClient:
+class FileBackedKinesisClient(ReplayKinesisClient):
     def __init__(self, data_dir: str, call_log_dir: str | None = None):
-        self.data_dir = data_dir
-        self.shards = _LazyShards(data_dir)
+        super().__init__(data_dir)
         self.call_log = os.path.join(call_log_dir, "calls.log") if call_log_dir else None
-
-    def _closed(self, shard_id: str) -> bool:
-        """A `{shard}.closed` marker file = the shard was split/merged away
-        (A7): get_records returns a null NextShardIterator once drained."""
-        return os.path.exists(os.path.join(self.data_dir, f"{shard_id}.closed"))
 
     def _log(self, method: str) -> None:
         if self.call_log:
@@ -111,73 +37,40 @@ class FileBackedKinesisClient:
 
     def list_shards(self, **kw):
         self._log("list_shards")
-        return {"Shards": [{"ShardId": s} for s in self.shards]}
-
-    def _index(self, recs, kind: str, seq: str | None = None, ts: float | None = None) -> int:
-        if kind == "TRIM_HORIZON":
-            return 0
-        if kind == "LATEST":
-            return len(recs)
-        if kind == "AT_TIMESTAMP":
-            return next(
-                (i for i, r in enumerate(recs) if r["ApproximateArrivalTimestamp"] >= ts),
-                len(recs),
-            )
-        idx = next(i for i, r in enumerate(recs) if r["SequenceNumber"] == seq)
-        return idx + 1 if kind == "AFTER_SEQUENCE_NUMBER" else idx
+        return super().list_shards(**kw)
 
     def get_shard_iterator(self, StreamName, ShardId, ShardIteratorType, **kw):
         self._log(f"get_shard_iterator:{ShardIteratorType}")
-        idx = self._index(
-            self.shards[ShardId],
-            ShardIteratorType,
-            seq=kw.get("StartingSequenceNumber"),
-            ts=kw.get("Timestamp"),
-        )
-        return {"ShardIterator": f"{ShardId}:{idx}"}
+        return super().get_shard_iterator(StreamName, ShardId, ShardIteratorType, **kw)
 
     def get_records(self, ShardIterator, Limit=10_000):
         self._log("get_records")
-        shard_id, idx = ShardIterator.rsplit(":", 1)
-        recs = self.shards[shard_id]
-        out = recs[int(idx) : int(idx) + Limit]
-        nxt = int(idx) + len(out)
-        drained_and_closed = nxt >= len(recs) and self._closed(shard_id)
-        return {
-            "Records": out,
-            "NextShardIterator": None if drained_and_closed else f"{shard_id}:{nxt}",
-            "MillisBehindLatest": 0,
-        }
+        return super().get_records(ShardIterator, Limit)
 
     def subscribe_to_shard(self, ConsumerARN, ShardId, StartingPosition):
         self._log(f"subscribe_to_shard:{ShardId}")
-        # An `consumer.expired` marker = the EFO consumer was deregistered /
+        # A `consumer.expired` marker = the EFO consumer was deregistered /
         # its ARN expired: AWS answers the subscribe call with a 4xx
         # ResourceNotFoundException (the reference surfaces these as fatal
         # AWS-typed errors, subscribe_to_shard.ex:250-269 / test :249-281).
         if os.path.exists(os.path.join(self.data_dir, "consumer.expired")):
-            raise FakeClientError(
-                "ResourceNotFoundException",
-                f"Consumer {ConsumerARN} not found.",
-                status=400,
+            raise ReplayClientError(
+                "ResourceNotFoundException", f"Consumer {ConsumerARN} not found."
             )
-        recs = self.shards[ShardId]
-        idx = self._index(
-            recs,
+        shard = self.shard(ShardId)
+        i, j = _start(
+            shard.events,
             StartingPosition["Type"],
-            seq=StartingPosition.get("SequenceNumber"),
-            ts=StartingPosition.get("Timestamp"),
+            StartingPosition.get("SequenceNumber"),
+            StartingPosition.get("Timestamp"),
         )
-        out = recs[idx:]
+        out = [r for ev in shard.events[i:] for r in ev.get("Records", [])][j:]
         # A closed (split/merged-away) shard ends its subscription with a
         # null continuation after the remaining records (A7 on the push path).
-        closed = self._closed(ShardId)
         ev = {
             "Records": out,
             "ContinuationSequenceNumber": (
-                None
-                if closed
-                else (out[-1]["SequenceNumber"] if out else "tip")
+                None if shard.closed else (out[-1]["SequenceNumber"] if out else "tip")
             ),
             "MillisBehindLatest": 0,
         }

@@ -254,41 +254,36 @@ def test_corpus_sig_tracks_file_identity_and_version(tmp_path):
 
 
 def test_fake_client_cache_invalidates_on_rewrite(tmp_path):
-    from tests.fake_kinesis_service import FileBackedKinesisClient
+    from broadway_kinesis_spark.sources.replay import ReplayKinesisClient
 
     d = str(tmp_path)
 
     def write(n):
-        with open(os.path.join(d, "shard-0001.json"), "w", encoding="utf-8") as f:
-            json.dump(
-                [
-                    {
-                        "SequenceNumber": str(i),
-                        "PartitionKey": "k",
-                        "Data": "aGk=",  # "hi"
-                        "ApproximateArrivalTimestamp": 1000.0 + i,
-                    }
-                    for i in range(n)
-                ],
-                f,
-            )
+        with open(os.path.join(d, "shard-0001.jsonl"), "w", encoding="utf-8") as f:
+            for i in range(n):
+                rec = {
+                    "SequenceNumber": str(i),
+                    "PartitionKey": "k",
+                    "Data": "aGk=",  # "hi"
+                    "ApproximateArrivalTimestamp": 1000.0 + i,
+                }
+                f.write(json.dumps({"ContinuationSequenceNumber": str(i), "Records": [rec]}) + "\n")
 
     write(2)
-    c1 = FileBackedKinesisClient(d)
-    assert len(c1.shards["shard-0001"]) == 2
+    c1 = ReplayKinesisClient(d)
+    assert len(c1.shard("shard-0001").events) == 2
     # second client in the same process: served from the parse cache
-    c2 = FileBackedKinesisClient(d)
-    assert c2.shards["shard-0001"] is c1.shards["shard-0001"]
+    c2 = ReplayKinesisClient(d)
+    assert c2.shard("shard-0001") is c1.shard("shard-0001")
     # rewritten fixture (different size) must invalidate
     write(5)
-    c3 = FileBackedKinesisClient(d)
-    recs = c3.shards["shard-0001"]
-    assert len(recs) == 5
-    assert recs[0]["Data"] == b"hi"  # decode still applied on fresh parse
-    # lazy: a shard file that appears AFTER construction is visible
-    with open(os.path.join(d, "shard-0002.json"), "w", encoding="utf-8") as f:
-        json.dump([], f)
-    assert "shard-0002" in list(c3.shards)
+    c3 = ReplayKinesisClient(d)
+    events = c3.shard("shard-0001").events
+    assert len(events) == 5
+    assert events[0]["Records"][0]["Data"] == b"hi"  # decode still applied on fresh parse
+    # a shard file that appears AFTER construction is visible
+    open(os.path.join(d, "shard-0002.jsonl"), "w").close()
+    assert "shard-0002" in [s["ShardId"] for s in c3.list_shards()["Shards"]]
 
 
 # --------------------------------------------------- warehouse retention

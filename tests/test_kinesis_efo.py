@@ -110,22 +110,12 @@ class FakeKinesisClient:
     def get_shard_iterator(self, StreamName, ShardId, ShardIteratorType, **kw):
         self.calls.append(f"get_shard_iterator:{ShardIteratorType}")
         self._maybe_fail()
-        recs = self.shards[ShardId]
-        if ShardIteratorType == "TRIM_HORIZON":
-            idx = 0
-        elif ShardIteratorType == "LATEST":
-            idx = len(recs)
-        elif ShardIteratorType in ("AT_SEQUENCE_NUMBER", "AFTER_SEQUENCE_NUMBER"):
-            seq = kw["StartingSequenceNumber"]
-            idx = next(i for i, r in enumerate(recs) if r["SequenceNumber"] == seq)
-            if ShardIteratorType == "AFTER_SEQUENCE_NUMBER":
-                idx += 1
-        elif ShardIteratorType == "AT_TIMESTAMP":
-            t = kw["Timestamp"]
-            idx = next(
-                (i for i, r in enumerate(recs) if r["ApproximateArrivalTimestamp"] >= t),
-                len(recs),
-            )
+        pos = {
+            "Type": ShardIteratorType,
+            "SequenceNumber": kw.get("StartingSequenceNumber"),
+            "Timestamp": kw.get("Timestamp"),
+        }
+        idx = self._index_for(self.shards[ShardId], pos)
         return {"ShardIterator": f"{ShardId}:{idx}"}
 
     def get_records(self, ShardIterator, Limit=10000):

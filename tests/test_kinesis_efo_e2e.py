@@ -20,17 +20,22 @@ FACTORY = "tests.fake_kinesis_service:factory"
 
 def write_fake_shard(data_dir: str, shard: str, recs: list[tuple[int, bytes]]) -> None:
     os.makedirs(data_dir, exist_ok=True)
-    payload = [
-        {
-            "SequenceNumber": str(seq),
-            "PartitionKey": "pk",
-            "Data": base64.b64encode(data).decode(),
-            "ApproximateArrivalTimestamp": 1000.0 + seq,
-        }
-        for seq, data in recs
-    ]
-    with open(os.path.join(data_dir, f"{shard}.json"), "w", encoding="utf-8") as f:
-        json.dump(payload, f)
+    with open(os.path.join(data_dir, f"{shard}.jsonl"), "w", encoding="utf-8") as f:
+        for seq, data in recs:
+            rec = {
+                "SequenceNumber": str(seq),
+                "PartitionKey": "pk",
+                "Data": base64.b64encode(data).decode(),
+                "ApproximateArrivalTimestamp": 1000.0 + seq,
+            }
+            ev = {"ContinuationSequenceNumber": str(seq), "Records": [rec], "MillisBehindLatest": 0}
+            f.write(json.dumps(ev) + "\n")
+
+
+def close_fake_shard(data_dir: str, shard: str) -> None:
+    """Split/merge the shard away (A7): append the close sentinel."""
+    with open(os.path.join(data_dir, f"{shard}.jsonl"), "a", encoding="utf-8") as f:
+        f.write(json.dumps({"ContinuationSequenceNumber": None}) + "\n")
 
 
 def run_query(spark, tmp_path, **extra_opts):
@@ -133,7 +138,7 @@ def test_e2e_shard_split_discovers_child_and_stops_parent(spark, tmp_path):
     rows1, _ = run_query(spark, tmp_path)
     assert sorted(bytes(r.data) for r in rows1) == [b"p1", b"p2"]
 
-    open(os.path.join(d, "shard-p.closed"), "w").close()
+    close_fake_shard(d, "shard-p")
     write_fake_shard(d, "shard-q", [(5, b"q1"), (6, b"q2")])
     rows2, _ = run_query(spark, tmp_path)
     datas = sorted(bytes(r.data) for r in rows2)
@@ -158,7 +163,7 @@ def test_e2e_resharding_on_the_push_path(spark, tmp_path):
     assert any(m == "subscribe_to_shard:shard-p" for _pid, m in calls1)
 
     # The split: parent closes, child appears with the post-split records.
-    open(os.path.join(d, "shard-p.closed"), "w").close()
+    close_fake_shard(d, "shard-p")
     write_fake_shard(d, "shard-q", [(5, b"q1"), (6, b"q2")])
     # calls.log is append-only across runs — truncate so calls2 is run 2 only
     open(os.path.join(str(tmp_path / "calls"), "calls.log"), "w").close()

@@ -1,5 +1,5 @@
-"""Property-based tests (hypothesis) for the engine's pure logic: replay
-offset resolution, starting-position parsing, registry invariants, and
+"""Property-based tests (hypothesis) for the engine's pure logic: the replay
+client's position resolution, starting-position parsing, registry invariants, and
 the round-4 image decoders — the reference's behavior matrix generalized
 from examples to properties."""
 
@@ -11,10 +11,7 @@ import pytest
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
-from broadway_kinesis_spark.sources.replay import (
-    ReplayStreamReader,
-    _open_events,
-)
+from broadway_kinesis_spark.sources.replay import _parse, _start
 from broadway_kinesis_spark.streaming.envelope import parse_starting_position
 from broadway_kinesis_spark.streaming.health import HealthRegistry
 
@@ -47,20 +44,25 @@ events_strategy = st.lists(
 )
 
 
-def make_reader(starting_position: str) -> ReplayStreamReader:
-    r = ReplayStreamReader.__new__(ReplayStreamReader)
-    r.path = "/nonexistent"
-    r.stream_name = "s"
-    r.position = parse_starting_position(starting_position)
-    r.max_per_batch = None
-    return r
+def parse(events: list[dict]):
+    """The replay client's parsed view of a shard file holding ``events``."""
+    return _parse([json.dumps(ev) for ev in events])
+
+
+def start_event(events: list[dict], starting_position: str) -> int:
+    """Event index where the replay client starts an iterator for a
+    ``startingPosition`` (always at that event's first record)."""
+    pos = parse_starting_position(starting_position).wire_format()
+    i, j = _start(parse(events).events, pos["Type"], pos.get("SequenceNumber"), pos.get("Timestamp"))
+    assert j == 0
+    return i
 
 
 @given(events=events_strategy)
 @settings(max_examples=200, deadline=None)
 def test_trim_horizon_and_latest_bracket_every_position(events):
-    lo = make_reader("trim_horizon")._resolve_start(events)
-    hi = make_reader("latest")._resolve_start(events)
+    lo = start_event(events, "trim_horizon")
+    hi = start_event(events, "latest")
     assert lo == 0
     assert hi == len(events)
 
@@ -71,8 +73,8 @@ def test_at_and_after_sequence_number_are_adjacent(events, data):
     assume(events)
     idx = data.draw(st.integers(min_value=0, max_value=len(events) - 1))
     seq = events[idx]["ContinuationSequenceNumber"]
-    at = make_reader(f"at_sequence_number:{seq}")._resolve_start(events)
-    after = make_reader(f"after_sequence_number:{seq}")._resolve_start(events)
+    at = start_event(events, f"at_sequence_number:{seq}")
+    after = start_event(events, f"after_sequence_number:{seq}")
     assert at == idx
     assert after == idx + 1
 
@@ -80,7 +82,7 @@ def test_at_and_after_sequence_number_are_adjacent(events, data):
 @given(events=events_strategy, t=st.floats(min_value=-1, max_value=1e6 + 1, allow_nan=False))
 @settings(max_examples=200, deadline=None)
 def test_at_timestamp_is_earliest_event_at_or_after(events, t):
-    start = make_reader(f"at_timestamp:{t}")._resolve_start(events)
+    start = start_event(events, f"at_timestamp:{t}")
     assert 0 <= start <= len(events)
     # every event before `start` has all records strictly before t
     for ev in events[:start]:
@@ -99,7 +101,9 @@ def test_at_timestamp_is_earliest_event_at_or_after(events, t):
 @settings(max_examples=200, deadline=None)
 def test_close_sentinel_truncates_exactly(events, close_at):
     closed = events[:close_at] + [{"ContinuationSequenceNumber": None}] + events[close_at:]
-    assert _open_events(closed) == events[: min(close_at, len(events))]
+    shard = parse(closed)
+    assert shard.closed
+    assert shard.events == parse(events[: min(close_at, len(events))]).events
 
 
 @given(st.text(min_size=1).filter(lambda s: ":" not in s and s.strip() != ""))

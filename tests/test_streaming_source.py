@@ -1,4 +1,5 @@
-"""Behavioral tests for the `kinesis_replay` streaming source — pytest ports
+"""Behavioral tests for the `kinesis_replay` streaming source (`kinesis_efo`
+over the file-backed replay client) — pytest ports
 of the reference's SubscribeToShard test matrix (SURVEY.md §5):
 
 - starting-position variants     (subscribe_to_shard_test.exs:91-116)
@@ -143,14 +144,30 @@ def test_shard_close_sentinel_stops_delivery(sparkr, tmp_path):
     assert closed_shards(d) == ["s"]
 
 
-def test_max_records_per_batch_paces_batches(sparkr, tmp_path):
-    """A16 improvement: pull-based pacing bounds each micro-batch. Uses a
+def ev_multi(seqs):
+    """One event carrying one record per sequence number."""
+    e = ev(seqs[-1])
+    e["Records"] = [ev(s, f"p{s}".encode())["Records"][0] for s in seqs]
+    return e
+
+
+@pytest.mark.parametrize(
+    "events",
+    [
+        [ev(i, f"p{i}".encode()) for i in range(1, 7)],
+        [ev(1, b"p1"), ev_multi([2, 3, 4]), ev(5, b"p5"), ev(6, b"p6")],
+    ],
+    ids=["one_record_events", "three_record_event"],
+)
+def test_max_records_per_batch_paces_batches(sparkr, tmp_path, events):
+    """A16 improvement: pull-based pacing bounds each micro-batch — in
+    records, so one event larger than the cap still spans batches. Uses a
     processing-time trigger — Spark's availableNow fallback for Python
     sources collapses to a single batch, which would bypass pacing."""
     import time
 
     d = str(tmp_path)
-    write_shard(d, "s", [ev(i, f"p{i}".encode()) for i in range(1, 7)])
+    write_shard(d, "s", events)
     global _QCOUNT
     _QCOUNT += 1
     name = f"replay_sink_{_QCOUNT}"
@@ -282,12 +299,14 @@ def test_invalid_starting_position_rejected():
         parse_starting_position("bogus")
     with pytest.raises(ValueError, match="invalid startingPosition"):
         parse_starting_position("at_sequence_number:")
+    with pytest.raises(ValueError, match="invalid startingPosition"):
+        parse_starting_position("at_timestamp:yesterday")
 
 
 def test_exception_event_does_not_mark_shard_closed(tmp_path):
     """Exception events also lack ContinuationSequenceNumber, but they are
     errors, not split/merge EOF sentinels — closed_shards must not report
-    the shard closed (consistent with _open_events' exclusion)."""
+    the shard closed."""
     d = str(tmp_path)
     write_shard(d, "s", [ev(1, b"a"), {"ExceptionType": "InternalFailureException"}])
     write_shard(d, "s2", [ev(1, b"b"), CLOSED])

@@ -41,17 +41,22 @@ FACTORY = "tests.fake_kinesis_service:factory"
 
 
 def _write_shard(data_dir: str, shard: str, n: int, payload: bytes, base: int) -> None:
-    recs = [
-        {
-            "SequenceNumber": str(base + i),
-            "PartitionKey": "pk",
-            "Data": base64.b64encode(payload).decode(),
-            "ApproximateArrivalTimestamp": 1000.0 + i,
-        }
-        for i in range(n)
-    ]
-    with open(os.path.join(data_dir, f"{shard}.json"), "w", encoding="utf-8") as f:
-        json.dump(recs, f)
+    """One replay event (SubscribeToShardEvent) per record."""
+    data = base64.b64encode(payload).decode()
+    with open(os.path.join(data_dir, f"{shard}.jsonl"), "w", encoding="utf-8") as f:
+        for i in range(n):
+            rec = {
+                "SequenceNumber": str(base + i),
+                "PartitionKey": "pk",
+                "Data": data,
+                "ApproximateArrivalTimestamp": 1000.0 + i,
+            }
+            ev = {
+                "ContinuationSequenceNumber": str(base + i),
+                "Records": [rec],
+                "MillisBehindLatest": 0,
+            }
+            f.write(json.dumps(ev) + "\n")
 
 
 def main() -> None:
