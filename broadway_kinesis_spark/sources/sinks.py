@@ -51,7 +51,13 @@ def write_parquet(
 def stream_to_parquet(df: DataFrame, path: str, checkpoint: str, **trigger):
     """Streaming parquet sink with a checkpoint (the offset/commit WAL that
     replaces the reference's manual resume-position API, A15). Returns the
-    started StreamingQuery; default trigger is availableNow."""
+    started StreamingQuery; default trigger is availableNow.
+
+    For the engine's Python sources (``kinesis_efo``, ``kinesis_replay``)
+    availableNow runs at most ONE micro-batch, which ``maxRecordsPerBatch``
+    caps per shard, so it does not drain a larger backlog. For a full drain
+    pass ``processingTime=...`` and call ``processAllAvailable()`` on the
+    returned query."""
     if not trigger:
         trigger = {"availableNow": True}
     return (

@@ -225,8 +225,6 @@ def _reader_and_partition(end_seq):
         start_seq=None,
         at_seq="1",
         end_seq=end_seq,
-        stream_name="transport-stream",
-        consumer_arn="arn:fake:consumer",
     )
     return reader, part
 

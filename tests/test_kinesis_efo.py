@@ -12,6 +12,8 @@ from broadway_kinesis_spark.sources.kinesis_efo import (
     KinesisEfoStreamReader,
     _call_with_retry,
     _is_transient,
+    _ShardRange,
+    _ShardRanges,
 )
 
 
@@ -171,7 +173,8 @@ def test_latest_offset_finds_tip_and_partitions_plan_ranges():
         "shard-0002": {"seq": "10", "at": "10"},
     }
     parts = r.partitions(start, end)
-    assert sorted((p.shard_id, p.start_seq, p.at_seq, p.end_seq) for p in parts) == [
+    ranges = [rng for task in parts for rng in task.ranges]
+    assert sorted((p.shard_id, p.start_seq, p.at_seq, p.end_seq) for p in ranges) == [
         ("shard-0001", None, "1", "3"),
         ("shard-0002", None, "10", "10"),
     ]
@@ -225,9 +228,8 @@ def test_read_starts_after_previous_cursor(monkeypatch):
     )
     r = make_reader(client, startingPosition="trim_horizon")
     parts = r.partitions({}, {"shard-0001": "3"})
-    part = parts[0]
-    part.start_seq = "1"
-    rows = list(r.read(part))
+    parts[0].ranges[0].start_seq = "1"
+    rows = list(r.read(parts[0]))
     assert [x[0] for x in rows] == ["2", "3"]
     assert "get_shard_iterator:AFTER_SEQUENCE_NUMBER" in client.calls
 
@@ -330,15 +332,8 @@ def test_latest_position_pins_first_polled_sequence(monkeypatch):
 
 
 def efo_part(shard_id="shard-0001", start_seq=None, at_seq="1", end_seq="3", **opts):
-    from broadway_kinesis_spark.sources.kinesis_efo import _ShardRange
-
-    return _ShardRange(
-        shard_id=shard_id,
-        start_seq=start_seq,
-        at_seq=at_seq,
-        end_seq=end_seq,
-        stream_name="test-stream",
-        consumer_arn="arn:aws:kinesis:us-east-1:1:stream/t/consumer/c:1",
+    return _ShardRanges(
+        ranges=(_ShardRange(shard_id, start_seq, at_seq, end_seq),),
         options={
             "streamName": "test-stream",
             "consumerArn": "arn:aws:kinesis:us-east-1:1:stream/t/consumer/c:1",
@@ -570,3 +565,84 @@ def test_subscribe_overshoot_raises(monkeypatch):
     r = make_reader(client)
     with pytest.raises(RuntimeError, match="passed planned end"):
         list(r.read(efo_part(start_seq="1", at_seq=None, end_seq="3")))
+
+
+# -- read-task packing: a batch's small shard ranges share one task ---------
+
+
+FOUR_SHARDS = {f"shard-000{s}": [rec(10 * s + i, f"s{s}r{i}".encode()) for i in (1, 2)] for s in range(4)}
+FOUR_ENDS = {s: {"seq": recs[-1]["SequenceNumber"], "at": recs[0]["SequenceNumber"]} for s, recs in FOUR_SHARDS.items()}
+
+
+def _plan(shards, **opts):
+    r = make_reader(FakeKinesisClient(shards), startingPosition="trim_horizon", **opts)
+    start = r.initialOffset()
+    return r.partitions(start, r.latestOffset())
+
+
+def _shape(parts):
+    return [[rng.shard_id for rng in task.ranges] for task in parts]
+
+
+def test_small_ranges_share_one_task():
+    parts = _plan(FOUR_SHARDS)
+    assert _shape(parts) == [["shard-0000", "shard-0001", "shard-0002", "shard-0003"]]
+    # the cap bounds a task's planned records: 2 + 2 fit in 4, a third does not
+    parts = _plan(FOUR_SHARDS, maxRecordsPerBatch="4")
+    assert _shape(parts) == [["shard-0000", "shard-0001"], ["shard-0002", "shard-0003"]]
+
+
+def test_range_at_the_cap_gets_its_own_task():
+    shards = {
+        "shard-a": [rec(1), rec(2), rec(3)],  # planned range = the cap of 2
+        "shard-b": [rec(10)],
+        "shard-c": [rec(20)],
+    }
+    parts = _plan(shards, maxRecordsPerBatch="2")
+    assert _shape(parts) == [["shard-a"], ["shard-b", "shard-c"]]
+
+
+def test_partitions_without_a_poll_plan_one_task_per_shard():
+    """Restart replay: the batch comes from the offset log, this reader never
+    polled its ranges, so their sizes are unknown and nothing is packed."""
+    r = make_reader(FakeKinesisClient(FOUR_SHARDS), startingPosition="trim_horizon")
+    parts = r.partitions({}, FOUR_ENDS)
+    assert _shape(parts) == [["shard-0000"], ["shard-0001"], ["shard-0002"], ["shard-0003"]]
+
+
+@pytest.mark.parametrize("consumer_arn", [None, "arn:aws:kinesis:us-east-1:1:stream/t/consumer/c:1"])
+def test_multi_range_task_yields_each_exact_range_in_order(monkeypatch, consumer_arn):
+    shards = {s: recs + [rec(int(recs[-1]["SequenceNumber"]) + 1, b"beyond")] for s, recs in FOUR_SHARDS.items()}
+    client = FakeKinesisClient(shards)
+    built = []
+    monkeypatch.setattr(
+        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: built.append(1) or client)
+    )
+    opts = {"streamName": "test-stream", "reconnectDelayMs": "1"}
+    if consumer_arn:
+        opts["consumerArn"] = consumer_arn
+    task = _ShardRanges(
+        ranges=tuple(_ShardRange(s, None, e["at"], e["seq"]) for s, e in FOUR_ENDS.items()),
+        options=opts,
+    )
+    rows = list(make_reader(client).read(task))
+    assert [(x[4], x[0], x[3]) for x in rows] == [
+        (s, r["SequenceNumber"], r["Data"]) for s, recs in FOUR_SHARDS.items() for r in recs
+    ]
+    assert len(built) == 1  # one reader, so one SDK client, for the whole task
+
+
+def test_multi_range_task_raises_on_a_truncated_range(monkeypatch):
+    client = FakeKinesisClient(SHARDS)
+    monkeypatch.setattr(
+        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
+    )
+    task = _ShardRanges(
+        ranges=(_ShardRange("shard-0001", None, "1", "3"), _ShardRange("shard-0002", None, "10", "11")),
+        options={"streamName": "test-stream", "reconnectDelayMs": "1"},
+    )
+    rows = []
+    with pytest.raises(RuntimeError, match="planned end '11' not reached on shard-0002"):
+        for row in make_reader(client).read(task):
+            rows.append(row)
+    assert [x[0] for x in rows] == ["1", "2", "3"]  # the intact range came first

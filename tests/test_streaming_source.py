@@ -196,6 +196,39 @@ def test_max_records_per_batch_paces_batches(sparkr, tmp_path, events):
     assert len(batch_rows) >= 3
 
 
+def _read_tasks(spark, query) -> list[int]:
+    """Tasks of each stage the query's micro-batches ran (its job group is
+    its run id)."""
+    tracker = spark.sparkContext.statusTracker()
+    out = []
+    for job in sorted(tracker.getJobIdsForGroup(str(query.runId))):
+        for sid in tracker.getJobInfo(job).stageIds:
+            out.append(tracker.getStageInfo(sid).numTasks)
+    return out
+
+
+@pytest.mark.parametrize("max_per_batch,tasks", [(None, 1), (3, 4)], ids=["packed", "at_cap"])
+def test_small_shard_ranges_share_one_read_task(sparkr, tmp_path, max_per_batch, tasks):
+    """Four small shards: one micro-batch reads all their ranges in ONE task,
+    each record exactly once. Ranges that equal the cap are not packed."""
+    global _QCOUNT
+    _QCOUNT += 1
+    name = f"replay_sink_{_QCOUNT}"
+    d = str(tmp_path)
+    for s in range(4):
+        write_shard(d, f"shard-{s}", [ev(i, f"s{s}-{i}".encode()) for i in (1, 2, 3)])
+    reader = sparkr.readStream.format("kinesis_replay").option("path", d)
+    reader = reader.option("startingPosition", "trim_horizon")
+    if max_per_batch is not None:
+        reader = reader.option("maxRecordsPerBatch", str(max_per_batch))
+    q = reader.load().writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
+    assert q.awaitTermination(120), "stream did not finish in time"
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [12]
+    assert _read_tasks(sparkr, q) == [tasks]
+    keys = [(r.shard_id, r.sequence_number) for r in sparkr.sql(f"SELECT * FROM {name}").collect()]
+    assert sorted(keys) == [(f"shard-{s}", str(i)) for s in range(4) for i in (1, 2, 3)]
+
+
 def test_restart_resumes_from_checkpoint_not_starting_position(sparkr, tmp_path):
     """The checkpoint owns the cursor after the first run (A6/A15): appended
     events — and only they — arrive on restart, even though

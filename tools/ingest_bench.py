@@ -12,7 +12,13 @@ reference's — is quota-bound, not engine-bound, and extra shards scale
 linearly across executors.
 
 Prints ONE JSON line:
-    {"metric": "ingest_throughput", "mb_per_s": N, "records_per_s": N, ...}
+    {"metric": "ingest_throughput", "mb_per_s": N, "records_per_s": N,
+     "read_tasks_per_batch": N, ...}
+
+``read_tasks_per_batch`` is the Spark tasks the query's micro-batches ran
+(its job group is its run id), per batch that read records: the source packs
+small shard ranges into shared read tasks, up to ``maxRecordsPerBatch``
+records each.
 
 Sizing via env: INGEST_SHARDS (default 8), INGEST_RECORDS per shard
 (default 4000), INGEST_PAYLOAD bytes per record (default 1024).
@@ -57,6 +63,16 @@ def _write_shard(data_dir: str, shard: str, n: int, payload: bytes, base: int) -
                 "MillisBehindLatest": 0,
             }
             f.write(json.dumps(ev) + "\n")
+
+
+def _tasks_per_batch(spark, q) -> float:
+    tracker = spark.sparkContext.statusTracker()
+    tasks = 0
+    for job in tracker.getJobIdsForGroup(str(q.runId)):
+        for sid in tracker.getJobInfo(job).stageIds:
+            tasks += tracker.getStageInfo(sid).numTasks
+    batches = sum(1 for p in q.recentProgress if p["numInputRows"])
+    return tasks / max(batches, 1)
 
 
 def main() -> None:
@@ -115,6 +131,7 @@ def main() -> None:
                 {
                     "metric": "ingest_throughput",
                     "mb_per_s": round(total_bytes / wall / 1e6, 2),
+                    "read_tasks_per_batch": _tasks_per_batch(spark, q),
                     "records_per_s": round(expect / wall),
                     "records": expect,
                     "payload_bytes": psize,
