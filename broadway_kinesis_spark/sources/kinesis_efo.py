@@ -6,9 +6,9 @@ reader over a file-backed SDK client, so replay tests exercise these offsets,
 positions, pacing, shard close and retry rules. Feature-parity map to the reference
 (mbta/broadway_kinesis), by SURVEY.md §2.A row:
 
-- A1: enhanced-fan-out subscribe — when ``consumerArn`` is set, executors
-  consume the planned range over ``subscribe_to_shard``'s HTTP/2 push event
-  stream (`subscribe_to_shard.ex:25,87-108`): dedicated 2 MB/s/consumer
+- A1: enhanced-fan-out subscribe — when ``consumerArn`` is set, records
+  arrive over ``subscribe_to_shard``'s HTTP/2 push event stream
+  (`subscribe_to_shard.ex:25,87-108`): dedicated 2 MB/s/consumer
   throughput instead of the shared 5-reads/sec GetRecords quota. Without a
   consumer ARN the source falls back to polling ``get_records`` (the same
   envelope rows either way).
@@ -21,17 +21,19 @@ positions, pacing, shard close and retry rules. Feature-parity map to the refere
 - A6: per-shard continuation cursor -> the stream offset is
   ``{shard_id: {"seq": last, "at": first}}``; Spark's offset/commit logs
   replace the manual resume API (A15, ``producer.ex:196-218``). The ``at``
-  pin records the CONCRETE first sequence number of each planned range so
-  executor reads never re-resolve a floating position (LATEST at task time
-  would point at the then-current tip — silent loss on the first batch).
+  pin records the CONCRETE first sequence number of each batch's range so
+  a replayed batch never re-resolves a floating position (LATEST at replay
+  time would point at the then-current tip — silent loss).
 - A7: shard close -> a null ContinuationSequenceNumber / null
   NextShardIterator stops delivery; re-enumeration via ``list_shards``
   picks up children (generalizing the single-shard match, A11,
   ``producer.ex:172-173``).
 - A8/A9: re-subscribe — the push stream's server-side 5-minute limit ends
-  the event stream without error; the reader re-subscribes AFTER the last
-  continuation sequence, or from the ORIGINAL starting position when no
-  events arrived yet (`subscribe_to_shard_test.exs:145-166,175-189`).
+  the event stream without error. The driver's read takes what arrived and
+  the next trigger subscribes AFTER its cursor; a range re-read
+  re-subscribes AFTER the last continuation sequence, or from the ORIGINAL
+  starting position when no events arrived yet
+  (`subscribe_to_shard_test.exs:145-166,175-189`).
 - A10/A13: error taxonomy + paced retry -> :func:`_is_transient` /
   :func:`_call_with_retry`; AWS-coded transient faults AND 3xx/5xx HTTP
   responses retry after ``reconnectDelayMs`` (default 70000 ms — the
@@ -44,33 +46,43 @@ positions, pacing, shard close and retry rules. Feature-parity map to the refere
 - A16: ``maxRecordsPerBatch`` bounds each batch (pull-based pacing the
   push-based reference lacks).
 
-Batch planning strategy (scale posture): ``latestOffset()`` polls each
-shard ONCE per planned batch to discover the range end — a pending-plan
-cache returns the already-planned end on Spark's extra latestOffset calls
-(prefetch, progress reporting) instead of re-polling, so the driver does
-exactly one bounded GetRecords pass per shard per batch and idle re-polls
-only when nothing was planned. Executors then re-read the concrete
-(start/at, end] range — over the EFO pipe when a consumer ARN is given, so
-the shared GetRecords quota is spent only on planning while record payload
-bandwidth rides the dedicated per-consumer throughput. End discovery
-itself must fetch records (Kinesis exposes no payload-free tail probe);
-the cache bounds that to once per batch rather than once per trigger.
+Batch planning strategy: the reader is a ``SimpleDataSourceStreamReader``,
+so the driver's one read per shard per trigger IS the batch's data.
+``read(start)`` makes one bounded fetch per shard from ``start``'s cursor,
+capped at ``maxRecordsPerBatch`` records, and returns those rows with the
+end offset. Spark (``_SimpleStreamReaderWrapper``) caches the rows, ships
+them to the JVM as Arrow when it plans the batch, and serves them from the
+block manager, so a live micro-batch runs no executor-side Python read and
+each record is fetched once. Kinesis exposes no payload-free tail probe, so
+end discovery has to fetch the records anyway; this makes that fetch the
+only one.
 
-``partitions()`` packs the batch's shard ranges, in sorted shard order, into
-as few read tasks as keep each task's planned record count at or below
-``maxRecordsPerBatch`` (the cap one shard's range already obeys), so a
-batch of small ranges pays Spark's fixed per-task cost once rather than
-once per shard. Range sizes are the record counts of the driver's own
-planning poll, held in reader memory only: offsets do not change. A range
-of unknown size (a plan replayed from the offset log after a restart)
-gets a task of its own. A range is never split, and a task reads its
-ranges in order with one executor-side reader (one SDK client).
+- With ``consumerArn`` the fetch subscribes once per shard per trigger:
+  AFTER the cursor, or at the configured starting position for a shard
+  without one. It stops at the cap (the last event is cut there), at a
+  caught-up event (``MillisBehindLatest`` 0), at a null continuation (the
+  shard closed) or when the stream ends. AWS allows one ``SubscribeToShard``
+  per second per consumer per shard, so keep the trigger interval at 1 s or
+  more.
+- Without a consumer ARN, and for a shard still on a floating ``latest``
+  position, the fetch polls ``get_records``, continuing one iterator chain
+  across triggers until the first record pins a cursor.
+- A shard whose read reached its close is remembered in reader memory (not
+  in the offsets) and never read again by this reader.
 
-SDK testing tiers (boto3 ships in this environment as of round 10 — the
-earlier "boto3 is NOT bundled" note was environment-stale): both read
-paths are unit-tested hermetically against a fake client
-(tests/test_kinesis_efo.py — the SDK-free moral equivalent of the
-reference's FakeKinesis server tests) AND against the REAL SDK
+Driver memory holds the rows of at most three batches (shards ×
+``maxRecordsPerBatch`` records each): Spark keeps a batch's rows until it
+commits the source offsets of the batch after it.
+
+``readBetweenOffsets(start, end)`` re-reads a batch of the offset log that
+this reader did not fetch: a restart between offset commit and sink commit.
+It is the only read that runs on an executor. It reads each shard's range
+(start, end] — AFTER the start cursor, else AT the pinned first sequence —
+and fails loudly rather than commit a range it could not read whole.
+
+SDK testing tiers: both read paths are unit-tested hermetically against a
+fake client (tests/test_kinesis_efo.py — the SDK-free moral equivalent of
+the reference's FakeKinesis server tests) AND against the REAL SDK
 (tests/test_kinesis_boto3_contract.py): real ``boto3.client("kinesis")``
 construction through :func:`_default_client_factory` plus
 ``botocore.stub.Stubber``-backed request/response handling, where every
@@ -86,10 +98,9 @@ factory keeps its clear import-gate error pointing at
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from broadway_kinesis_spark.streaming.envelope import (
     ENVELOPE_SCHEMA,
@@ -225,40 +236,43 @@ def _with_lag(records: list[dict], millis_behind) -> list[dict]:
     return [{**r, "MillisBehindLatest": millis_behind} for r in records]
 
 
-@dataclass
-class _ShardRange:
-    shard_id: str
-    start_seq: str | None  # concrete cursor: read AFTER this sequence
-    at_seq: str | None  # pinned first sequence of the range (read AT this)
-    end_seq: str
+def _row(rec: dict, shard_id: str, stream_name: str) -> tuple:
+    """One SDK record as an envelope row (ENVELOPE_SCHEMA order)."""
+    arrival = rec.get("ApproximateArrivalTimestamp")
+    if arrival is not None and not isinstance(arrival, (int, float)):
+        arrival = arrival.timestamp()
+    return (
+        rec["SequenceNumber"],
+        rec.get("PartitionKey"),
+        (
+            datetime.fromtimestamp(arrival, tz=timezone.utc).replace(tzinfo=None)
+            if arrival is not None
+            else None
+        ),
+        rec.get("Data"),
+        shard_id,
+        stream_name,
+        rec.get("MillisBehindLatest"),
+    )
 
 
-@dataclass
-class _ShardRanges(InputPartition):
-    """One read task: shard ranges in sorted shard order, each read whole."""
-
-    ranges: tuple[_ShardRange, ...]
-    options: dict  # the reader's options: read() builds its reader from them
-
-
-class KinesisEfoStreamReader(DataSourceStreamReader):
+class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
     # test hook: swap for a fake client factory (callable taking options)
     client_factory = staticmethod(_default_client_factory)
 
     def __init__(self, schema, options):
         # Spark's option pipeline is case-insensitive and hands the Python
         # DataSource lower-cased keys; unit tests pass plain camelCase
-        # dicts. Normalize once so both paths (and the executor re-init
-        # from partition.options) read the same keys.
+        # dicts. Normalize once so both read the same keys.
         self.options = {str(k).lower(): v for k, v in dict(options).items()}
         options = self.options
         self.stream_name = options.get("streamname")
         if not self.stream_name:
             raise ValueError("kinesis_efo requires .option('streamName', ...)")
         # 'module:callable' dotted path overriding the boto3 client factory.
-        # Resolved by IMPORT (not object injection) so it works in the
-        # executor-side Python runner process too — read() re-imports it
-        # from the partition's options. Used by hermetic end-to-end tests;
+        # Resolved by IMPORT (not object injection) so it works in every
+        # Python process Spark builds the reader in (the driver's planner,
+        # an executor replaying a batch). Used by hermetic end-to-end tests;
         # a production deployment could point it at a custom-configured
         # boto3 session factory the same way.
         factory_path = options.get("clientfactory")
@@ -274,10 +288,8 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
         self.delay_ms = int(options.get("reconnectdelayms", DEFAULT_RECONNECT_DELAY_MS))
         self.max_attempts = int(options.get("maxretries", DEFAULT_MAX_ATTEMPTS))
         self._client = None
-        self._last_end: dict[str, dict | str | None] = {}  # cursors as of the last plan
         self._live_iters: dict[str, dict] = {}  # iterator chains of unpinned shards
-        self._pending: dict[str, dict] = {}  # planned ends not yet consumed by partitions()
-        self._sizes: dict[tuple[str, str], int] = {}  # (shard, end seq) -> polled records
+        self._closed: set[str] = set()  # shards whose read reached their close
 
     # -- SDK plumbing -----------------------------------------------------
 
@@ -347,7 +359,7 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
         """Bounded get_records scan; returns (records, shard_closed, next_iter).
 
         ``start_iter`` continues an existing iterator chain (see
-        latestOffset's floating-position handling); an expired iterator is
+        :meth:`_fetch`'s floating-position handling); an expired iterator is
         re-resolved once — from the concrete cursor when one exists, else
         from ``refresh_at_ts`` (the chain's last poll time) so an expired
         idle chain on a floating position does NOT re-resolve LATEST and
@@ -386,31 +398,31 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
                 break  # caught up
         return records[:limit], it is None, it
 
-    def _subscribe_position(self, rng: _ShardRange) -> dict:
-        """SubscribeToShard StartingPosition for a planned range
-        (`subscribe_to_shard.ex:423-435` encoding, as the SDK dict)."""
-        if rng.start_seq is not None:
-            return {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": rng.start_seq}
-        if rng.at_seq is not None:
-            return {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": rng.at_seq}
-        return self.position.wire_format()
-
-    def _subscribe_range(self, rng: _ShardRange) -> list[dict]:
-        """A1: consume the planned range over the EFO push event stream.
+    def _subscribe(
+        self, shard_id: str, original: dict, *, limit: int, end_seq: str | None = None
+    ) -> tuple[list[dict], bool]:
+        """A1: consume the EFO push event stream from ``original``; returns
+        (records, shard_closed).
 
         Mirrors the reference's streaming loop (`subscribe_to_shard.ex`):
-        each SubscribeToShardEvent advances the resume position to
-        AFTER its ContinuationSequenceNumber; a null continuation means the
-        shard closed (A7); the server ending the stream without error (the
-        5-minute subscription limit) triggers a re-subscribe from the last
-        continuation — or from the ORIGINAL position if no events arrived
-        (`subscribe_to_shard_test.exs:145-189`); exception events classify
-        through the A10 taxonomy (transient → paced re-subscribe, fatal →
-        raise).
+        each SubscribeToShardEvent advances the resume position to AFTER its
+        ContinuationSequenceNumber, and a null continuation means the shard
+        closed (A7). Exception events classify through the A10 taxonomy:
+        transient → paced re-subscribe from the last continuation, fatal →
+        raise. Two modes:
+
+        - a bounded fetch (``end_seq`` None, the driver's ``read``) stops at
+          ``limit`` records (the last event is cut there), at a caught-up
+          event (``MillisBehindLatest`` 0), at a close, or when the stream
+          ends;
+        - a range re-read (``end_seq`` set) stops once ``end_seq`` arrives or
+          the shard closes. A stream the server ends first (the 5-minute
+          subscription limit) is re-requested AFTER the last continuation,
+          or from ``original`` if no event arrived yet
+          (`subscribe_to_shard_test.exs:145-189`).
         """
         cli = self._cli()
-        original = self._subscribe_position(rng)
-        end_i = _seq_int(rng.end_seq)
+        end_i = _seq_int(end_seq)
         pos = original
         got_event = False
         out: list[dict] = []
@@ -420,37 +432,47 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
             resp = self._retry(
                 lambda pos=pos: cli.subscribe_to_shard(
                     ConsumerARN=self.consumer_arn,
-                    ShardId=rng.shard_id,
+                    ShardId=shard_id,
                     StartingPosition=pos,
                 )
             )
+            stream = resp["EventStream"]
             progressed = False
             try:
-                for event in resp["EventStream"]:
+                for event in stream:
                     ev = event.get("SubscribeToShardEvent")
                     if ev is None:
                         continue  # initial-response etc. (subscribe_to_shard.ex:341)
-                    got_event = True
-                    progressed = True
+                    got_event = progressed = True
                     recs = _with_lag(ev.get("Records", []), ev.get("MillisBehindLatest"))
-                    out += recs
-                    if any(r["SequenceNumber"] == rng.end_seq for r in recs):
-                        return out
-                    # Overshoot guard: if sequences are numerically PAST the
-                    # planned end without ever matching it (record expired /
-                    # skipped between planning and a task retry), fail loudly
-                    # instead of accumulating the live stream forever.
-                    if end_i is not None and any(
-                        (_seq_int(r["SequenceNumber"]) or -1) > end_i for r in recs
-                    ):
-                        raise RuntimeError(
-                            f"subscribe_to_shard: stream passed planned end "
-                            f"{rng.end_seq!r} on {rng.shard_id} "
-                            "without delivering it"
-                        )
                     cont = ev.get("ContinuationSequenceNumber")
-                    if cont is None:
-                        return out  # shard closed mid-range (A7)
+                    if end_seq is None:
+                        room = limit - len(out)
+                        out += recs[:room]
+                        if len(recs) > room:
+                            return out, False  # cut at the cap
+                        if cont is None:
+                            return out, True  # shard closed (A7)
+                        if len(out) >= limit or ev.get("MillisBehindLatest") == 0:
+                            return out, False
+                    else:
+                        out += recs
+                        if any(r["SequenceNumber"] == end_seq for r in recs):
+                            return out, False
+                        # Overshoot guard: sequences numerically PAST the
+                        # planned end without ever matching it (record
+                        # expired between the first read and this one):
+                        # fail loudly instead of reading the live stream
+                        # forever.
+                        if end_i is not None and any(
+                            (_seq_int(r["SequenceNumber"]) or -1) > end_i for r in recs
+                        ):
+                            raise RuntimeError(
+                                f"subscribe_to_shard: stream passed planned end "
+                                f"{end_seq!r} on {shard_id} without delivering it"
+                            )
+                        if cont is None:
+                            return out, True  # shard closed mid-range (A7)
                     pos = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cont}
             except Exception as exc:  # exception event mid-stream (A5/A10)
                 if not _is_transient(exc):
@@ -460,6 +482,12 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
                     raise
                 time.sleep(self.delay_ms / 1000.0)
                 continue
+            finally:
+                close = getattr(stream, "close", None)
+                if close is not None:
+                    close()  # leave no subscription open behind an early stop
+            if end_seq is None:
+                return out, False  # the stream ended: take what arrived
             # Stream ended without error (server-side time limit): re-request
             # from the continuation, or the original position if nothing
             # arrived yet. Bound consecutive empty streams so a planning bug
@@ -469,152 +497,124 @@ class KinesisEfoStreamReader(DataSourceStreamReader):
             idle_rounds = 0 if progressed else idle_rounds + 1
             if idle_rounds >= self.max_attempts:
                 raise RuntimeError(
-                    f"subscribe_to_shard: planned end {rng.end_seq!r} not "
-                    f"reached on {rng.shard_id} after {idle_rounds} empty streams"
+                    f"subscribe_to_shard: planned end {end_seq!r} not "
+                    f"reached on {shard_id} after {idle_rounds} empty streams"
                 )
 
-    # -- DataSourceStreamReader contract ----------------------------------
+    def _fetch(self, shard_id: str, cursor: str | None) -> tuple[list[dict], bool]:
+        """One bounded fetch of up to ``maxRecordsPerBatch`` records AFTER
+        ``cursor`` (the configured position without one); returns
+        (records, shard_closed)."""
+        if self.consumer_arn and (cursor is not None or self.position.kind != "latest"):
+            pos = (
+                {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cursor}
+                if cursor is not None
+                else self.position.wire_format()
+            )
+            return self._subscribe(shard_id, pos, limit=self.max_per_batch)
+        # For a shard with no concrete cursor yet, continue the SAME iterator
+        # chain across triggers: re-resolving a floating LATEST each trigger
+        # would skip every record that arrived in between.
+        chain = self._live_iters.get(shard_id) if cursor is None else None
+        # Timestamp BEFORE the poll: if the idle chain later expires and is
+        # re-resolved via AT_TIMESTAMP(ts), a pre-poll ts can only DUPLICATE
+        # records that arrived during the poll (fine under at-least-once); a
+        # post-poll ts would permanently skip a record that landed between
+        # the server-side read point and time.time().
+        poll_ts = time.time()
+        records, closed, nxt = self._poll(
+            shard_id,
+            cursor,
+            self.max_per_batch,
+            start_iter=chain["it"] if chain else None,
+            refresh_at_ts=chain["ts"] if chain else None,
+        )
+        if records:
+            self._live_iters.pop(shard_id, None)  # concrete cursor takes over
+        elif cursor is None and nxt is not None:
+            self._live_iters[shard_id] = {"it": nxt, "ts": poll_ts}
+        return records, closed
+
+    # -- SimpleDataSourceStreamReader contract ----------------------------
 
     def initialOffset(self) -> dict:
         # Sequence cursors are opaque: the initial offset marks "unresolved";
-        # the first planned batch pins each shard to the concrete sequence
-        # number of the first record the driver observes (the "at" entry),
-        # so even a 'latest' start replays deterministically.
+        # the first batch pins each shard to the concrete sequence number of
+        # the first record the driver reads (the "at" entry), so even a
+        # 'latest' start replays deterministically.
         return {shard: None for shard in self._shard_ids()}
 
-    def latestOffset(self) -> dict:
-        live = self._live_iters
-        out: dict[str, dict | str | None] = {}
+    def read(self, start: dict):
+        """The next batch: every shard's rows after ``start``'s cursor, and
+        the offset they end at. A shard without new records keeps its
+        ``start`` entry, so a read that finds nothing returns ``start``."""
+        rows: list[tuple] = []
+        end: dict[str, dict | str | None] = {}
         for shard in self._shard_ids():
-            if shard in self._pending:
-                # Already planned, not yet consumed by partitions(): return
-                # the cached end instead of re-downloading the same range
-                # (Spark calls latestOffset more often than it plans).
-                out[shard] = self._pending[shard]
+            entry = start.get(shard)
+            end[shard] = entry
+            if shard in self._closed:
                 continue
-            cursor_entry = self._last_end.get(shard)
-            cursor = _entry_seq(cursor_entry)
-            # For a shard with no concrete cursor yet, continue the SAME
-            # iterator chain across triggers: re-resolving a floating LATEST
-            # each trigger would skip every record that arrived in between.
-            chain = live.get(shard) if cursor is None else None
-            # Timestamp BEFORE the poll: if the idle chain later expires and
-            # is re-resolved via AT_TIMESTAMP(ts), a pre-poll ts can only
-            # DUPLICATE records that arrived during the poll (fine under
-            # at-least-once); a post-poll ts would permanently skip a record
-            # that landed between the server-side read point and time.time().
-            poll_ts = time.time()
-            records, _closed, nxt = self._poll(
-                shard,
-                cursor,
-                self.max_per_batch,
-                start_iter=chain["it"] if chain else None,
-                refresh_at_ts=chain["ts"] if chain else None,
-            )
+            records, closed = self._fetch(shard, _entry_seq(entry))
+            if closed:
+                self._closed.add(shard)
             if records:
-                ent = {
+                end[shard] = {
                     "seq": records[-1]["SequenceNumber"],
                     "at": records[0]["SequenceNumber"],
                 }
-                out[shard] = ent
-                self._pending[shard] = ent
-                self._sizes[(shard, ent["seq"])] = len(records)
-                live.pop(shard, None)  # concrete cursor takes over
-            else:
-                out[shard] = cursor_entry  # unchanged -> no batch for shard
-                if cursor is None and nxt is not None:
-                    live[shard] = {"it": nxt, "ts": poll_ts}
-        return out
+                rows += [_row(r, shard, self.stream_name) for r in records]
+        # A list iterator, not a generator: Spark copies the cached iterator
+        # each time it serves the batch.
+        return iter(rows), end
 
-    def partitions(self, start: dict, end: dict):
-        merged = dict(self._last_end)
-        ranges = []
-        for s, e in sorted(end.items()):
-            s_entry = start.get(s)
+    def readBetweenOffsets(self, start: dict, end: dict):
+        """Re-read a batch of the offset log that this reader did not fetch,
+        shard by shard in sorted order, with this reader's one SDK client."""
+        for shard, e in sorted(end.items()):
+            s_entry = start.get(shard)
             s_seq, e_seq = _entry_seq(s_entry), _entry_seq(e)
-            if e is not None:
-                merged[s] = e
-            # Restart guard: a freshly restarted reader has an empty
-            # _last_end, so its first latestOffset may have re-polled from
-            # the ORIGINAL starting position and produced an end BEHIND the
-            # committed start (Spark plans on offset INEQUALITY, not
-            # ordering). Plan nothing for such a shard and re-anchor the
-            # cursor to the committed start so the next trigger polls
-            # forward from it — no backwards batch, no re-delivery.
+            # Restart guard: an end at or behind the start (Spark plans on
+            # offset INEQUALITY, not ordering) reads nothing — no backwards
+            # batch, no re-delivery.
             si, ei = _seq_int(s_seq), _seq_int(e_seq)
             if si is not None and ei is not None and ei <= si:
-                merged[s] = s_entry
                 continue
             if e is None or e_seq == s_seq:
                 continue
-            ranges.append(_ShardRange(s, s_seq, _entry_at(e), e_seq))
-        # Pack consecutive ranges into one task while the task's planned
-        # record count stays within the cap. A range this reader did not
-        # poll (offset-log replay) has no known size: it closes the open
-        # task and stands alone.
-        tasks: list[list[_ShardRange]] = []
-        load = None  # planned records of tasks[-1]; None = closed to packing
-        for rng in ranges:
-            n = self._sizes.get((rng.shard_id, rng.end_seq))
-            if n is not None and load is not None and load + n <= self.max_per_batch:
-                tasks[-1].append(rng)
-                load += n
-            else:
-                tasks.append([rng])
-                load = n
-        self._last_end = merged
-        self._pending = {}
-        self._sizes = {}
-        return [_ShardRanges(tuple(t), self.options) for t in tasks]
+            yield from self._read_range(shard, s_seq, _entry_at(e), e_seq)
 
-    def read(self, partition: _ShardRanges):
-        """Read a task's ranges in order with ONE reader (one SDK client)."""
-        reader = KinesisEfoStreamReader(None, partition.options)
-        for rng in partition.ranges:
-            yield from reader._read_range(rng)
-
-    def _read_range(self, rng: _ShardRange):
-        """Deterministic range re-read on the executor: AFTER start_seq when
-        a prior cursor exists, else AT the pinned first sequence — never a
-        floating LATEST resolution at task time. EFO push pipe when a
-        consumer ARN is configured, get_records otherwise."""
+    def _read_range(self, shard_id: str, start_seq: str | None, at_seq: str | None, end_seq: str):
+        """Deterministic re-read of (start_seq, end_seq]: AFTER start_seq
+        when a prior cursor exists, else AT the pinned first sequence
+        ``at_seq`` — never a floating LATEST resolution at replay time. EFO
+        push pipe when a consumer ARN is configured, get_records otherwise."""
         if self.consumer_arn:
-            records = self._subscribe_range(rng)
+            if start_seq is not None:
+                pos = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": start_seq}
+            elif at_seq is not None:
+                pos = {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": at_seq}
+            else:
+                pos = self.position.wire_format()
+            records, _closed = self._subscribe(
+                shard_id, pos, limit=self.max_per_batch, end_seq=end_seq
+            )
         else:
             records, closed, _it = self._poll(
-                rng.shard_id, rng.start_seq, self.max_per_batch, at_seq=rng.at_seq
+                shard_id, start_seq, self.max_per_batch, at_seq=at_seq
             )
-            if not closed and not any(r["SequenceNumber"] == rng.end_seq for r in records):
+            if not closed and not any(r["SequenceNumber"] == end_seq for r in records):
                 # Never silently truncate a planned range: the batch would
                 # commit end_seq while the tail was never emitted (lost
                 # data). Loud failure -> Spark task retry / surfaced error.
                 raise RuntimeError(
-                    f"kinesis_efo: planned end {rng.end_seq!r} not reached on "
-                    f"{rng.shard_id} ({len(records)} records read)"
+                    f"kinesis_efo: planned end {end_seq!r} not reached on "
+                    f"{shard_id} ({len(records)} records read)"
                 )
         for rec in records:
-            seq = rec["SequenceNumber"]
-            arrival = rec.get("ApproximateArrivalTimestamp")
-            if arrival is not None and not isinstance(arrival, (int, float)):
-                arrival = arrival.timestamp()
-            yield (
-                seq,
-                rec.get("PartitionKey"),
-                (
-                    datetime.fromtimestamp(arrival, tz=timezone.utc).replace(tzinfo=None)
-                    if arrival is not None
-                    else None
-                ),
-                rec.get("Data"),
-                rng.shard_id,
-                self.stream_name,
-                rec.get("MillisBehindLatest"),
-            )
-            if seq == rng.end_seq:
+            yield _row(rec, shard_id, self.stream_name)
+            if rec["SequenceNumber"] == end_seq:
                 break
-
-    def commit(self, end: dict) -> None:
-        pass  # Spark's commit log owns the cursor (A15)
 
 
 class KinesisEfoDataSource(DataSource):
@@ -630,5 +630,5 @@ class KinesisEfoDataSource(DataSource):
     def schema(self):
         return ENVELOPE_SCHEMA
 
-    def streamReader(self, schema):
+    def simpleStreamReader(self, schema):
         return KinesisEfoStreamReader(schema, self.options)

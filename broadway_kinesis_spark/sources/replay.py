@@ -32,7 +32,7 @@ onto the SDK calls that reader makes:
 - The close sentinel ends the shard: a null NextShardIterator once drained
   (A7; events after it are never served).
 - An exception event raises a botocore-shaped error carrying its type, so
-  it surfaces at the driver's planning poll through the A10 taxonomy.
+  it surfaces at the driver's read of the batch through the A10 taxonomy.
 
 Options: ``path`` (required), ``streamName`` (default: directory name),
 ``reconnectDelayMs`` (default 0: a file has no consumer re-registration
@@ -75,8 +75,8 @@ class _Shard:
 
 
 #: path -> (content md5, parsed shard). The engine builds a client per
-#: reader and per partition read, so each file parses (json + base64) at
-#: most once per process per content version. The key hashes the bytes,
+#: reader (the driver's, and an executor's when it replays a batch), so each
+#: file parses (json + base64) at most once per process per content version. The key hashes the bytes,
 #: not (mtime, size): a same-length rewrite within the filesystem's mtime
 #: granularity must not serve stale records.
 _PARSE_CACHE: dict[str, tuple[str, _Shard]] = {}
@@ -209,7 +209,7 @@ class ReplayDataSource(DataSource):
     def schema(self):
         return ENVELOPE_SCHEMA
 
-    def streamReader(self, schema):
+    def simpleStreamReader(self, schema):
         path = self.options.get("path")
         if not path:
             raise ValueError("kinesis_replay requires .option('path', <dir>)")

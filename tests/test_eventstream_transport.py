@@ -12,7 +12,8 @@ same public wire format fake_kinesis.ex encodes), push them through
 botocore's REAL transport decoder (``EventStreamBuffer`` →
 ``EventStream`` → ``EventStreamJSONParser`` against the bundled Kinesis
 service model), and drive the source's actual consume loop
-(``KinesisEfoStreamReader._subscribe_range``) off the decoded stream —
+(``KinesisEfoStreamReader._subscribe`` through ``readBetweenOffsets``) off
+the decoded stream —
 so record decode, continuation advance, end-of-range detection, and the
 close-on-null-continuation path all execute against bytes that crossed
 the real wire format, not a hand-shaped dict.
@@ -206,11 +207,10 @@ class _TransportFakeClient:
         return {"EventStream": real_event_stream(raw, chunk_size=chunk)}
 
 
-def _reader_and_partition(end_seq):
-    from broadway_kinesis_spark.sources.kinesis_efo import (
-        KinesisEfoStreamReader,
-        _ShardRange,
-    )
+def _reader_and_range(end_seq):
+    """An EFO reader and the (start, end) offsets of the range AT sequence 1
+    through ``end_seq`` on one shard: ``readBetweenOffsets`` reads it."""
+    from broadway_kinesis_spark.sources.kinesis_efo import KinesisEfoStreamReader
 
     reader = KinesisEfoStreamReader(
         None,
@@ -220,13 +220,8 @@ def _reader_and_partition(end_seq):
             "reconnectDelayMs": "1",
         },
     )
-    part = _ShardRange(
-        shard_id="shardId-000000000000",
-        start_seq=None,
-        at_seq="1",
-        end_seq=end_seq,
-    )
-    return reader, part
+    shard = "shardId-000000000000"
+    return reader, ({shard: None}, {shard: {"seq": end_seq, "at": "1"}})
 
 
 def test_consume_loop_reads_range_off_real_wire_bytes():
@@ -238,11 +233,11 @@ def test_consume_loop_reads_range_off_real_wire_bytes():
         ([("1", b"r-one", "p")], "1"),
         ([("2", b"r-two", "p"), ("3", b"r-three", "p")], "3"),
     )
-    reader, part = _reader_and_partition(end_seq="3")
+    reader, rng = _reader_and_range(end_seq="3")
     reader._client = _TransportFakeClient([(raw, 7)])
-    recs = reader._subscribe_range(part)
-    assert [r["SequenceNumber"] for r in recs] == ["1", "2", "3"]
-    assert [r["Data"] for r in recs] == [b"r-one", b"r-two", b"r-three"]
+    rows = list(reader.readBetweenOffsets(*rng))
+    assert [x[0] for x in rows] == ["1", "2", "3"]
+    assert [x[3] for x in rows] == [b"r-one", b"r-two", b"r-three"]
 
 
 def test_consume_loop_resubscribes_from_continuation_across_streams():
@@ -251,11 +246,11 @@ def test_consume_loop_resubscribes_from_continuation_across_streams():
     range from the second stream — both decoded from real frames."""
     first = _frames(([("1", b"x", "p")], "1"))
     second = _frames(([("2", b"y", "p")], "2"))
-    reader, part = _reader_and_partition(end_seq="2")
+    reader, rng = _reader_and_range(end_seq="2")
     cli = _TransportFakeClient([(first, 5), (second, None)])
     reader._client = cli
-    recs = reader._subscribe_range(part)
-    assert [r["SequenceNumber"] for r in recs] == ["1", "2"]
+    rows = list(reader.readBetweenOffsets(*rng))
+    assert [x[0] for x in rows] == ["1", "2"]
     assert cli.calls[1]["StartingPosition"] == {
         "Type": "AFTER_SEQUENCE_NUMBER",
         "SequenceNumber": "1",
@@ -283,11 +278,11 @@ def test_consume_loop_retries_transient_exception_event_off_real_wire():
         "InternalFailureException", "internal failure, retry"
     )
     second = _frames(([("2", b"y", "p")], "2"))
-    reader, part = _reader_and_partition(end_seq="2")
+    reader, rng = _reader_and_range(end_seq="2")
     cli = _TransportFakeClient([(first, 9), (second, None)])
     reader._client = cli
-    recs = reader._subscribe_range(part)
-    assert [r["SequenceNumber"] for r in recs] == ["1", "2"]
+    rows = list(reader.readBetweenOffsets(*rng))
+    assert [x[0] for x in rows] == ["1", "2"]
     assert len(cli.calls) == 2
     assert cli.calls[1]["StartingPosition"] == {
         "Type": "AFTER_SEQUENCE_NUMBER",
@@ -303,10 +298,10 @@ def test_consume_loop_raises_fatal_exception_event_off_real_wire():
     raw = _frames(([("1", b"x", "p")], "1")) + exception_frame(
         "ResourceNotFoundException", "stream deleted"
     )
-    reader, part = _reader_and_partition(end_seq="9")
+    reader, rng = _reader_and_range(end_seq="9")
     reader._client = _TransportFakeClient([(raw, None)])
     with pytest.raises(EventStreamError) as ei:
-        reader._subscribe_range(part)
+        list(reader.readBetweenOffsets(*rng))
     assert ei.value.response["Error"]["Code"] == "ResourceNotFoundException"
 
 
@@ -314,9 +309,9 @@ def test_consume_loop_stops_at_null_continuation_shard_close():
     """A7 over real frames: a null ContinuationSequenceNumber closes the
     shard — the loop returns what it has without re-subscribing."""
     raw = _frames(([("1", b"x", "p")], None))
-    reader, part = _reader_and_partition(end_seq="9")
+    reader, rng = _reader_and_range(end_seq="9")
     cli = _TransportFakeClient([(raw, 3)])
     reader._client = cli
-    recs = reader._subscribe_range(part)
-    assert [r["SequenceNumber"] for r in recs] == ["1"]
+    rows = list(reader.readBetweenOffsets(*rng))
+    assert [x[0] for x in rows] == ["1"]
     assert len(cli.calls) == 1

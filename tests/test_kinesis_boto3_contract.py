@@ -16,7 +16,7 @@ the gap the reference closes with its FakeKinesis HTTP server
   the A10 taxonomy helpers are proven against the genuine
   ``response["Error"]["Code"]`` shape rather than a lookalike;
 - response values use the types real botocore PARSES to (``bytes`` Data,
-  tz-aware ``datetime`` ApproximateArrivalTimestamp), pinning read()'s
+  tz-aware ``datetime`` ApproximateArrivalTimestamp), pinning the reader's
   envelope conversion against the parsed-wire shapes.
 
 Auto-unskip pattern (the protobuf pin's twin): ``pytest.importorskip``
@@ -299,12 +299,12 @@ def test_expired_iterator_reanchors_once_from_the_concrete_cursor():
         stub.assert_no_pending_responses()
 
 
-# ------------------------------------- executor read() over real responses
+# ------------------------------- readBetweenOffsets() over real responses
 
 
-#: module-global plan consumed by the dotted-path factory below — read()
-#: re-imports the factory in the (here: same) process, mirroring how an
-#: executor-side Python runner would.
+#: module-global plan consumed by the dotted-path factory below — the reader
+#: imports the factory in the (here: same) process, as an executor-side
+#: Python runner replaying a batch would.
 _READ_STUBS: list = []
 
 
@@ -321,8 +321,8 @@ def stubbed_read_factory(options: dict):
 
 
 def test_read_yields_envelope_rows_from_parsed_wire_shapes(monkeypatch):
-    """End-to-end executor path: a planned range re-read through the REAL
-    client (dotted-path factory), with botocore-parsed response types —
+    """Replay path: a batch's range re-read through the REAL client (built
+    by the dotted-path factory), with botocore-parsed response types —
     tz-aware arrival datetimes must land as naive-UTC envelope timestamps
     and byte payloads pass through untouched (A4/A6)."""
     _READ_STUBS.clear()
@@ -342,12 +342,11 @@ def test_read_yields_envelope_rows_from_parsed_wire_shapes(monkeypatch):
         ]
     )
     r = _reader(
-        _client(),
+        None,
         clientFactory="test_kinesis_boto3_contract:stubbed_read_factory",
         startingPosition="trim_horizon",
     )
-    parts = r.partitions({}, {"shardId-000000000000": {"seq": "2", "at": "1"}})
-    rows = list(r.read(parts[0]))
+    rows = list(r.readBetweenOffsets({}, {"shardId-000000000000": {"seq": "2", "at": "1"}}))
     assert [(x[0], x[3], x[4], x[5]) for x in rows] == [
         ("1", b"a", "shardId-000000000000", STREAM),
         ("2", b"b", "shardId-000000000000", STREAM),

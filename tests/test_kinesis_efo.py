@@ -12,9 +12,9 @@ from broadway_kinesis_spark.sources.kinesis_efo import (
     KinesisEfoStreamReader,
     _call_with_retry,
     _is_transient,
-    _ShardRange,
-    _ShardRanges,
 )
+
+ARN = "arn:aws:kinesis:us-east-1:1:stream/t/consumer/c:1"
 
 
 class AwsError(Exception):
@@ -60,6 +60,7 @@ class FakeKinesisClient:
         self.millis_behind = millis_behind
         self.fail_first = list(fail_first or [])
         self.calls: list[str] = []
+        self.fetched = 0  # records served, over either API
         # scripted subscribe_to_shard event streams (each a list of events /
         # exceptions); None -> synthesize one stream to the shard tip
         self.subscriptions = subscriptions
@@ -95,6 +96,7 @@ class FakeKinesisClient:
         idx = self._index_for(recs, StartingPosition)
         out = recs[idx:]
         closed = self.shards.get(f"{ShardId}__closed") is not None
+        self.fetched += len(out)
         ev = {
             "Records": out,
             "ContinuationSequenceNumber": (
@@ -107,7 +109,7 @@ class FakeKinesisClient:
     def list_shards(self, **kw):
         self.calls.append("list_shards")
         self._maybe_fail()
-        return {"Shards": [{"ShardId": s} for s in self.shards]}
+        return {"Shards": [{"ShardId": s} for s in self.shards if not s.endswith("__closed")]}
 
     def get_shard_iterator(self, StreamName, ShardId, ShardIteratorType, **kw):
         self.calls.append(f"get_shard_iterator:{ShardIteratorType}")
@@ -129,6 +131,7 @@ class FakeKinesisClient:
         out = recs[idx : idx + Limit]
         nxt = idx + len(out)
         closed = self.shards.get(f"{shard_id}__closed") is not None and nxt >= len(recs)
+        self.fetched += len(out)
         return {
             "Records": out,
             "NextShardIterator": None if closed else f"{shard_id}:{nxt}",
@@ -164,55 +167,52 @@ def test_initial_offset_enumerates_all_shards():
     assert r.initialOffset() == {"shard-0001": None, "shard-0002": None}
 
 
+def _seqs(rows):
+    return [(x[4], x[0]) for x in rows]
+
+
 def test_latest_offset_finds_tip_and_partitions_plan_ranges():
+    """read(start) returns the batch's rows with its end offset; the same
+    (start, end] ranges re-read through readBetweenOffsets."""
     r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon")
     start = r.initialOffset()
-    end = r.latestOffset()
+    rows, end = r.read(start)
     assert end == {
         "shard-0001": {"seq": "3", "at": "1"},
         "shard-0002": {"seq": "10", "at": "10"},
     }
-    parts = r.partitions(start, end)
-    ranges = [rng for task in parts for rng in task.ranges]
-    assert sorted((p.shard_id, p.start_seq, p.at_seq, p.end_seq) for p in ranges) == [
-        ("shard-0001", None, "1", "3"),
-        ("shard-0002", None, "10", "10"),
-    ]
+    expected = [("shard-0001", "1"), ("shard-0001", "2"), ("shard-0001", "3"), ("shard-0002", "10")]
+    assert _seqs(rows) == expected
+    assert _seqs(r.readBetweenOffsets(start, end)) == expected
 
 
 def test_latest_offset_resumes_after_cursor():
     r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon")
-    r.partitions({"shard-0001": None}, {"shard-0001": "2", "shard-0002": "10"})
-    end = r.latestOffset()
+    rows, end = r.read({"shard-0001": "2", "shard-0002": "10"})
     assert end["shard-0001"] == {"seq": "3", "at": "3"}  # only the tail beyond seq 2
     assert end["shard-0002"] == "10"  # unchanged cursor entry when no new data
+    assert _seqs(rows) == [("shard-0001", "3")]
 
 
 def test_latest_offset_pending_plan_is_cached_not_repolled():
-    """Spark calls latestOffset more often than it plans batches; a planned
-    range must be answered from the pending cache, not re-downloaded."""
-    client = FakeKinesisClient(SHARDS)
-    r = make_reader(client, startingPosition="trim_horizon")
-    first = r.latestOffset()
-    polls = client.calls.count("get_records")
-    again = r.latestOffset()
-    assert again == first
-    assert client.calls.count("get_records") == polls  # zero new downloads
-    # partitions() consumes the plan; the next latestOffset polls again
-    r.partitions(r.initialOffset(), first)
-    r.latestOffset()
-    assert client.calls.count("get_records") > polls
+    """Two chained reads fetch each record once, over either API: the second
+    starts after the first one's end, finds nothing and returns its start
+    unchanged."""
+    for opts in ({}, {"consumerArn": ARN}):
+        client = FakeKinesisClient(SHARDS)
+        r = make_reader(client, startingPosition="trim_horizon", **opts)
+        rows, first = r.read(r.initialOffset())
+        assert len(list(rows)) == 4
+        rows, again = r.read(first)
+        assert again == first and list(rows) == []
+        assert client.fetched == 4  # every record served once
+        assert ("get_records" in client.calls) == (not opts)
 
 
-def test_read_yields_envelope_rows_in_range(monkeypatch):
+def test_read_yields_envelope_rows_in_range():
     client = FakeKinesisClient(SHARDS, millis_behind=1234)
-    # read() builds a fresh reader (executor-side shape) -> inject at class level
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
     r = make_reader(client, startingPosition="trim_horizon")
-    parts = r.partitions({}, {"shard-0001": "2"})
-    rows = list(r.read(parts[0]))
+    rows = list(r.readBetweenOffsets({}, {"shard-0001": "2"}))
     assert [(x[0], x[3], x[4], x[5]) for x in rows] == [
         ("1", b"a", "shard-0001", "test-stream"),
         ("2", b"b", "shard-0001", "test-stream"),
@@ -221,34 +221,27 @@ def test_read_yields_envelope_rows_in_range(monkeypatch):
     assert [x[6] for x in rows] == [1234, 1234]  # millis_behind_latest
 
 
-def test_read_starts_after_previous_cursor(monkeypatch):
+def test_read_starts_after_previous_cursor():
     client = FakeKinesisClient(SHARDS)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
     r = make_reader(client, startingPosition="trim_horizon")
-    parts = r.partitions({}, {"shard-0001": "3"})
-    parts[0].ranges[0].start_seq = "1"
-    rows = list(r.read(parts[0]))
+    rows = list(r.readBetweenOffsets({"shard-0001": "1"}, {"shard-0001": "3"}))
     assert [x[0] for x in rows] == ["2", "3"]
     assert "get_shard_iterator:AFTER_SEQUENCE_NUMBER" in client.calls
 
 
-def test_starting_position_at_timestamp(monkeypatch):
+def test_starting_position_at_timestamp():
     client = FakeKinesisClient(SHARDS)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
     r = make_reader(client, startingPosition="at_timestamp:150")
-    end = r.latestOffset()
+    rows, end = r.read(r.initialOffset())
     assert end["shard-0001"] == {"seq": "3", "at": "2"}
-    rows = list(r.read(r.partitions({}, {"shard-0001": "3"})[0]))
-    assert [x[0] for x in rows] == ["2", "3"]  # arrivals >= 150 only
+    assert [x[0] for x in rows if x[4] == "shard-0001"] == ["2", "3"]  # arrivals >= 150 only
+    rows = list(r.readBetweenOffsets({}, {"shard-0001": "3"}))
+    assert [x[0] for x in rows] == ["2", "3"]
 
 
 def test_max_records_per_batch_caps_poll():
     r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon", maxRecordsPerBatch="1")
-    end = r.latestOffset()
+    _rows, end = r.read(r.initialOffset())
     assert end["shard-0001"] == {"seq": "1", "at": "1"}
 
 
@@ -259,6 +252,23 @@ def test_shard_close_detected():
     records, closed, _it = r._poll("shard-0001", None, 100)
     assert closed is True
     assert [x["SequenceNumber"] for x in records] == ["1", "2", "3"]
+
+
+@pytest.mark.parametrize("consumer_arn", [None, ARN])
+def test_closed_shard_is_read_once(consumer_arn):
+    """A read that reaches a shard's close is the last read of that shard:
+    later reads make no SDK call for it and keep its offset entry."""
+    shards = {"shard-0001": list(SHARDS["shard-0001"]), "shard-0001__closed": True}
+    client = FakeKinesisClient(shards)
+    opts = {"consumerArn": consumer_arn} if consumer_arn else {}
+    r = make_reader(client, startingPosition="trim_horizon", **opts)
+    rows, end = r.read(r.initialOffset())
+    assert [x[0] for x in rows] == ["1", "2", "3"]
+    client.calls.clear()
+    for _ in range(2):
+        rows, again = r.read(end)
+        assert again == end and list(rows) == []
+    assert client.calls == ["list_shards", "list_shards"]
 
 
 def test_retry_transient_then_succeed():
@@ -300,56 +310,64 @@ def test_unknown_errors_are_fatal():
         _call_with_retry(weird, delay_ms=1, max_attempts=5, sleep=lambda s: None)
 
 
-# -- 'latest' pinning (executor must never re-resolve a floating position) --
+# -- 'latest' pinning (a replay must never re-resolve a floating position) --
 
 
-def test_latest_position_pins_first_polled_sequence(monkeypatch):
+def test_latest_position_pins_first_polled_sequence():
     """With startingPosition=latest and an idle stream at query start, the
     driver keeps one iterator chain across triggers (no arrival gaps) and the
-    first records PIN the range: executor read() uses AT_SEQUENCE_NUMBER on
-    the pinned sequence, never LATEST at task time (which would point at the
-    then-current tip — silent loss)."""
+    first records PIN the range: a replay of the batch uses
+    AT_SEQUENCE_NUMBER on the pinned sequence, never LATEST at replay time
+    (which would point at the then-current tip — silent loss)."""
     shards = {"shard-0001": list(SHARDS["shard-0001"])}
     client = FakeKinesisClient(shards)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
     r = make_reader(client, startingPosition="latest")
     start = r.initialOffset()
-    assert r.latestOffset() == {"shard-0001": None}  # nothing beyond the tip yet
+    rows, idle = r.read(start)
+    assert idle == {"shard-0001": None} and list(rows) == []  # nothing beyond the tip yet
     shards["shard-0001"] += [rec(4, b"d", arrival=400.0), rec(5, b"e", arrival=500.0)]
-    end = r.latestOffset()
+    rows, end = r.read(idle)
     assert end == {"shard-0001": {"seq": "5", "at": "4"}}  # chain caught arrivals
-    parts = r.partitions(start, end)
+    assert [x[0] for x in rows] == ["4", "5"]
     client.calls.clear()
-    rows = list(r.read(parts[0]))
+    rows = list(r.readBetweenOffsets(start, end))
     assert [x[0] for x in rows] == ["4", "5"]
     assert "get_shard_iterator:AT_SEQUENCE_NUMBER" in client.calls
     assert "get_shard_iterator:LATEST" not in client.calls
 
 
+def test_latest_position_with_consumer_arn_polls_until_pinned():
+    """A push subscription at LATEST each trigger would skip what arrived
+    between triggers, so a shard still on a floating 'latest' keeps the
+    polled iterator chain; once a record pins its cursor, reads subscribe
+    AFTER it."""
+    shards = {"shard-0001": list(SHARDS["shard-0001"])}
+    client = FakeKinesisClient(shards)
+    r = make_reader(client, startingPosition="latest", consumerArn=ARN)
+    _rows, idle = r.read(r.initialOffset())
+    shards["shard-0001"].append(rec(4, b"d", arrival=400.0))
+    rows, end = r.read(idle)
+    assert [x[0] for x in rows] == ["4"] and client.subscribe_calls == []
+    shards["shard-0001"].append(rec(5, b"e", arrival=500.0))
+    rows, _end = r.read(end)
+    assert [x[0] for x in rows] == ["5"]
+    assert client.subscribe_calls == [
+        ("shard-0001", {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": "4"})
+    ]
+
+
 # -- EFO subscribe_to_shard push path (A1) ---------------------------------
 
 
-def efo_part(shard_id="shard-0001", start_seq=None, at_seq="1", end_seq="3", **opts):
-    return _ShardRanges(
-        ranges=(_ShardRange(shard_id, start_seq, at_seq, end_seq),),
-        options={
-            "streamName": "test-stream",
-            "consumerArn": "arn:aws:kinesis:us-east-1:1:stream/t/consumer/c:1",
-            "reconnectDelayMs": "1",
-            **opts,
-        },
-    )
+def efo_read(client, shard_id="shard-0001", start_seq=None, at_seq="1", end_seq="3", **opts):
+    """Rows of one shard range re-read over the push path."""
+    r = make_reader(client, consumerArn=ARN, **opts)
+    return list(r.readBetweenOffsets({shard_id: start_seq}, {shard_id: {"seq": end_seq, "at": at_seq}}))
 
 
-def test_efo_read_uses_subscribe_not_get_records(monkeypatch):
+def test_efo_read_uses_subscribe_not_get_records():
     client = FakeKinesisClient(SHARDS, millis_behind=567)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
-    rows = list(r.read(efo_part()))
+    rows = efo_read(client)
     assert [(x[0], x[3]) for x in rows] == [("1", b"a"), ("2", b"b"), ("3", b"c")]
     assert [x[6] for x in rows] == [567, 567, 567]  # millis_behind_latest
     assert "subscribe_to_shard" in client.calls
@@ -360,13 +378,56 @@ def test_efo_read_uses_subscribe_not_get_records(monkeypatch):
     )
 
 
-def test_efo_read_resumes_after_cursor_with_after_sequence(monkeypatch):
+def test_efo_driver_read_subscribes_once_per_shard():
+    """The driver's read subscribes at the starting position for a shard
+    without a cursor, AFTER the cursor once it has one, and never polls."""
     client = FakeKinesisClient(SHARDS)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
-    rows = list(r.read(efo_part(start_seq="1", at_seq=None, end_seq="3")))
+    r = make_reader(client, startingPosition="trim_horizon", consumerArn=ARN)
+    rows, end = r.read(r.initialOffset())
+    assert _seqs(rows) == [("shard-0001", "1"), ("shard-0001", "2"), ("shard-0001", "3"), ("shard-0002", "10")]
+    r.read(end)
+    assert client.subscribe_calls == [
+        ("shard-0001", {"Type": "TRIM_HORIZON"}),
+        ("shard-0002", {"Type": "TRIM_HORIZON"}),
+        ("shard-0001", {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": "3"}),
+        ("shard-0002", {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": "10"}),
+    ]
+    assert "get_records" not in client.calls and "get_shard_iterator" not in " ".join(client.calls)
+
+
+def test_efo_driver_read_cuts_the_last_event_at_the_cap():
+    subs = [[{"SubscribeToShardEvent": {"Records": [rec(1), rec(2), rec(3)], "ContinuationSequenceNumber": "3"}}]]
+    client = FakeKinesisClient({"shard-0001": []}, subscriptions=subs)
+    r = make_reader(client, startingPosition="trim_horizon", consumerArn=ARN, maxRecordsPerBatch="2")
+    rows, end = r.read(r.initialOffset())
+    assert [x[0] for x in rows] == ["1", "2"]
+    assert end == {"shard-0001": {"seq": "2", "at": "1"}}
+
+
+def test_efo_driver_read_stops_at_a_caught_up_event():
+    """A live subscription never ends by itself: the read stops at the first
+    event that reports the consumer caught up, and leaves the stream closed."""
+    stream_closed = []
+
+    def live():
+        try:
+            yield {"SubscribeToShardEvent": {"Records": [rec(1)], "ContinuationSequenceNumber": "1", "MillisBehindLatest": 5}}
+            yield {"SubscribeToShardEvent": {"Records": [rec(2)], "ContinuationSequenceNumber": "2", "MillisBehindLatest": 0}}
+            raise AssertionError("read past the caught-up event")
+        finally:
+            stream_closed.append(True)
+
+    client = FakeKinesisClient({"shard-0001": []}, subscriptions=[live()])
+    r = make_reader(client, startingPosition="trim_horizon", consumerArn=ARN)
+    rows, end = r.read(r.initialOffset())
+    assert [x[0] for x in rows] == ["1", "2"]
+    assert end == {"shard-0001": {"seq": "2", "at": "1"}}
+    assert stream_closed == [True]
+
+
+def test_efo_read_resumes_after_cursor_with_after_sequence():
+    client = FakeKinesisClient(SHARDS)
+    rows = efo_read(client, start_seq="1", at_seq=None, end_seq="3")
     assert [x[0] for x in rows] == ["2", "3"]
     assert client.subscribe_calls[0][1] == {
         "Type": "AFTER_SEQUENCE_NUMBER",
@@ -374,7 +435,7 @@ def test_efo_read_resumes_after_cursor_with_after_sequence(monkeypatch):
     }
 
 
-def test_efo_rerequests_with_continuation_when_stream_closes(monkeypatch):
+def test_efo_rerequests_with_continuation_when_stream_closes():
     """Server ends the stream mid-range (5-min limit): re-subscribe AFTER the
     last ContinuationSequenceNumber (subscribe_to_shard_test.exs:145-166)."""
     subs = [
@@ -382,11 +443,7 @@ def test_efo_rerequests_with_continuation_when_stream_closes(monkeypatch):
         [{"SubscribeToShardEvent": {"Records": [rec(2, b"b"), rec(3, b"c")], "ContinuationSequenceNumber": "3"}}],
     ]
     client = FakeKinesisClient(SHARDS, subscriptions=subs)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
-    rows = list(r.read(efo_part()))
+    rows = efo_read(client)
     assert [x[0] for x in rows] == ["1", "2", "3"]
     assert [c[1]["Type"] for c in client.subscribe_calls] == [
         "AT_SEQUENCE_NUMBER",
@@ -395,7 +452,7 @@ def test_efo_rerequests_with_continuation_when_stream_closes(monkeypatch):
     assert client.subscribe_calls[1][1]["SequenceNumber"] == "1"
 
 
-def test_efo_rerequests_original_position_when_no_events(monkeypatch):
+def test_efo_rerequests_original_position_when_no_events():
     """Stream ends with NO events delivered: re-subscribe from the ORIGINAL
     starting position, not a continuation (subscribe_to_shard_test.exs:175)."""
     subs = [
@@ -403,11 +460,7 @@ def test_efo_rerequests_original_position_when_no_events(monkeypatch):
         [{"SubscribeToShardEvent": {"Records": [rec(1, b"a"), rec(2, b"b"), rec(3, b"c")], "ContinuationSequenceNumber": "3"}}],
     ]
     client = FakeKinesisClient(SHARDS, subscriptions=subs)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
-    rows = list(r.read(efo_part()))
+    rows = efo_read(client)
     assert [x[0] for x in rows] == ["1", "2", "3"]
     assert [c[1] for c in client.subscribe_calls] == [
         {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": "1"},
@@ -415,7 +468,7 @@ def test_efo_rerequests_original_position_when_no_events(monkeypatch):
     ]
 
 
-def test_efo_exception_event_transient_resubscribes(monkeypatch):
+def test_efo_exception_event_transient_resubscribes():
     """Transient exception event mid-stream -> paced re-subscribe from the
     last continuation (producer.ex:89-96 ResourceInUse -> retry_conn)."""
     subs = [
@@ -426,11 +479,7 @@ def test_efo_exception_event_transient_resubscribes(monkeypatch):
         [{"SubscribeToShardEvent": {"Records": [rec(2, b"b"), rec(3, b"c")], "ContinuationSequenceNumber": "3"}}],
     ]
     client = FakeKinesisClient(SHARDS, subscriptions=subs)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
-    rows = list(r.read(efo_part()))
+    rows = efo_read(client)
     assert [x[0] for x in rows] == ["1", "2", "3"]
     assert client.subscribe_calls[1][1] == {
         "Type": "AFTER_SEQUENCE_NUMBER",
@@ -438,29 +487,21 @@ def test_efo_exception_event_transient_resubscribes(monkeypatch):
     }
 
 
-def test_efo_fatal_exception_event_raises(monkeypatch):
+def test_efo_fatal_exception_event_raises():
     subs = [[AwsError("ResourceNotFoundException", "no such consumer")]]
     client = FakeKinesisClient(SHARDS, subscriptions=subs)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
     with pytest.raises(AwsError, match="no such consumer"):
-        list(r.read(efo_part()))
+        efo_read(client)
 
 
-def test_efo_shard_close_stops_delivery(monkeypatch):
+def test_efo_shard_close_stops_delivery():
     """Null ContinuationSequenceNumber = shard closed (split/merge, A7):
     deliver what arrived, stop (subscribe_to_shard_test.exs:205)."""
     subs = [
         [{"SubscribeToShardEvent": {"Records": [rec(1, b"a")], "ContinuationSequenceNumber": None}}],
     ]
     client = FakeKinesisClient(SHARDS, subscriptions=subs)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
-    rows = list(r.read(efo_part(end_seq="99")))
+    rows = efo_read(client, end_seq="99")
     assert [x[0] for x in rows] == ["1"]
     assert len(client.subscribe_calls) == 1
 
@@ -501,30 +542,27 @@ def test_retry_paces_on_http_5xx():
 # -- at-least-once guards (restart / truncation / expired-chain classes) ----
 
 
-def test_partitions_skips_backwards_batch_and_reanchors():
-    """Restart guard: a freshly restarted reader's first latestOffset can
-    produce an end BEHIND the committed start (it re-polled from the
-    original position). partitions() must plan NOTHING for that shard and
-    re-anchor the cursor at the committed start — never a backwards batch."""
-    r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon")
-    parts = r.partitions({"shard-0001": {"seq": "3", "at": "1"}}, {"shard-0001": {"seq": "1", "at": "1"}})
-    assert parts == []
-    end = r.latestOffset()  # anchored at committed seq 3 -> nothing new
+def test_read_between_offsets_skips_backwards_shard():
+    """Restart guard: an offset-log batch whose end is BEHIND its committed
+    start (Spark plans on offset inequality, not ordering) re-reads nothing
+    for that shard — never a backwards batch — and a read from the
+    committed start finds nothing new."""
+    client = FakeKinesisClient(SHARDS)
+    r = make_reader(client, startingPosition="trim_horizon")
+    committed = {"shard-0001": {"seq": "3", "at": "1"}}
+    assert list(r.readBetweenOffsets(committed, {"shard-0001": {"seq": "1", "at": "1"}})) == []
+    assert client.calls == []
+    _rows, end = r.read(committed)
     assert end["shard-0001"] == {"seq": "3", "at": "1"}
 
 
-def test_read_raises_instead_of_truncating_planned_range(monkeypatch):
+def test_read_raises_instead_of_truncating_planned_range():
     """A planned range whose tail can't be fetched within the batch cap must
     fail loudly — committing end_seq after a silent truncation would lose
     the tail forever."""
-    client = FakeKinesisClient(SHARDS)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client, startingPosition="trim_horizon", maxRecordsPerBatch="2")
-    parts = r.partitions({}, {"shard-0001": "3"})
+    r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon", maxRecordsPerBatch="2")
     with pytest.raises(RuntimeError, match="not reached"):
-        list(r.read(parts[0]))
+        list(r.readBetweenOffsets({}, {"shard-0001": "3"}))
 
 
 def test_expired_chain_iterator_refreshes_at_timestamp_not_latest():
@@ -534,7 +572,8 @@ def test_expired_chain_iterator_refreshes_at_timestamp_not_latest():
     shards = {"shard-0001": list(SHARDS["shard-0001"])}
     client = FakeKinesisClient(shards)
     r = make_reader(client, startingPosition="latest")
-    assert r.latestOffset() == {"shard-0001": None}  # chain established at tip
+    rows, end = r.read({"shard-0001": None})
+    assert end == {"shard-0001": None} and list(rows) == []  # chain established at tip
     shards["shard-0001"].append(rec(4, b"late", arrival=99999.0))
     orig_get_records = client.get_records
     state = {"raised": False}
@@ -546,71 +585,65 @@ def test_expired_chain_iterator_refreshes_at_timestamp_not_latest():
         return orig_get_records(ShardIterator, Limit)
 
     client.get_records = expired_once
-    r.latestOffset()
+    r.read(end)
     assert "get_shard_iterator:AT_TIMESTAMP" in client.calls
     assert "get_shard_iterator:LATEST" == client.calls[1]  # only the initial resolve
 
 
-def test_subscribe_overshoot_raises(monkeypatch):
+def test_subscribe_overshoot_raises():
     """EFO stream sails numerically past the planned end without delivering
-    it (record expired between planning and a retry): bounded loud failure,
-    not an unbounded accumulation loop."""
+    it (record expired between the first read and a replay): bounded loud
+    failure, not an unbounded accumulation loop."""
     subs = [
         [{"SubscribeToShardEvent": {"Records": [rec(5, b"x"), rec(6, b"y")], "ContinuationSequenceNumber": "6"}}],
     ]
     client = FakeKinesisClient(SHARDS, subscriptions=subs)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    r = make_reader(client)
     with pytest.raises(RuntimeError, match="passed planned end"):
-        list(r.read(efo_part(start_seq="1", at_seq=None, end_seq="3")))
+        efo_read(client, start_seq="1", at_seq=None, end_seq="3")
 
 
-# -- read-task packing: a batch's small shard ranges share one task ---------
+# -- one batch, many shards: ranges in shard order, each at most the cap ----
 
 
 FOUR_SHARDS = {f"shard-000{s}": [rec(10 * s + i, f"s{s}r{i}".encode()) for i in (1, 2)] for s in range(4)}
 FOUR_ENDS = {s: {"seq": recs[-1]["SequenceNumber"], "at": recs[0]["SequenceNumber"]} for s, recs in FOUR_SHARDS.items()}
+FOUR_ROWS = [(s, r["SequenceNumber"], r["Data"]) for s, recs in FOUR_SHARDS.items() for r in recs]
 
 
-def _plan(shards, **opts):
+def _read(shards, **opts):
     r = make_reader(FakeKinesisClient(shards), startingPosition="trim_horizon", **opts)
-    start = r.initialOffset()
-    return r.partitions(start, r.latestOffset())
-
-
-def _shape(parts):
-    return [[rng.shard_id for rng in task.ranges] for task in parts]
+    rows, end = r.read(r.initialOffset())
+    return [(x[4], x[0], x[3]) for x in rows], end
 
 
 def test_small_ranges_share_one_task():
-    parts = _plan(FOUR_SHARDS)
-    assert _shape(parts) == [["shard-0000", "shard-0001", "shard-0002", "shard-0003"]]
-    # the cap bounds a task's planned records: 2 + 2 fit in 4, a third does not
-    parts = _plan(FOUR_SHARDS, maxRecordsPerBatch="4")
-    assert _shape(parts) == [["shard-0000", "shard-0001"], ["shard-0002", "shard-0003"]]
+    rows, end = _read(FOUR_SHARDS)
+    assert rows == FOUR_ROWS and end == FOUR_ENDS
+    # the cap bounds each shard's range, not the batch
+    rows, _end = _read(FOUR_SHARDS, maxRecordsPerBatch="1")
+    assert rows == FOUR_ROWS[::2]
 
 
-def test_range_at_the_cap_gets_its_own_task():
+def test_range_at_the_cap_is_cut_at_the_cap():
     shards = {
-        "shard-a": [rec(1), rec(2), rec(3)],  # planned range = the cap of 2
+        "shard-a": [rec(1), rec(2), rec(3)],  # range cut at the cap of 2
         "shard-b": [rec(10)],
         "shard-c": [rec(20)],
     }
-    parts = _plan(shards, maxRecordsPerBatch="2")
-    assert _shape(parts) == [["shard-a"], ["shard-b", "shard-c"]]
+    rows, end = _read(shards, maxRecordsPerBatch="2")
+    assert [(s, seq) for s, seq, _ in rows] == [("shard-a", "1"), ("shard-a", "2"), ("shard-b", "10"), ("shard-c", "20")]
+    assert end["shard-a"] == {"seq": "2", "at": "1"}
 
 
-def test_partitions_without_a_poll_plan_one_task_per_shard():
-    """Restart replay: the batch comes from the offset log, this reader never
-    polled its ranges, so their sizes are unknown and nothing is packed."""
+def test_read_between_offsets_reads_unfetched_ranges_in_order():
+    """Restart replay: the batch comes from the offset log and this reader
+    never fetched it; every shard range is re-read whole, in shard order."""
     r = make_reader(FakeKinesisClient(FOUR_SHARDS), startingPosition="trim_horizon")
-    parts = r.partitions({}, FOUR_ENDS)
-    assert _shape(parts) == [["shard-0000"], ["shard-0001"], ["shard-0002"], ["shard-0003"]]
+    rows = list(r.readBetweenOffsets({}, FOUR_ENDS))
+    assert [(x[4], x[0], x[3]) for x in rows] == FOUR_ROWS
 
 
-@pytest.mark.parametrize("consumer_arn", [None, "arn:aws:kinesis:us-east-1:1:stream/t/consumer/c:1"])
+@pytest.mark.parametrize("consumer_arn", [None, ARN])
 def test_multi_range_task_yields_each_exact_range_in_order(monkeypatch, consumer_arn):
     shards = {s: recs + [rec(int(recs[-1]["SequenceNumber"]) + 1, b"beyond")] for s, recs in FOUR_SHARDS.items()}
     client = FakeKinesisClient(shards)
@@ -618,31 +651,17 @@ def test_multi_range_task_yields_each_exact_range_in_order(monkeypatch, consumer
     monkeypatch.setattr(
         KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: built.append(1) or client)
     )
-    opts = {"streamName": "test-stream", "reconnectDelayMs": "1"}
-    if consumer_arn:
-        opts["consumerArn"] = consumer_arn
-    task = _ShardRanges(
-        ranges=tuple(_ShardRange(s, None, e["at"], e["seq"]) for s, e in FOUR_ENDS.items()),
-        options=opts,
-    )
-    rows = list(make_reader(client).read(task))
-    assert [(x[4], x[0], x[3]) for x in rows] == [
-        (s, r["SequenceNumber"], r["Data"]) for s, recs in FOUR_SHARDS.items() for r in recs
-    ]
-    assert len(built) == 1  # one reader, so one SDK client, for the whole task
+    opts = {"consumerArn": consumer_arn} if consumer_arn else {}
+    rows = list(make_reader(None, **opts).readBetweenOffsets({}, FOUR_ENDS))
+    assert [(x[4], x[0], x[3]) for x in rows] == FOUR_ROWS
+    assert len(built) == 1  # one reader, so one SDK client, for the whole batch
 
 
-def test_multi_range_task_raises_on_a_truncated_range(monkeypatch):
-    client = FakeKinesisClient(SHARDS)
-    monkeypatch.setattr(
-        KinesisEfoStreamReader, "client_factory", staticmethod(lambda opts: client)
-    )
-    task = _ShardRanges(
-        ranges=(_ShardRange("shard-0001", None, "1", "3"), _ShardRange("shard-0002", None, "10", "11")),
-        options={"streamName": "test-stream", "reconnectDelayMs": "1"},
-    )
+def test_multi_range_task_raises_on_a_truncated_range():
+    r = make_reader(FakeKinesisClient(SHARDS))
+    end = {"shard-0001": {"seq": "3", "at": "1"}, "shard-0002": {"seq": "11", "at": "10"}}
     rows = []
     with pytest.raises(RuntimeError, match="planned end '11' not reached on shard-0002"):
-        for row in make_reader(client).read(task):
+        for row in r.readBetweenOffsets({}, end):
             rows.append(row)
     assert [x[0] for x in rows] == ["1", "2", "3"]  # the intact range came first

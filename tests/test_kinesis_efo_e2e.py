@@ -1,7 +1,8 @@
 """END-TO-END Structured Streaming runs of the `kinesis_efo` source against
 the file-backed fake SDK client (tests/fake_kinesis_service.py) — the full
-MicroBatchExecution path: initialOffset → latestOffset → partitions →
-executor-side read() in Spark's Python runner process → sink → commit.
+MicroBatchExecution path: initialOffset → latestOffset (the reader's
+driver-side read, in Spark's Python planner process) → the prefetched rows
+planned as the batch → sink → commit.
 
 This is the live twin of the unit matrix in test_kinesis_efo.py, and the
 closest hermetic analogue of the reference's Bypass-server integration tests
@@ -85,9 +86,9 @@ def test_e2e_get_records_path(spark, tmp_path):
 
 
 def test_e2e_efo_subscribe_path(spark, tmp_path):
-    """With a consumerArn the executor reads ride subscribe_to_shard — and
-    from a DIFFERENT pid than the driver's planning calls (proving the
-    factory resolves inside the Python runner process)."""
+    """With a consumerArn the records ride subscribe_to_shard only, called
+    from Spark's Python planner process (proving the factory resolves
+    there), never from the test process itself."""
     d = str(tmp_path / "data")
     write_fake_shard(d, "shard-0001", [(1, b"efo-a"), (2, b"efo-b")])
     rows, calls = run_query(
@@ -101,11 +102,28 @@ def test_e2e_efo_subscribe_path(spark, tmp_path):
     # all reader methods run in Spark's Python runner processes, never the
     # test (driver JVM's client) process itself
     assert str(os.getpid()) not in sub_pids
-    # planning (latestOffset end-discovery) stays on get_records; the data
-    # itself rode the subscription (records delivered despite planning and
-    # reading happening in different runner processes = the offset pin and
-    # clientFactory re-import both work across the process boundary)
-    assert any(m == "get_records" for _pid, m in calls)
+    # the push pipe is the only read: no get_records pass finds the batch's
+    # end first
+    assert not any(m == "get_records" for _pid, m in calls)
+
+
+def test_e2e_every_sdk_call_comes_from_the_driver_planner(spark, tmp_path):
+    """Four shards over the push path: one process — Spark's Python planner
+    on the driver — makes every SDK call of the run, so no executor-side
+    Python read task fetches the batch again."""
+    d = str(tmp_path / "data")
+    for s in range(4):
+        write_fake_shard(d, f"shard-{s}", [(i, f"s{s}-{i}".encode()) for i in (1, 2, 3)])
+    rows, calls = run_query(
+        spark,
+        tmp_path,
+        consumerArn="arn:aws:kinesis:us-east-1:1:stream/fake/consumer/c:1",
+    )
+    assert sorted((r.shard_id, r.sequence_number) for r in rows) == [
+        (f"shard-{s}", str(i)) for s in range(4) for i in (1, 2, 3)
+    ]
+    pids = {pid for pid, _m in calls}
+    assert len(pids) == 1 and str(os.getpid()) not in pids, calls
 
 
 def test_e2e_restart_resumes_from_committed_cursor(spark, tmp_path):
@@ -150,8 +168,9 @@ def test_e2e_resharding_on_the_push_path(spark, tmp_path):
     """A7/A11 on the EFO push path (VERDICT r2 #7): the parent shard is fully
     consumed over subscribe_to_shard BEFORE it closes (run 1); after the
     split closes the parent and surfaces a child, the restarted query
-    discovers the child and subscribes to IT, while the drained-and-closed
-    parent plans no further batches (its subscription is never re-issued).
+    discovers the child and subscribes to IT, while the drained parent is
+    subscribed at most once more — the read that finds its close, which
+    yields no rows — and then never again.
     Parent records therefore all precede child records in the sink — the
     parent/child ordering a split must preserve when the parent is drained
     before children are consumed."""
@@ -170,9 +189,11 @@ def test_e2e_resharding_on_the_push_path(spark, tmp_path):
     rows2, calls2 = run_query(spark, tmp_path, consumerArn=arn)
     datas = sorted(bytes(r.data) for r in rows2)
     assert datas == [b"p1", b"p2", b"q1", b"q2"], datas
-    # Child consumed over the push pipe; closed parent never re-subscribed.
+    # Child consumed over the push pipe; the closed parent is subscribed at
+    # most once, and that subscribe adds no row.
     assert any(m == "subscribe_to_shard:shard-q" for _pid, m in calls2)
-    assert not any(m == "subscribe_to_shard:shard-p" for _pid, m in calls2)
+    assert sum(m == "subscribe_to_shard:shard-p" for _pid, m in calls2) <= 1
+    assert sorted(r.sequence_number for r in rows2 if r.shard_id == "shard-p") == ["1", "2"]
     # Every parent row was written by run 1, before any child row existed —
     # parent-before-child ordering held through the split.
     assert {r.shard_id for r in rows1} == {"shard-p"}
@@ -225,8 +246,7 @@ def test_e2e_expired_consumer_arn_is_fatal(spark, tmp_path):
 
 
 def test_e2e_max_records_per_batch_paces_multiple_batches(spark, tmp_path):
-    """maxRecordsPerBatch bounds each micro-batch through REAL triggers (A16)
-    while the pending-plan cache keeps planning to one poll per batch:
+    """maxRecordsPerBatch bounds each micro-batch through REAL triggers (A16):
     5 records with a cap of 2 need >= 3 batches, each record exactly once."""
     import time
 

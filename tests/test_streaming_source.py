@@ -207,10 +207,11 @@ def _read_tasks(spark, query) -> list[int]:
     return out
 
 
-@pytest.mark.parametrize("max_per_batch,tasks", [(None, 1), (3, 4)], ids=["packed", "at_cap"])
-def test_small_shard_ranges_share_one_read_task(sparkr, tmp_path, max_per_batch, tasks):
-    """Four small shards: one micro-batch reads all their ranges in ONE task,
-    each record exactly once. Ranges that equal the cap are not packed."""
+@pytest.mark.parametrize("max_per_batch", [None, 3], ids=["packed", "at_cap"])
+def test_small_shard_ranges_share_one_read_task(sparkr, tmp_path, max_per_batch):
+    """Four small shards: one micro-batch serves all their ranges, fetched by
+    the driver's read, in ONE task, each record exactly once — ranges at the
+    cap included."""
     global _QCOUNT
     _QCOUNT += 1
     name = f"replay_sink_{_QCOUNT}"
@@ -224,7 +225,7 @@ def test_small_shard_ranges_share_one_read_task(sparkr, tmp_path, max_per_batch,
     q = reader.load().writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
     assert q.awaitTermination(120), "stream did not finish in time"
     assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [12]
-    assert _read_tasks(sparkr, q) == [tasks]
+    assert _read_tasks(sparkr, q) == [1]
     keys = [(r.shard_id, r.sequence_number) for r in sparkr.sql(f"SELECT * FROM {name}").collect()]
     assert sorted(keys) == [(f"shard-{s}", str(i)) for s in range(4) for i in (1, 2, 3)]
 
@@ -266,6 +267,59 @@ def test_restart_resumes_from_checkpoint_not_starting_position(sparkr, tmp_path)
         b"second",
         b"third",
     ]
+
+
+def test_uncommitted_batch_is_replayed_with_identical_rows(sparkr, tmp_path):
+    """A restart between offset commit and sink commit: the batch the offset
+    log holds but the commit log does not is re-read through
+    readBetweenOffsets (the restarted reader never fetched it) with the
+    rows the first run saw, and later batches neither repeat nor skip a
+    record."""
+    d = str(tmp_path / "stream")
+    ck = str(tmp_path / "ck")
+    for s in ("s0", "s1"):
+        write_shard(d, s, [ev(i, f"{s}-{i}".encode()) for i in range(1, 6)])
+    batches: list[tuple[int, list]] = []
+
+    def sink(df, batch_id):
+        rows = sorted((r.shard_id, r.sequence_number, bytes(r.data)) for r in df.collect())
+        batches.append((batch_id, rows))
+
+    def run_once():
+        q = (
+            sparkr.readStream.format("kinesis_replay")
+            .option("path", d)
+            .option("startingPosition", "trim_horizon")
+            .option("maxRecordsPerBatch", "2")
+            .load()
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ck)
+            .trigger(processingTime="100 milliseconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run_once()
+    first = dict(batches)
+    last = max(first)
+    assert last >= 2 and all(first.values())
+    for name in (str(last), f".{last}.crc"):
+        path = os.path.join(ck, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    for s in ("s0", "s1"):
+        with open(os.path.join(d, f"{s}.jsonl"), "a", encoding="utf-8") as f:
+            for i in (6, 7):
+                f.write(json.dumps(ev(i, f"{s}-{i}".encode())) + "\n")
+    del batches[:]
+    run_once()
+    assert batches[0] == (last, first[last])
+    keys = [(sh, seq) for b, rows in first.items() if b < last for sh, seq, _ in rows]
+    keys += [(sh, seq) for _b, rows in batches for sh, seq, _ in rows]
+    assert sorted(keys) == sorted((s, str(i)) for s in ("s0", "s1") for i in range(1, 8))
 
 
 def test_mid_stream_exception_surfaces_typed_error(sparkr, tmp_path):

@@ -4,21 +4,22 @@
 The reference is an ingest connector whose ceiling is the AWS enhanced-
 fan-out quota: 2 MB/s/shard (BASELINE.md). This tool measures the ENGINE
 side of that pipeline hermetically — the full Structured Streaming path
-(initialOffset → partition planning → executor-side read + base64 decode →
-parquet sink → commit) against the file-backed fake SDK client, no
-network. The resulting MB/s is the engine's intrinsic per-node capacity:
-as long as it exceeds 2 MB/s × shards, the connector — like the
-reference's — is quota-bound, not engine-bound, and extra shards scale
-linearly across executors.
+(initialOffset → the driver's read of the batch + base64 decode → Arrow
+hand-off to the JVM → parquet sink → commit) against the file-backed fake
+SDK client, no network. The resulting MB/s is the engine's intrinsic
+capacity: as long as it exceeds 2 MB/s × shards, the connector — like the
+reference's — is quota-bound, not engine-bound. The driver reads every
+shard in one Python process, so this figure is the source's ceiling
+whatever the executor count.
 
 Prints ONE JSON line:
     {"metric": "ingest_throughput", "mb_per_s": N, "records_per_s": N,
      "read_tasks_per_batch": N, ...}
 
 ``read_tasks_per_batch`` is the Spark tasks the query's micro-batches ran
-(its job group is its run id), per batch that read records: the source packs
-small shard ranges into shared read tasks, up to ``maxRecordsPerBatch``
-records each.
+(its job group is its run id), per batch that read records: the driver's
+read fetches every shard's range, and Spark serves the batch's rows from the
+block manager as one partition, so it reads 1 whatever the shard count.
 
 Sizing via env: INGEST_SHARDS (default 8), INGEST_RECORDS per shard
 (default 4000), INGEST_PAYLOAD bytes per record (default 1024).
