@@ -62,8 +62,9 @@ only one.
   without one. It stops at the cap (the last event is cut there), at a
   caught-up event (``MillisBehindLatest`` 0), at a null continuation (the
   shard closed) or when the stream ends. AWS allows one ``SubscribeToShard``
-  per second per consumer per shard, so keep the trigger interval at 1 s or
-  more.
+  per second per consumer per shard, so a subscribe within a second of the
+  shard's last one first waits out the rest of that second: a trigger
+  interval under 1 s gains nothing, and one of 1 s or more never waits.
 - Without a consumer ARN, and for a shard still on a floating ``latest``
   position, the fetch polls ``get_records``, continuing one iterator chain
   across triggers until the first record pins a cursor.
@@ -72,7 +73,19 @@ only one.
 
 Driver memory holds the rows of at most three batches (shards ×
 ``maxRecordsPerBatch`` records each): Spark keeps a batch's rows until it
-commits the source offsets of the batch after it.
+commits the source offsets of the batch after it. Each batch reaches Spark
+as one partition, and the driver fetches the shards one after another.
+Measured on a 4-vCPU host, draining a backlog of 4 shards × 20,000 × 1 KiB
+records at the default cap (40 MB of payload per batch), the driver's source
+process peaked at about 430 MB (the file-backed test client's copy of the
+whole stream included), about 45 MB above a process that fetched the same
+batches without keeping them; budget driver memory by shard count and
+record size accordingly.
+
+On restart, Spark hands the offset log's latest end to the reader before
+its first read (``setLatestSeenOffset``, which the Python wrapper takes as
+its read cursor), so the first read continues from the checkpoint, not from
+``startingPosition``.
 
 ``readBetweenOffsets(start, end)`` re-reads a batch of the offset log that
 this reader did not fetch: a restart between offset commit and sink commit.
@@ -126,6 +139,7 @@ FATAL_ERRORS = frozenset(
 
 DEFAULT_RECONNECT_DELAY_MS = 70_000  # producer.ex:37
 DEFAULT_MAX_ATTEMPTS = 3
+SUBSCRIBE_INTERVAL_S = 1.0  # AWS: one SubscribeToShard per second per consumer per shard
 
 
 def _default_client_factory(options: dict):
@@ -290,6 +304,7 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
         self._client = None
         self._live_iters: dict[str, dict] = {}  # iterator chains of unpinned shards
         self._closed: set[str] = set()  # shards whose read reached their close
+        self._subscribed_at: dict[str, float] = {}  # monotonic time of each shard's last subscribe
 
     # -- SDK plumbing -----------------------------------------------------
 
@@ -398,82 +413,49 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                 break  # caught up
         return records[:limit], it is None, it
 
-    def _subscribe(
-        self, shard_id: str, original: dict, *, limit: int, end_seq: str | None = None
-    ) -> tuple[list[dict], bool]:
-        """A1: consume the EFO push event stream from ``original``; returns
-        (records, shard_closed).
+    def _subscription_events(self, shard_id: str, position: dict):
+        """A1: the SubscribeToShardEvents of one subscription from
+        ``position``, in order.
 
         Mirrors the reference's streaming loop (`subscribe_to_shard.ex`):
-        each SubscribeToShardEvent advances the resume position to AFTER its
-        ContinuationSequenceNumber, and a null continuation means the shard
-        closed (A7). Exception events classify through the A10 taxonomy:
-        transient → paced re-subscribe from the last continuation, fatal →
-        raise. Two modes:
-
-        - a bounded fetch (``end_seq`` None, the driver's ``read``) stops at
-          ``limit`` records (the last event is cut there), at a caught-up
-          event (``MillisBehindLatest`` 0), at a close, or when the stream
-          ends;
-        - a range re-read (``end_seq`` set) stops once ``end_seq`` arrives or
-          the shard closes. A stream the server ends first (the 5-minute
-          subscription limit) is re-requested AFTER the last continuation,
-          or from ``original`` if no event arrived yet
-          (`subscribe_to_shard_test.exs:145-189`).
+        each event advances the resume position to AFTER its
+        ContinuationSequenceNumber. Exception events classify through the
+        A10 taxonomy: transient → paced re-subscribe from the last
+        continuation, fatal → raise. Ends when the server ends the stream;
+        closing the generator closes the stream, so a caller that stops
+        early leaves no subscription open.
         """
         cli = self._cli()
-        end_i = _seq_int(end_seq)
-        pos = original
-        got_event = False
-        out: list[dict] = []
         errors = 0
-        idle_rounds = 0
         while True:
+            # AWS allows one SubscribeToShard per second per consumer per
+            # shard: a call within that second of the shard's last one
+            # waits out the rest of it rather than trip LimitExceeded (a
+            # transient error, whose retry would stall for reconnectDelayMs).
+            wait = self._subscribed_at.get(shard_id, -SUBSCRIBE_INTERVAL_S) + (
+                SUBSCRIBE_INTERVAL_S - time.monotonic()
+            )
+            if wait > 0:
+                time.sleep(wait)
+            self._subscribed_at[shard_id] = time.monotonic()
             resp = self._retry(
-                lambda pos=pos: cli.subscribe_to_shard(
+                lambda pos=position: cli.subscribe_to_shard(
                     ConsumerARN=self.consumer_arn,
                     ShardId=shard_id,
                     StartingPosition=pos,
                 )
             )
             stream = resp["EventStream"]
-            progressed = False
             try:
                 for event in stream:
                     ev = event.get("SubscribeToShardEvent")
                     if ev is None:
                         continue  # initial-response etc. (subscribe_to_shard.ex:341)
-                    got_event = progressed = True
-                    recs = _with_lag(ev.get("Records", []), ev.get("MillisBehindLatest"))
+                    yield ev
                     cont = ev.get("ContinuationSequenceNumber")
-                    if end_seq is None:
-                        room = limit - len(out)
-                        out += recs[:room]
-                        if len(recs) > room:
-                            return out, False  # cut at the cap
-                        if cont is None:
-                            return out, True  # shard closed (A7)
-                        if len(out) >= limit or ev.get("MillisBehindLatest") == 0:
-                            return out, False
-                    else:
-                        out += recs
-                        if any(r["SequenceNumber"] == end_seq for r in recs):
-                            return out, False
-                        # Overshoot guard: sequences numerically PAST the
-                        # planned end without ever matching it (record
-                        # expired between the first read and this one):
-                        # fail loudly instead of reading the live stream
-                        # forever.
-                        if end_i is not None and any(
-                            (_seq_int(r["SequenceNumber"]) or -1) > end_i for r in recs
-                        ):
-                            raise RuntimeError(
-                                f"subscribe_to_shard: stream passed planned end "
-                                f"{end_seq!r} on {shard_id} without delivering it"
-                            )
-                        if cont is None:
-                            return out, True  # shard closed mid-range (A7)
-                    pos = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cont}
+                    if cont is not None:
+                        position = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cont}
+                return
             except Exception as exc:  # exception event mid-stream (A5/A10)
                 if not _is_transient(exc):
                     raise
@@ -481,19 +463,73 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                 if errors >= self.max_attempts:
                     raise
                 time.sleep(self.delay_ms / 1000.0)
-                continue
             finally:
                 close = getattr(stream, "close", None)
                 if close is not None:
-                    close()  # leave no subscription open behind an early stop
-            if end_seq is None:
-                return out, False  # the stream ended: take what arrived
-            # Stream ended without error (server-side time limit): re-request
-            # from the continuation, or the original position if nothing
-            # arrived yet. Bound consecutive empty streams so a planning bug
-            # can't spin forever against a quiet shard.
-            if not got_event:
-                pos = original
+                    close()
+
+    def _subscribe_batch(self, shard_id: str, position: dict) -> tuple[list[dict], bool]:
+        """The driver's bounded EFO fetch from ``position``; returns
+        (records, shard_closed). Stops at ``maxRecordsPerBatch`` records (the
+        last event is cut there), at a caught-up event (``MillisBehindLatest``
+        0), at a null continuation (the shard closed, A7), or when the stream
+        ends."""
+        out: list[dict] = []
+        events = self._subscription_events(shard_id, position)
+        try:
+            for ev in events:
+                recs = _with_lag(ev.get("Records", []), ev.get("MillisBehindLatest"))
+                room = self.max_per_batch - len(out)
+                out += recs[:room]
+                if len(recs) > room:
+                    return out, False
+                if ev.get("ContinuationSequenceNumber") is None:
+                    return out, True
+                if len(out) >= self.max_per_batch or ev.get("MillisBehindLatest") == 0:
+                    return out, False
+        finally:
+            events.close()
+        return out, False
+
+    def _subscribe_range(self, shard_id: str, original: dict, end_seq: str) -> list[dict]:
+        """EFO re-read of a planned range from ``original`` until ``end_seq``
+        arrives or the shard closes. A stream the server ends first (the
+        5-minute subscription limit) is re-requested AFTER the last
+        continuation, or from ``original`` if no event arrived yet
+        (`subscribe_to_shard_test.exs:145-189`)."""
+        end_i = _seq_int(end_seq)
+        pos = original
+        out: list[dict] = []
+        idle_rounds = 0
+        while True:
+            progressed = False
+            events = self._subscription_events(shard_id, pos)
+            try:
+                for ev in events:
+                    progressed = True
+                    recs = _with_lag(ev.get("Records", []), ev.get("MillisBehindLatest"))
+                    out += recs
+                    if any(r["SequenceNumber"] == end_seq for r in recs):
+                        return out
+                    # Overshoot guard: sequences numerically PAST the planned
+                    # end without ever matching it (record expired between
+                    # the first read and this one): fail loudly instead of
+                    # reading the live stream forever.
+                    if end_i is not None and any(
+                        (_seq_int(r["SequenceNumber"]) or -1) > end_i for r in recs
+                    ):
+                        raise RuntimeError(
+                            f"subscribe_to_shard: stream passed planned end "
+                            f"{end_seq!r} on {shard_id} without delivering it"
+                        )
+                    cont = ev.get("ContinuationSequenceNumber")
+                    if cont is None:
+                        return out  # shard closed mid-range (A7)
+                    pos = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cont}
+            finally:
+                events.close()
+            # Bound consecutive empty streams so a planning bug can't spin
+            # forever against a quiet shard.
             idle_rounds = 0 if progressed else idle_rounds + 1
             if idle_rounds >= self.max_attempts:
                 raise RuntimeError(
@@ -511,7 +547,7 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                 if cursor is not None
                 else self.position.wire_format()
             )
-            return self._subscribe(shard_id, pos, limit=self.max_per_batch)
+            return self._subscribe_batch(shard_id, pos)
         # For a shard with no concrete cursor yet, continue the SAME iterator
         # chain across triggers: re-resolving a floating LATEST each trigger
         # would skip every record that arrived in between.
@@ -596,9 +632,7 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                 pos = {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": at_seq}
             else:
                 pos = self.position.wire_format()
-            records, _closed = self._subscribe(
-                shard_id, pos, limit=self.max_per_batch, end_seq=end_seq
-            )
+            records = self._subscribe_range(shard_id, pos, end_seq)
         else:
             records, closed, _it = self._poll(
                 shard_id, start_seq, self.max_per_batch, at_seq=at_seq

@@ -4,10 +4,13 @@ offset math, starting positions, shard discovery, retry taxonomy, EOF."""
 
 from __future__ import annotations
 
+import time
 from datetime import datetime
+from types import SimpleNamespace
 
 import pytest
 
+from broadway_kinesis_spark.sources import kinesis_efo as efo_mod
 from broadway_kinesis_spark.sources.kinesis_efo import (
     KinesisEfoStreamReader,
     _call_with_retry,
@@ -393,6 +396,43 @@ def test_efo_driver_read_subscribes_once_per_shard():
         ("shard-0002", {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": "10"}),
     ]
     assert "get_records" not in client.calls and "get_shard_iterator" not in " ".join(client.calls)
+
+
+def test_efo_back_to_back_reads_subscribe_each_shard_at_most_once_a_second(monkeypatch):
+    """AWS allows one SubscribeToShard per second per consumer per shard:
+    a read within that second of a shard's last subscribe waits out the
+    rest of it before subscribing again, instead of tripping
+    LimitExceededException (whose retry would stall for reconnectDelayMs)."""
+    clock = [100.0]
+    stamps: list[tuple[str, float]] = []
+
+    def sleep(s):
+        clock[0] += s
+
+    monkeypatch.setattr(
+        efo_mod, "time", SimpleNamespace(monotonic=lambda: clock[0], sleep=sleep, time=time.time)
+    )
+    client = FakeKinesisClient(SHARDS)
+    real_subscribe = client.subscribe_to_shard
+
+    def subscribe(**kw):
+        stamps.append((kw["ShardId"], clock[0]))
+        return real_subscribe(**kw)
+
+    client.subscribe_to_shard = subscribe
+    r = make_reader(client, startingPosition="trim_horizon", consumerArn=ARN)
+    _rows, end = r.read(r.initialOffset())
+    clock[0] += 0.25
+    r.read(end)
+    clock[0] += 2.0
+    r.read(end)
+    for shard in SHARDS:
+        times = [t for s, t in stamps if s == shard]
+        assert len(times) == 3
+        assert all(b - a >= 1.0 for a, b in zip(times, times[1:]))
+    # the second read waited the rest of the second once, not per shard; the
+    # third, 2 s later, did not wait
+    assert [t for s, t in stamps if s == "shard-0001"] == [100.0, 101.0, 103.0]
 
 
 def test_efo_driver_read_cuts_the_last_event_at_the_cap():

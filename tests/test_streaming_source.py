@@ -269,6 +269,48 @@ def test_restart_resumes_from_checkpoint_not_starting_position(sparkr, tmp_path)
     ]
 
 
+def test_capped_restart_after_committed_batch_delivers_each_record_once(sparkr, tmp_path):
+    """A restart after the last batch committed, with batches capped below
+    the shard length: the restarted reader resumes from the checkpoint's
+    cursor, not from startingPosition, so neither the records of the first
+    run nor the appended ones arrive twice."""
+    d = str(tmp_path / "stream")
+    ck = str(tmp_path / "ck")
+    for s in ("s0", "s1"):
+        write_shard(d, s, [ev(i, f"{s}-{i}".encode()) for i in range(1, 6)])
+    keys: list[tuple[str, str]] = []
+
+    def sink(df, _batch_id):
+        keys.extend((r.shard_id, r.sequence_number) for r in df.collect())
+
+    def run_once():
+        q = (
+            sparkr.readStream.format("kinesis_replay")
+            .option("path", d)
+            .option("startingPosition", "trim_horizon")
+            .option("maxRecordsPerBatch", "2")
+            .load()
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ck)
+            .trigger(processingTime="100 milliseconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run_once()
+    assert sorted(keys) == sorted((s, str(i)) for s in ("s0", "s1") for i in range(1, 6))
+    for s in ("s0", "s1"):
+        with open(os.path.join(d, f"{s}.jsonl"), "a", encoding="utf-8") as f:
+            for i in (6, 7):
+                f.write(json.dumps(ev(i, f"{s}-{i}".encode())) + "\n")
+    run_once()
+    assert len(keys) == len(set(keys))
+    assert sorted(keys) == sorted((s, str(i)) for s in ("s0", "s1") for i in range(1, 8))
+
+
 def test_uncommitted_batch_is_replayed_with_identical_rows(sparkr, tmp_path):
     """A restart between offset commit and sink commit: the batch the offset
     log holds but the commit log does not is re-read through
