@@ -56,7 +56,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from broadway_kinesis_spark.operators.imagehash import (
     B_BLOCKS,
@@ -123,10 +122,20 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate audio pairs: 555-bit three-envelope fingerprint
     (magnitude / energy / first-difference) per decoded clip, 24-band
     Hamming candidate join, exact total-Hamming verify."""
+    fps = audio_fingerprints(load(spark, sf_dir, "documents")).cache()
+    return banded_pairs(fps, N_MEASURES, AUDIO_BANDS_PER_WORD, AUDIO_HAM_T)
+
+
+def audio_fingerprints(docs: DataFrame) -> DataFrame:
+    """(media_id, w0..w11) of each document's WAV clip through the REAL
+    decode path (RIFF-walking :func:`multimodal.decode_wav` + the
+    three-envelope :func:`imagehash.phash_words`), Arrow-batched — the
+    fingerprints of ``dedup_audio_fingerprint`` and of its incremental
+    channel's band table."""
     import numpy as np
     import pandas as pd
 
-    media = as_wav_media(load(spark, sf_dir, "documents"))
+    media = as_wav_media(docs)
     cols = w_cols(N_MEASURES)
 
     def hash_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -148,7 +157,6 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["media_id", *cols])
 
-    fps = media.select("media_id", "payload").mapInPandas(
+    return media.select("media_id", "payload").mapInPandas(
         hash_batch, words_schema(N_MEASURES)
-    ).cache()
-    return banded_pairs(fps, N_MEASURES, AUDIO_BANDS_PER_WORD, AUDIO_HAM_T)
+    )

@@ -9,7 +9,9 @@ three-envelope magnitude/energy/first-difference construction of
 (24 bands of 22–24 bits, ``imagehash.make_bands(3, 2)``). A delta of
 clips arrives; only the delta DECODES (the RIFF walk + int16 sample read
 is the channel's dominant cost — a fingerprint is 96 bytes, the payload
-is the clip); version N serves from a persisted band table.
+is the clip, through the inline channel's own builder
+:func:`audiohash.audio_fingerprints`); version N serves from a persisted
+band table.
 
 Persisted artifact (:func:`ensure_audio_bands`): ``(media_id, bkeyc,
 w0..w11)`` — one row per (clip, band), with (band id, band value) packed
@@ -20,7 +22,10 @@ so delta probes sort-merge against the stored side without shuffling it
 — the shared incremental layout protocol (ngram index → image bands →
 these). Fingerprint words ride in the band rows, so the exact
 total-Hamming verify (<= {AUDIO_HAM_T}) runs off the join output without
-re-reading version-N payloads.
+re-reading version-N payloads. Band rows and the probe are the image
+channel's :func:`imagehash.packed_band_rows` and
+:func:`imagehash.probe_banded_pairs` at this packing, band layout and
+Hamming budget.
 
 Pairs the delta introduces are exactly ``m2 >= boundary`` (version-N ids
 all sit below every delta id and pairs are (m1 < m2)), so the registered
@@ -42,8 +47,6 @@ family; the reference has no media surface).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,20 +55,16 @@ from broadway_kinesis_spark.functions.versioned_fold import (
     VersionedArtifact,
     spread_delta,
 )
-from broadway_kinesis_spark.operators import audiohash as _audiohash  # noqa: F401 (registers the inline twin)
 from broadway_kinesis_spark.operators.audiohash import (
     AUDIO_BANDS_PER_WORD,
     AUDIO_HAM_T,
     N_MEASURES,
+    audio_fingerprints,
 )
 from broadway_kinesis_spark.operators.imagehash import (
-    _hamming_expr,
-    make_bands,
-    phash_words,
-    w_cols,
-    words_schema,
+    packed_band_rows,
+    probe_banded_pairs,
 )
-from broadway_kinesis_spark.operators.multimodal import as_wav_media, decode_wav
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
@@ -74,69 +73,19 @@ from broadway_kinesis_spark.session import load
 BAND_BUCKETS = 8
 
 #: audio band widths reach 24 bits (48-bit words / 2 bands), so the
-#: injective (bid, bkey) packing shifts by 25 — asserted against the
-#: actual band spec below, not assumed.
+#: injective (bid, bkey) packing shifts by 25 (``packed_band_rows``
+#: asserts every width fits).
 _PACK_SHIFT = 25
-
-_AUDIO_BANDS = make_bands(N_MEASURES, AUDIO_BANDS_PER_WORD)
-assert all(width < _PACK_SHIFT for (_, _, width) in _AUDIO_BANDS)
-
-_W = w_cols(N_MEASURES)
-_N_WORDS = len(_W)
 
 #: the inline channel's oracle OBJECT — importing operators.audiohash above
 #: ran its @query decorator, so this lookup can never miss nor drift.
 _INLINE_ORACLE = REGISTRY["dedup_audio_fingerprint"].oracle
 
 
-def _fingerprints(docs: DataFrame) -> DataFrame:
-    """(media_id, w0..w11) via the REAL decode path — the same RIFF-walking
-    decode_wav + three-envelope phash_words the inline channel runs,
-    Arrow-batched. Clips with no samples carry no envelope and are
-    excluded, exactly as in both inline engines."""
-    import numpy as np
-    import pandas as pd
-
-    media = as_wav_media(docs)
-
-    def hash_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, _rate = decode_wav(bytes(payload))
-                if samples.shape[0] == 0:
-                    continue
-                s = samples.astype(np.int64)
-                mag = np.abs(s)
-                rows.append(
-                    (
-                        int(mid),
-                        *phash_words(mag),
-                        *phash_words(mag * mag),
-                        *phash_words(np.abs(np.diff(s))),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", *_W])
-
-    return media.select("media_id", "payload").mapInPandas(
-        hash_batch, words_schema(N_MEASURES)
-    )
-
-
-def _band_rows(fps: DataFrame) -> DataFrame:
-    """(media_id, bkeyc, w0..w11): one row per band, with (bid, bkey)
-    packed into the single injective key ``bid * 2^{_PACK_SHIFT} + bkey``."""
-    keys = [
-        F.lit(bid * (1 << _PACK_SHIFT))
-        + (
-            F.expr(f"shiftright(w{w}, {shift})").bitwiseAND(
-                F.lit((1 << width) - 1)
-            )
-        )
-        for bid, (w, shift, width) in enumerate(_AUDIO_BANDS)
-    ]
-    return fps.select(
-        "media_id", *_W, F.explode(F.array(*keys)).alias("bkeyc")
+def _bands(docs: DataFrame) -> DataFrame:
+    """(media_id, bkeyc, w0..w11): the docs' packed band rows."""
+    return packed_band_rows(
+        audio_fingerprints(docs), N_MEASURES, AUDIO_BANDS_PER_WORD, _PACK_SHIFT
     )
 
 
@@ -146,7 +95,7 @@ AUDIO_BANDS = VersionedArtifact(
     name="audio_bands",
     prefix="_bks_aubands_",
     policy=f"r11s3:aufp555:h{AUDIO_HAM_T}:b{BAND_BUCKETS}",
-    rows=lambda docs: _band_rows(_fingerprints(docs)),
+    rows=_bands,
     bucket_by=(BAND_BUCKETS, "bkeyc"),
 )
 ensure_audio_bands = AUDIO_BANDS.ensure
@@ -194,36 +143,5 @@ def incremental_audio_pairs(
     d = load(spark, sf_dir, "documents")
     # One decode pass for the delta, shared by the probe side and the
     # new-new self-join (two consumers; delta-bounded by construction).
-    delta_bands = _band_rows(
-        _fingerprints(spread_delta(d.filter(F.col("doc_id") >= boundary)))
-    ).cache()
-
-    def side(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            F.col("media_id").alias(f"m{tag}"),
-            *[
-                F.col(f"w{i}").alias(f"{'a' if tag == '1' else 'b'}{i}")
-                for i in range(_N_WORDS)
-            ],
-            "bkeyc",
-        )
-
-    b = side(delta_bands, "2")
-    old_cand = side(stored, "1").join(b, "bkeyc")
-    new_cand = side(delta_bands, "1").join(b, "bkeyc")
-    cand = (
-        old_cand.unionByName(new_cand)
-        .filter(F.col("m1") < F.col("m2"))
-        .select(
-            "m1",
-            "m2",
-            *[f"a{i}" for i in range(_N_WORDS)],
-            *[f"b{i}" for i in range(_N_WORDS)],
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", _hamming_expr(_N_WORDS))
-        .filter(F.col("hamming") <= AUDIO_HAM_T)
-        .select("m1", "m2", "hamming")
-    )
+    delta_bands = _bands(spread_delta(d.filter(F.col("doc_id") >= boundary))).cache()
+    return probe_banded_pairs(stored, delta_bands, N_MEASURES, AUDIO_HAM_T)

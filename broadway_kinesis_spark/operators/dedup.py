@@ -222,8 +222,6 @@ def minhash_candidates(
     """Band-collision candidate pairs only (pre-verification) — split out
     so the banding sweep can price candidate volume separately from
     verified recall."""
-    assert n_sig % band_r == 0, "band width must divide the signature"
-    n_bands = n_sig // band_r
     from broadway_kinesis_spark.session import size_shuffle_partitions
 
     # The signature aggregate (N_SIG salted md5-min's over every shingle
@@ -233,6 +231,27 @@ def minhash_candidates(
     # host; bytes-sizing still governs at corpus scale).
     size_shuffle_partitions(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
+    # both sides of the candidate self-join read the band rows
+    bands = minhash_bands(docs, n_sig, band_r).cache()
+    a = bands.select(F.col("doc_id").alias("d1"), "bi", "bk")
+    b = bands.select(F.col("doc_id").alias("d2"), "bi", "bk")
+    return (
+        a.join(b, ["bi", "bk"])
+        .filter(F.col("d1") < F.col("d2"))
+        .select("d1", "d2")
+        .distinct()
+        .cache()  # read twice: doc-id filter + verification join
+    )
+
+
+def minhash_bands(docs: DataFrame, n_sig: int, band_r: int) -> DataFrame:
+    """(doc_id, bi, bk): each doc's ``n_sig``-hash MinHash signature (min of
+    salted md5 over its word 3-grams) cut into bands of ``band_r`` rows,
+    band ``bi`` keyed by the md5 ``bk`` of its concatenated rows — the
+    band rows of ``dedup_minhash_lsh`` and of its incremental channel's
+    persisted band table."""
+    assert n_sig % band_r == 0, "band width must divide the signature"
+    n_bands = n_sig // band_r
     # Signature path uses the shingle stream WITH repetition — min() is
     # duplicate-insensitive, so skipping the distinct keeps everything in
     # codegen with no extra shuffle. The salted md5s are plain projected
@@ -258,18 +277,7 @@ def minhash_candidates(
         "md5(concat(" + ", ".join(f"h{b * band_r + r}" for r in range(band_r)) + "))"
         for b in range(n_bands)
     )
-    bands = sig.selectExpr(
-        "doc_id", f"posexplode(array({keys})) AS (bi, bk)"
-    ).cache()  # both sides of the candidate self-join read it
-    a = bands.select(F.col("doc_id").alias("d1"), "bi", "bk")
-    b = bands.select(F.col("doc_id").alias("d2"), "bi", "bk")
-    return (
-        a.join(b, ["bi", "bk"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .distinct()
-        .cache()  # read twice: doc-id filter + verification join
-    )
+    return sig.selectExpr("doc_id", f"posexplode(array({keys})) AS (bi, bk)")
 
 
 @query(
@@ -441,10 +449,16 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints mark near-identical docs (`n_sharing`). One explode + one
     hash-agg by doc — a map-side-combinable shuffle; the fingerprint compare
     is free (equi-grouping, extendable to hamming-band joins)."""
-    from pyspark.sql import Window
+    fp = simhash_fingerprints(load(spark, sf_dir, "documents"))
+    return fp.withColumn(
+        "n_sharing", F.count(F.lit(1)).over(Window.partitionBy("simhash"))
+    )
 
-    d = load(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token"))
+
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash) — the fingerprint of ``dedup_simhash`` and of its
+    incremental channel's per-fingerprint count table."""
+    tok = docs.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token"))
     h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
     hashed = tok.select("doc_id", h.alias("h"))
     bitsums = hashed.groupBy("doc_id").agg(
@@ -462,10 +476,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp_col = fp_terms[0]
     for t in fp_terms[1:]:
         fp_col = fp_col + t
-    fp = bitsums.select("doc_id", fp_col.alias("simhash"))
-    return fp.withColumn(
-        "n_sharing", F.count(F.lit(1)).over(Window.partitionBy("simhash"))
-    )
+    return bitsums.select("doc_id", fp_col.alias("simhash"))
 
 
 _SQL_DOT = "list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2]))"

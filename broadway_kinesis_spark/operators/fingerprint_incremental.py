@@ -5,10 +5,12 @@ Completes the daily-production incremental loop across the near-dup
 channel families: text exact/ngram (``incremental_batch``), embeddings
 (``embedding_incremental``), and here the perceptual-fingerprint channel
 (``imagehash`` — the decoded-pixel dHash the image/audio/video operators
-share). A delta of media arrives; it is near-dup-checked against version
-N's PERSISTED band index — version N's media are never re-DECODED, which
-at 100 TB is the dominant cost of this channel (the fingerprint is 4
-words = 32 bytes per media; the decode reads the payload).
+share; fingerprints come from the inline channel's own builder
+:func:`imagehash.image_fingerprints`). A delta of media arrives; it is
+near-dup-checked against version N's PERSISTED band index — version N's
+media are never re-DECODED, which at 100 TB is the dominant cost of this
+channel (the fingerprint is 4 words = 32 bytes per media; the decode
+reads the payload).
 
 Persisted artifact (:func:`ensure_phash_bands`): the BAND table
 ``(media_id, bkeyc, w0..w3)`` — one row per (media, band) with the band
@@ -20,7 +22,9 @@ shuffling it — the ngram-index layout story
 (incremental_batch.ensure_ngram_index) applied to the banded-Hamming
 family. The fingerprint words ride in the band rows, so verification
 (summed ``bit_count(xor)`` <= {HAM_T}) runs off the join output without
-ever touching version-N payloads.
+ever touching version-N payloads. Band rows and the probe are
+:func:`imagehash.packed_band_rows` and :func:`imagehash.probe_banded_pairs`,
+shared with the audio channel.
 
 Pairs the delta introduces are exactly ``m2 >= boundary`` (version-N ids
 all sit below every delta id and pairs are (m1 < m2)), so the registered
@@ -46,8 +50,6 @@ family; the reference has no media surface).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,16 +58,13 @@ from broadway_kinesis_spark.functions.versioned_fold import (
     VersionedArtifact,
     spread_delta,
 )
-from broadway_kinesis_spark.operators import imagehash as _imagehash  # noqa: F401 (registers the inline twin)
 from broadway_kinesis_spark.operators.imagehash import (
-    BANDS,
+    BANDS_PER_WORD,
     HAM_T,
-    _hamming_expr,
-    phash_words,
-    w_cols,
-    words_schema,
+    image_fingerprints,
+    packed_band_rows,
+    probe_banded_pairs,
 )
-from broadway_kinesis_spark.operators.multimodal import as_ppm_media, decode_image
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
@@ -73,50 +72,17 @@ from broadway_kinesis_spark.session import load
 #: like any bucketed table at deployment scale (incremental_batch.IDX_BUCKETS).
 BAND_BUCKETS = 8
 
-_W = w_cols()
-_N_WORDS = len(_W)
+#: band ids ride above the 16-bit band values (the widest image band)
+_PACK_SHIFT = 16
 
 #: the inline channel's oracle OBJECT — importing operators.imagehash above
 #: ran its @query decorator, so this lookup can never miss nor drift.
 _INLINE_ORACLE = REGISTRY["dedup_image_phash"].oracle
 
 
-def _fingerprints(docs: DataFrame) -> DataFrame:
-    """(media_id, w0..w3) via the REAL decode path — the same
-    header-tokenizing decode_image + multi-stride phash_words the inline
-    channel runs, Arrow-batched."""
-    import pandas as pd
-
-    media = as_ppm_media(docs)
-
-    def hash_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(bytes(payload))
-                rows.append((int(mid), *phash_words(img.reshape(-1))))
-            yield pd.DataFrame(rows, columns=["media_id", *_W])
-
-    return media.select("media_id", "payload").mapInPandas(
-        hash_batch, words_schema()
-    )
-
-
-def _band_rows(fps: DataFrame) -> DataFrame:
-    """(media_id, bkeyc, w0..w3): one row per band, with (bid, bkey)
-    packed into the single injective key ``bid * 2^16 + bkey``."""
-    keys = [
-        F.lit(bid * (1 << 16))
-        + (
-            F.expr(f"shiftright(w{w}, {shift})").bitwiseAND(
-                F.lit((1 << width) - 1)
-            )
-        )
-        for bid, (w, shift, width) in enumerate(BANDS)
-    ]
-    return fps.select(
-        "media_id", *_W, F.explode(F.array(*keys)).alias("bkeyc")
-    )
+def _bands(docs: DataFrame) -> DataFrame:
+    """(media_id, bkeyc, w0..w3): the docs' packed band rows."""
+    return packed_band_rows(image_fingerprints(docs), 1, BANDS_PER_WORD, _PACK_SHIFT)
 
 
 #: decode + fingerprint + band explosion, bucketed by the packed band key
@@ -125,7 +91,7 @@ PHASH_BANDS = VersionedArtifact(
     name="phash_bands",
     prefix="_bks_phbands_",
     policy=f"r11:phash185:h{HAM_T}:b{BAND_BUCKETS}",
-    rows=lambda docs: _band_rows(_fingerprints(docs)),
+    rows=_bands,
     bucket_by=(BAND_BUCKETS, "bkeyc"),
 )
 ensure_phash_bands = PHASH_BANDS.ensure
@@ -176,38 +142,5 @@ def incremental_phash_pairs(
     # One decode pass for the delta, shared by the probe side and the
     # new-new self-join (two consumers — the inline twin's cache pattern;
     # the cached set is delta-bounded by construction).
-    delta_bands = _band_rows(
-        _fingerprints(spread_delta(d.filter(F.col("doc_id") >= boundary)))
-    ).cache()
-
-    def side(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            F.col("media_id").alias(f"m{tag}"),
-            *[F.col(f"w{i}").alias(f"{'a' if tag == '1' else 'b'}{i}") for i in range(_N_WORDS)],
-            "bkeyc",
-        )
-
-    b = side(delta_bands, "2")
-    # Stored side joins FIRST, before any union: the bucketed layout's
-    # HashPartitioning(bkeyc) satisfies the join distribution, so only
-    # the delta side exchanges — the stored scan never shuffles (the
-    # ngram probe's plan order, incremental_batch.py). New-new pairs come
-    # from the delta's own self-join, union'd AFTER.
-    old_cand = side(stored, "1").join(b, "bkeyc")
-    new_cand = side(delta_bands, "1").join(b, "bkeyc")
-    cand = (
-        old_cand.unionByName(new_cand)
-        .filter(F.col("m1") < F.col("m2"))
-        .select(
-            "m1",
-            "m2",
-            *[f"a{i}" for i in range(_N_WORDS)],
-            *[f"b{i}" for i in range(_N_WORDS)],
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", _hamming_expr(_N_WORDS))
-        .filter(F.col("hamming") <= HAM_T)
-        .select("m1", "m2", "hamming")
-    )
+    delta_bands = _bands(spread_delta(d.filter(F.col("doc_id") >= boundary))).cache()
+    return probe_banded_pairs(stored, delta_bands, 1, HAM_T)

@@ -205,21 +205,27 @@ def banded_pairs(
     bands = fps.select(
         "media_id", *cols, F.posexplode(F.array(*keys)).alias("bid", "bkey")
     )
-    a = bands.select(
-        F.col("media_id").alias("m1"),
-        *[F.col(f"w{i}").alias(f"a{i}") for i in range(n_words)],
-        "bid",
-        "bkey",
+    a = _pair_side(bands, "1", n_words, "bid", "bkey")
+    b = _pair_side(bands, "2", n_words, "bid", "bkey")
+    return _hamming_verify(a.join(b, ["bid", "bkey"]), n_words, ham_t)
+
+
+def _pair_side(bands: DataFrame, tag: str, n_words: int, *keys: str) -> DataFrame:
+    """Side ``tag`` ("1" or "2") of a banded candidate join: ``media_id``
+    as ``m<tag>`` and the words as ``a*`` (side 1) or ``b*`` (side 2)."""
+    prefix = "a" if tag == "1" else "b"
+    return bands.select(
+        F.col("media_id").alias(f"m{tag}"),
+        *[F.col(f"w{i}").alias(f"{prefix}{i}") for i in range(n_words)],
+        *keys,
     )
-    b = bands.select(
-        F.col("media_id").alias("m2"),
-        *[F.col(f"w{i}").alias(f"b{i}") for i in range(n_words)],
-        "bid",
-        "bkey",
-    )
+
+
+def _hamming_verify(joined: DataFrame, n_words: int, ham_t: int) -> DataFrame:
+    """Distinct ``m1 < m2`` candidates of a banded join, kept iff their
+    summed ``bit_count(xor)`` is at most ``ham_t``."""
     cand = (
-        a.join(b, ["bid", "bkey"])
-        .filter(F.col("m1") < F.col("m2"))
+        joined.filter(F.col("m1") < F.col("m2"))
         .select(
             "m1",
             "m2",
@@ -233,6 +239,47 @@ def banded_pairs(
         .filter(F.col("hamming") <= ham_t)
         .select("m1", "m2", "hamming")
     )
+
+
+def packed_band_rows(
+    fps: DataFrame, n_measures: int, bands_per_word: int, pack_shift: int
+) -> DataFrame:
+    """(media_id, w0.., bkeyc): one row per band of the :func:`make_bands`
+    layout, with (bid, bkey) packed into the single join key
+    ``bkeyc = bid * 2^pack_shift + bkey`` — injective because every band
+    value fits in ``pack_shift`` bits (asserted). The persisted band table
+    of the image and audio incremental channels."""
+    bands_spec = make_bands(n_measures, bands_per_word)
+    assert all(width <= pack_shift for (_, _, width) in bands_spec)
+    keys = [
+        F.lit(bid * (1 << pack_shift))
+        + (
+            F.expr(f"shiftright(w{w}, {shift})").bitwiseAND(
+                F.lit((1 << width) - 1)
+            )
+        )
+        for bid, (w, shift, width) in enumerate(bands_spec)
+    ]
+    return fps.select(
+        "media_id", *w_cols(n_measures), F.explode(F.array(*keys)).alias("bkeyc")
+    )
+
+
+def probe_banded_pairs(
+    stored: DataFrame, delta_bands: DataFrame, n_measures: int, ham_t: int
+) -> DataFrame:
+    """The pairs :func:`banded_pairs` finds with at least one side in the
+    delta, from version N's stored :func:`packed_band_rows` and the
+    delta's. The stored side joins the delta FIRST, before any union: a
+    table bucketed on ``bkeyc`` satisfies the join distribution, so only
+    the delta side exchanges and the stored scan never shuffles. The
+    delta's own self-join (new-new pairs) is union'd AFTER, then the exact
+    Hamming verify runs off the carried words, never the payloads."""
+    n_words = N_WORDS * n_measures
+    b = _pair_side(delta_bands, "2", n_words, "bkeyc")
+    old_cand = _pair_side(stored, "1", n_words, "bkeyc").join(b, "bkeyc")
+    new_cand = _pair_side(delta_bands, "1", n_words, "bkeyc").join(b, "bkeyc")
+    return _hamming_verify(old_cand.unionByName(new_cand), n_words, ham_t)
 
 
 def words_sql_tail(measures: list[tuple[str, str]] = (("bs", "sv"),)) -> str:
@@ -360,9 +407,21 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate image pairs: 185-bit multi-stride dHash per decoded
     image, 12-band (3 per word) candidate join, exact total-Hamming verify
     <= {HAM_T}."""
+    # One row per image (much smaller than the payloads): cached so the
+    # banded SELF-join's two branches share a single decode pass instead of
+    # each re-running the Arrow stage — the dedup.py shingle-cache pattern.
+    fps = image_fingerprints(load(spark, sf_dir, "documents")).cache()
+    return banded_pairs(fps)
+
+
+def image_fingerprints(docs: DataFrame) -> DataFrame:
+    """(media_id, w0..w3) of each document's PPM image through the REAL
+    decode path (header-tokenizing :func:`multimodal.decode_image` +
+    :func:`phash_words`), Arrow-batched — the fingerprints of
+    ``dedup_image_phash`` and of its incremental channel's band table."""
     import pandas as pd
 
-    media = as_ppm_media(load(spark, sf_dir, "documents"))
+    media = as_ppm_media(docs)
 
     def hash_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
@@ -372,10 +431,6 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((int(mid), *phash_words(img.reshape(-1))))
             yield pd.DataFrame(rows, columns=["media_id", *_W_COLS])
 
-    # One row per image (much smaller than the payloads): cached so the
-    # banded SELF-join's two branches share a single decode pass instead of
-    # each re-running the Arrow stage — the dedup.py shingle-cache pattern.
-    fps = media.select("media_id", "payload").mapInPandas(
+    return media.select("media_id", "payload").mapInPandas(
         hash_batch, _WORDS_SCHEMA
-    ).cache()
-    return banded_pairs(fps)
+    )

@@ -31,13 +31,10 @@ Verification is the shared exact-Jaccard tier over candidate docs only
 (``dedup._verify_pairs`` — old docs re-shingle ONLY if they made a
 candidate pair, semi-join pruned, the same bound as every channel here).
 
-The signature/band construction deliberately MIRRORS
-``dedup.minhash_candidates`` rather than importing its body: the inline
-module registers eight driver-green queries, and an edit there would
-stale them all for one new probe (the per-file staleness rule,
-tests/test_registry_window.py); the mirror is pinned to the inline plan
-by the shared-oracle driver row and the randomized pure-python fence in
-tests/test_incremental_channels.py.
+Band rows come from :func:`dedup.minhash_bands`, the builder the inline
+channel's ``dedup.minhash_candidates`` calls; this channel adds only the
+``bkc`` packing. The randomized pure-python fence in
+tests/test_incremental_channels.py stays as an independent reference.
 
 Roll-forward: :func:`roll_forward_minhash_bands` folds the delta's band
 rows into version N's table → N+1 (only the delta is hashed; fold ==
@@ -60,8 +57,8 @@ from broadway_kinesis_spark.operators.dedup import (
     BAND_R,
     N_SIG,
     _shingled,
-    _shingles_exploded,
     _verify_pairs,
+    minhash_bands,
 )
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load, spread_small_scan
@@ -70,42 +67,24 @@ from broadway_kinesis_spark.session import load, spread_small_scan
 #: like any bucketed table at deployment scale).
 BAND_BUCKETS = 8
 
-_N_BANDS = N_SIG // BAND_R
-
 #: the inline channel's oracle OBJECT — importing operators.dedup above ran
 #: its @query decorator, so this lookup can never miss nor drift.
 _INLINE_ORACLE = REGISTRY["dedup_minhash_lsh"].oracle
 
 
-def _band_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, bkc): salted-md5 MinHash signature -> banded keys, the
-    exact construction of dedup.minhash_candidates at the registered
+def _packed_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, bkc): the inline channel's band rows at the registered
     operating point, with (bi, bk) packed into one injective string key."""
-    # Expression-string construction (round 14, mirrors
-    # dedup.minhash_candidates): identical expressions, ~0.3 s less
-    # driver-side plan building per run at the 48-hash operating point.
-    sh = _shingles_exploded(docs)
-    proj = sh.selectExpr(
-        "doc_id",
-        *[f"md5(concat('{s}:', shingle)) AS p{s}" for s in range(N_SIG)],
+    return minhash_bands(docs, N_SIG, BAND_R).selectExpr(
+        "doc_id", "concat(cast(bi AS string), ':', bk) AS bkc"
     )
-    sig = proj.groupBy("doc_id").agg(
-        *[F.expr(f"min(p{s}) AS h{s}") for s in range(N_SIG)]
-    )
-    keys = ", ".join(
-        "md5(concat(" + ", ".join(f"h{b * BAND_R + r}" for r in range(BAND_R)) + "))"
-        for b in range(_N_BANDS)
-    )
-    return sig.selectExpr(
-        "doc_id", f"posexplode(array({keys})) AS (bi, bk)"
-    ).selectExpr("doc_id", "concat(cast(bi AS string), ':', bk) AS bkc")
 
 
 MINHASH_BANDS = VersionedArtifact(
     name="minhash_bands",
     prefix="_bks_mhbands_",
     policy=f"r11:mh:s{N_SIG}r{BAND_R}:b{BAND_BUCKETS}",
-    rows=_band_rows,
+    rows=_packed_bands,
     bucket_by=(BAND_BUCKETS, "bkc"),
 )
 ensure_minhash_bands = MINHASH_BANDS.ensure
@@ -188,7 +167,7 @@ def incremental_minhash_pairs(
     d = load(spark, sf_dir, "documents")
     # One signature pass for the delta, shared by both join sides (the
     # inline channel's cache pattern; delta-bounded by construction).
-    delta_bands = _band_rows(
+    delta_bands = _packed_bands(
         spread_delta(d.filter(F.col("doc_id") >= boundary))
     ).cache()
     b = delta_bands.select(F.col("doc_id").alias("d2"), "bkc")

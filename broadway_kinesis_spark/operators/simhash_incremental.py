@@ -12,7 +12,8 @@ chains it into the daily ingest gate (daily_increment.py).
 
 The inline channel (``dedup_simhash``) emits per-doc (fingerprint,
 n_sharing) — n_sharing counts docs with the IDENTICAL fingerprint across
-the corpus. Incremental form: only the delta tokenizes and hashes (the
+the corpus. Incremental form: only the delta tokenizes and hashes, through the
+inline channel's own builder :func:`dedup.simhash_fingerprints` (the
 channel's whole cost — one explode + one hash-agg per doc); version N
 persists its per-FINGERPRINT count table
 (:func:`ensure_simhash_counts` — one row per distinct fingerprint, far
@@ -41,45 +42,13 @@ from broadway_kinesis_spark.functions.versioned_fold import (
     probe_counts,
     spread_delta,
 )
-from broadway_kinesis_spark.operators.dedup import SIM_BITS
-from broadway_kinesis_spark.operators import dedup as _dedup  # noqa: F401 (registers the inline twin)
+from broadway_kinesis_spark.operators.dedup import SIM_BITS, simhash_fingerprints
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
 #: the inline channel's oracle OBJECT — importing operators.dedup above ran
 #: its @query decorator, so this lookup can never miss nor drift.
 _INLINE_ORACLE = REGISTRY["dedup_simhash"].oracle
-
-
-def _fingerprints(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash): the exact construction of ``dedup_simhash`` —
-    token hash = first 8 md5 hex digits, ±1 votes per bit weighted by
-    term frequency, fingerprint = sign vector."""
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token")
-    )
-    h = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
-    hashed = tok.select("doc_id", h.alias("h"))
-    bitsums = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(SIM_BITS)
-        ]
-    )
-    fp_terms = [
-        F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for b in range(SIM_BITS)
-    ]
-    fp_col = fp_terms[0]
-    for t in fp_terms[1:]:
-        fp_col = fp_col + t
-    return bitsums.select("doc_id", fp_col.alias("simhash"))
 
 
 #: per-fingerprint counts (simhash, n_old) — one row per distinct
@@ -91,7 +60,9 @@ SIMHASH_COUNTS = VersionedArtifact(
     prefix="_bks_shcounts_",
     policy=f"r11:sh{SIM_BITS}",
     rows=lambda docs: (
-        _fingerprints(docs).groupBy("simhash").agg(F.count(F.lit(1)).alias("n_old"))
+        simhash_fingerprints(docs)
+        .groupBy("simhash")
+        .agg(F.count(F.lit(1)).alias("n_old"))
     ),
     mor=("simhash", "n_old"),
 )
@@ -133,7 +104,7 @@ def incremental_simhash_rows(
         else ensure_simhash_counts(spark, sf_dir, boundary)
     )
     d = load(spark, sf_dir, "documents")
-    fps = _fingerprints(spread_delta(d.filter(F.col("doc_id") >= boundary)))
+    fps = simhash_fingerprints(spread_delta(d.filter(F.col("doc_id") >= boundary)))
     from pyspark.sql import Window
 
     # merge-on-read: the stored statistic may be segmented (link-forward

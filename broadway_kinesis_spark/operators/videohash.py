@@ -154,27 +154,9 @@ def dedup_video_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate video pairs: per-frame dHash sequence -> ordered
     consecutive-pair shingles -> stop-shingle-capped inverted index ->
     exact shingle-Jaccard >= {J_NUM}/{J_DEN}."""
-    import pandas as pd
-
-    media = as_media(load(spark, sf_dir, "documents"))
-
-    def shingle_batch(
-        batches: Iterator["pd.DataFrame"],
-    ) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for s in clip_shingles(bytes(payload)):
-                    rows.append((int(mid), s))
-            yield pd.DataFrame(rows, columns=["media_id", "shingle"])
-
     # One row per (clip, distinct shingle) out of ONE Arrow stage; cached
     # because it feeds the sizes agg, the index, and (via sizes) the verify.
-    sh = (
-        media.select("media_id", "payload")
-        .mapInPandas(shingle_batch, "media_id long, shingle string")
-        .cache()
-    )
+    sh = clip_shingle_rows(load(spark, sf_dir, "documents")).cache()
     sizes = sh.groupBy("media_id").agg(F.count(F.lit(1)).alias("sz"))
     idx = sh.withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
@@ -208,4 +190,28 @@ def dedup_video_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_union", F.col("sz1") + F.col("sz2") - F.col("n_inter"))
         .filter(F.col("n_inter") * J_DEN >= F.col("n_union") * J_NUM)
         .select("m1", "m2", "n_inter", "n_union")
+    )
+
+
+def clip_shingle_rows(docs: DataFrame) -> DataFrame:
+    """(media_id, shingle) — one row per (clip, DISTINCT temporal shingle)
+    of :func:`clip_shingles`, Arrow-batched (single-frame clips emit
+    nothing) — the rows of ``dedup_video_temporal`` and of its incremental
+    channel's persisted index."""
+    import pandas as pd
+
+    media = as_media(docs)
+
+    def shingle_batch(
+        batches: Iterator["pd.DataFrame"],
+    ) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                for s in clip_shingles(bytes(payload)):
+                    rows.append((int(mid), s))
+            yield pd.DataFrame(rows, columns=["media_id", "shingle"])
+
+    return media.select("media_id", "payload").mapInPandas(
+        shingle_batch, "media_id long, shingle string"
     )

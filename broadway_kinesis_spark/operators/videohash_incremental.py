@@ -3,10 +3,12 @@
 
 The video channel (``operators/videohash.py``) is the text ngram channel
 in shingle space: each clip's signature is its DISTINCT set of temporal
-shingles (consecutive frame-hash pairs), deduped through a stop-shingle
-inverted index + exact-Jaccard verify. Its incremental form therefore
-follows ``incremental_batch.incremental_ngram_pairs`` nearly verbatim —
-with one structural improvement the video channel earns for free:
+shingles (consecutive frame-hash pairs, built by
+:func:`videohash.clip_shingle_rows` for both channels), deduped through a
+stop-shingle inverted index + exact-Jaccard verify. Its incremental form
+therefore follows ``incremental_batch.incremental_ngram_pairs`` nearly
+verbatim — with one structural improvement the video channel earns for
+free:
 because a clip's signature is a DISTINCT-shingle set, version N's
 UNCAPPED inverted index IS the complete signature store, so the
 exact-Jaccard verify runs entirely off the stored index + the delta's
@@ -42,8 +44,6 @@ family; the reference has no media surface).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,10 +53,8 @@ from broadway_kinesis_spark.functions.versioned_fold import (
     probe_counts,
     spread_delta,
 )
-from broadway_kinesis_spark.operators import videohash as _videohash  # noqa: F401 (registers the inline twin)
 from broadway_kinesis_spark.operators.dedup import DF_CAP
-from broadway_kinesis_spark.operators.multimodal import as_media
-from broadway_kinesis_spark.operators.videohash import J_DEN, J_NUM, clip_shingles
+from broadway_kinesis_spark.operators.videohash import J_DEN, J_NUM, clip_shingle_rows
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
@@ -68,29 +66,6 @@ IDX_BUCKETS = 8
 _INLINE_ORACLE = REGISTRY["dedup_video_temporal"].oracle
 
 
-def _shingle_rows(docs: DataFrame) -> DataFrame:
-    """(media_id, shingle) — one row per (clip, DISTINCT temporal shingle),
-    via the same Arrow-batched frame-walk + per-frame dHash as the inline
-    channel (single-frame clips emit nothing, both engines)."""
-    import pandas as pd
-
-    media = as_media(docs)
-
-    def shingle_batch(
-        batches: Iterator["pd.DataFrame"],
-    ) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for s in clip_shingles(bytes(payload)):
-                    rows.append((int(mid), s))
-            yield pd.DataFrame(rows, columns=["media_id", "shingle"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        shingle_batch, "media_id long, shingle string"
-    )
-
-
 #: the temporal-shingle index + its DF companion (the ngram artifact pair);
 #: a fold decodes the delta ONCE for both writes (round-12 x100 lesson:
 #: two delta closures decoded the delta twice, costing more than the
@@ -99,7 +74,7 @@ VIDEO_INDEX = VersionedArtifact(
     name="video_index",
     prefix="_bks_vidx_",
     policy=f"r11s3:vts:j{J_NUM}-{J_DEN}:b{IDX_BUCKETS}",
-    rows=_shingle_rows,
+    rows=clip_shingle_rows,
     bucket_by=(IDX_BUCKETS, "shingle"),
     counts=("_bks_vdf_", "shingle", "df_old"),
 )
@@ -149,7 +124,7 @@ def incremental_video_pairs(
     if idx_tbl is None or df_tbl is None:
         idx_tbl, df_tbl = ensure_video_index(spark, sf_dir, boundary)
     d = load(spark, sf_dir, "documents")
-    delta_sh = _shingle_rows(
+    delta_sh = clip_shingle_rows(
         spread_delta(d.filter(F.col("doc_id") >= boundary))
     ).localCheckpoint(eager=True)
     delta_df = delta_sh.groupBy("shingle").agg(

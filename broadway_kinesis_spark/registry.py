@@ -165,7 +165,9 @@ _PRIORITY: tuple[str, ...] = (
     # the persisted dedup/split tiers). The 24 remaining slots keep the
     # round-14 window's other rows; the eight join_*/multimodal_* filler
     # rows rotate out (all green at round 14, outside any planned edit).
-    "composite_curation_report",
+    # dedup_image_phash and dedup_audio_fingerprint (their builders are
+    # shared with the incremental channels) take the slots of
+    # composite_curation_report and pipeline_quality_funnel.
     "composite_dedup_recall",
     "composite_fuzzy_blocking_recall",
     "composite_local_supplier_volume",
@@ -173,6 +175,7 @@ _PRIORITY: tuple[str, ...] = (
     "composite_shipping_priority",
     "composite_user_retention",
     "dedup_boilerplate",
+    "dedup_audio_fingerprint",
     "dedup_cluster_cc",
     "dedup_containment",
     "dedup_containment_bottomk",
@@ -180,6 +183,7 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_embedding_cosine",
     "dedup_exact_docs",
     "dedup_fuzzy_prefix",
+    "dedup_image_phash",
     "dedup_incremental",
     "dedup_incremental_audiohash",
     "dedup_incremental_containment",
@@ -213,12 +217,11 @@ _PRIORITY: tuple[str, ...] = (
     "pipeline_clean_corpus",
     "pipeline_clean_corpus_best",
     "pipeline_daily_increment",
-    "pipeline_quality_funnel",
     "scan_partition_pruned",
     )
 
 # Queries whose staleness rule demands a window slot but which the 50-slot
-# window cannot hold: none — demand is 26 (see the _PRIORITY comment), so
+# window cannot hold: none — demand is 48 of the 50 slots, so
 # the overflow mechanism is unused.
 _DEFERRED: tuple[str, ...] = ()
 

@@ -31,8 +31,8 @@ positions, pacing, shard close and retry rules. Feature-parity map to the refere
 - A8/A9: re-subscribe — the push stream's server-side 5-minute limit ends
   the event stream without error. The driver's read takes what arrived and
   the next trigger subscribes AFTER its cursor; a range re-read
-  re-subscribes AFTER the last continuation sequence, or from the ORIGINAL
-  starting position when no events arrived yet
+  re-subscribes AFTER the last record read, or from the ORIGINAL starting
+  position when no events arrived yet
   (`subscribe_to_shard_test.exs:145-166,175-189`).
 - A10/A13: error taxonomy + paced retry -> :func:`_is_transient` /
   :func:`_call_with_retry`; AWS-coded transient faults AND 3xx/5xx HTTP
@@ -91,7 +91,10 @@ its read cursor), so the first read continues from the checkpoint, not from
 this reader did not fetch: a restart between offset commit and sink commit.
 It is the only read that runs on an executor. It reads each shard's range
 (start, end] — AFTER the start cursor, else AT the pinned first sequence —
-and fails loudly rather than commit a range it could not read whole.
+whole, by repeating the driver's bounded fetch from the last record read,
+so a batch planned under a larger ``maxRecordsPerBatch`` than the restarted
+query's still re-reads; it fails loudly rather than commit a range it could
+not read whole.
 
 SDK testing tiers: both read paths are unit-tested hermetically against a
 fake client (tests/test_kinesis_efo.py — the SDK-free moral equivalent of
@@ -468,12 +471,16 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                 if close is not None:
                     close()
 
-    def _subscribe_batch(self, shard_id: str, position: dict) -> tuple[list[dict], bool]:
-        """The driver's bounded EFO fetch from ``position``; returns
-        (records, shard_closed). Stops at ``maxRecordsPerBatch`` records (the
-        last event is cut there), at a caught-up event (``MillisBehindLatest``
-        0), at a null continuation (the shard closed, A7), or when the stream
-        ends."""
+    def _subscribe_batch(
+        self, shard_id: str, position: dict, end_seq: str | None
+    ) -> tuple[list[dict], bool]:
+        """The bounded EFO fetch from ``position``; returns (records,
+        shard_closed). Stops at ``maxRecordsPerBatch`` records (the last event
+        is cut there), at a null continuation (the shard closed, A7), when the
+        stream ends, and where the wanted data ends: the driver's read
+        (``end_seq`` None) at a caught-up event (``MillisBehindLatest`` 0); a
+        range re-read once ``end_seq`` arrives, or at a caught-up event with
+        no records (the tip, as for ``get_records``)."""
         out: list[dict] = []
         events = self._subscription_events(shard_id, position)
         try:
@@ -485,73 +492,43 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                     return out, False
                 if ev.get("ContinuationSequenceNumber") is None:
                     return out, True
-                if len(out) >= self.max_per_batch or ev.get("MillisBehindLatest") == 0:
+                caught_up = ev.get("MillisBehindLatest") == 0
+                if end_seq is not None:
+                    done = any(r["SequenceNumber"] == end_seq for r in recs) or (
+                        caught_up and not recs
+                    )
+                else:
+                    done = caught_up
+                if done or len(out) >= self.max_per_batch:
                     return out, False
         finally:
             events.close()
         return out, False
 
-    def _subscribe_range(self, shard_id: str, original: dict, end_seq: str) -> list[dict]:
-        """EFO re-read of a planned range from ``original`` until ``end_seq``
-        arrives or the shard closes. A stream the server ends first (the
-        5-minute subscription limit) is re-requested AFTER the last
-        continuation, or from ``original`` if no event arrived yet
-        (`subscribe_to_shard_test.exs:145-189`)."""
-        end_i = _seq_int(end_seq)
-        pos = original
-        out: list[dict] = []
-        idle_rounds = 0
-        while True:
-            progressed = False
-            events = self._subscription_events(shard_id, pos)
-            try:
-                for ev in events:
-                    progressed = True
-                    recs = _with_lag(ev.get("Records", []), ev.get("MillisBehindLatest"))
-                    out += recs
-                    if any(r["SequenceNumber"] == end_seq for r in recs):
-                        return out
-                    # Overshoot guard: sequences numerically PAST the planned
-                    # end without ever matching it (record expired between
-                    # the first read and this one): fail loudly instead of
-                    # reading the live stream forever.
-                    if end_i is not None and any(
-                        (_seq_int(r["SequenceNumber"]) or -1) > end_i for r in recs
-                    ):
-                        raise RuntimeError(
-                            f"subscribe_to_shard: stream passed planned end "
-                            f"{end_seq!r} on {shard_id} without delivering it"
-                        )
-                    cont = ev.get("ContinuationSequenceNumber")
-                    if cont is None:
-                        return out  # shard closed mid-range (A7)
-                    pos = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cont}
-            finally:
-                events.close()
-            # Bound consecutive empty streams so a planning bug can't spin
-            # forever against a quiet shard.
-            idle_rounds = 0 if progressed else idle_rounds + 1
-            if idle_rounds >= self.max_attempts:
-                raise RuntimeError(
-                    f"subscribe_to_shard: planned end {end_seq!r} not "
-                    f"reached on {shard_id} after {idle_rounds} empty streams"
-                )
-
-    def _fetch(self, shard_id: str, cursor: str | None) -> tuple[list[dict], bool]:
+    def _fetch(
+        self,
+        shard_id: str,
+        cursor: str | None,
+        at_seq: str | None = None,
+        end_seq: str | None = None,
+    ) -> tuple[list[dict], bool]:
         """One bounded fetch of up to ``maxRecordsPerBatch`` records AFTER
-        ``cursor`` (the configured position without one); returns
-        (records, shard_closed)."""
-        if self.consumer_arn and (cursor is not None or self.position.kind != "latest"):
-            pos = (
-                {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cursor}
-                if cursor is not None
-                else self.position.wire_format()
-            )
-            return self._subscribe_batch(shard_id, pos)
+        ``cursor``, else AT ``at_seq``, else at the configured position;
+        returns (records, shard_closed). ``end_seq`` marks a range re-read
+        (see :meth:`_subscribe_batch`)."""
+        floating = cursor is None and at_seq is None
+        if self.consumer_arn and not (floating and self.position.kind == "latest"):
+            if cursor is not None:
+                pos = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": cursor}
+            elif at_seq is not None:
+                pos = {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": at_seq}
+            else:
+                pos = self.position.wire_format()
+            return self._subscribe_batch(shard_id, pos, end_seq)
         # For a shard with no concrete cursor yet, continue the SAME iterator
         # chain across triggers: re-resolving a floating LATEST each trigger
         # would skip every record that arrived in between.
-        chain = self._live_iters.get(shard_id) if cursor is None else None
+        chain = self._live_iters.get(shard_id) if floating else None
         # Timestamp BEFORE the poll: if the idle chain later expires and is
         # re-resolved via AT_TIMESTAMP(ts), a pre-poll ts can only DUPLICATE
         # records that arrived during the poll (fine under at-least-once); a
@@ -562,12 +539,13 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
             shard_id,
             cursor,
             self.max_per_batch,
+            at_seq=at_seq,
             start_iter=chain["it"] if chain else None,
             refresh_at_ts=chain["ts"] if chain else None,
         )
         if records:
             self._live_iters.pop(shard_id, None)  # concrete cursor takes over
-        elif cursor is None and nxt is not None:
+        elif floating and nxt is not None:
             self._live_iters[shard_id] = {"it": nxt, "ts": poll_ts}
         return records, closed
 
@@ -618,37 +596,48 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                 continue
             if e is None or e_seq == s_seq:
                 continue
-            yield from self._read_range(shard, s_seq, _entry_at(e), e_seq)
+            for rec in self._read_range(shard, s_seq, _entry_at(e), e_seq):
+                yield _row(rec, shard, self.stream_name)
 
-    def _read_range(self, shard_id: str, start_seq: str | None, at_seq: str | None, end_seq: str):
-        """Deterministic re-read of (start_seq, end_seq]: AFTER start_seq
+    def _read_range(
+        self, shard_id: str, start_seq: str | None, at_seq: str | None, end_seq: str
+    ) -> list[dict]:
+        """Deterministic re-read of (start_seq, end_seq] — AFTER start_seq
         when a prior cursor exists, else AT the pinned first sequence
-        ``at_seq`` — never a floating LATEST resolution at replay time. EFO
-        push pipe when a consumer ARN is configured, get_records otherwise."""
-        if self.consumer_arn:
-            if start_seq is not None:
-                pos = {"Type": "AFTER_SEQUENCE_NUMBER", "SequenceNumber": start_seq}
-            elif at_seq is not None:
-                pos = {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": at_seq}
-            else:
-                pos = self.position.wire_format()
-            records = self._subscribe_range(shard_id, pos, end_seq)
-        else:
-            records, closed, _it = self._poll(
-                shard_id, start_seq, self.max_per_batch, at_seq=at_seq
-            )
-            if not closed and not any(r["SequenceNumber"] == end_seq for r in records):
-                # Never silently truncate a planned range: the batch would
-                # commit end_seq while the tail was never emitted (lost
-                # data). Loud failure -> Spark task retry / surfaced error.
+        ``at_seq``, never a floating LATEST resolution at replay time —
+        whole, whatever ``maxRecordsPerBatch`` is now: the batch may have
+        been planned under a larger cap. Repeats the bounded fetch from the
+        last record read until ``end_seq`` arrives or the shard closes (A7);
+        an EFO stream the server ends early is thereby re-requested AFTER
+        the last record read, or at the original position when none arrived
+        (`subscribe_to_shard_test.exs:145-189`). Fails loudly rather than
+        commit a range it cannot read whole: on a sequence numerically past
+        ``end_seq`` (the record expired since the batch was planned), and
+        after ``maxRetries`` consecutive empty fetches."""
+        end_i = _seq_int(end_seq)
+        out: list[dict] = []
+        cursor, empty = start_seq, 0
+        while True:
+            records, closed = self._fetch(shard_id, cursor, at_seq, end_seq)
+            for rec in records:
+                if end_i is not None and (_seq_int(rec["SequenceNumber"]) or -1) > end_i:
+                    raise RuntimeError(
+                        f"kinesis_efo: stream passed planned end {end_seq!r} "
+                        f"on {shard_id} without delivering it"
+                    )
+                out.append(rec)
+                if rec["SequenceNumber"] == end_seq:
+                    return out
+            if closed:
+                return out
+            empty = 0 if records else empty + 1
+            if empty >= self.max_attempts:
                 raise RuntimeError(
                     f"kinesis_efo: planned end {end_seq!r} not reached on "
-                    f"{shard_id} ({len(records)} records read)"
+                    f"{shard_id} ({len(out)} records read, then {empty} empty reads)"
                 )
-        for rec in records:
-            yield _row(rec, shard_id, self.stream_name)
-            if rec["SequenceNumber"] == end_seq:
-                break
+            if records:
+                cursor = records[-1]["SequenceNumber"]
 
 
 class KinesisEfoDataSource(DataSource):

@@ -174,7 +174,7 @@ def _seqs(rows):
     return [(x[4], x[0]) for x in rows]
 
 
-def test_latest_offset_finds_tip_and_partitions_plan_ranges():
+def test_read_returns_rows_and_end_that_read_between_offsets_rereads():
     """read(start) returns the batch's rows with its end offset; the same
     (start, end] ranges re-read through readBetweenOffsets."""
     r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon")
@@ -189,7 +189,7 @@ def test_latest_offset_finds_tip_and_partitions_plan_ranges():
     assert _seqs(r.readBetweenOffsets(start, end)) == expected
 
 
-def test_latest_offset_resumes_after_cursor():
+def test_read_resumes_after_cursor_and_keeps_idle_shard_entry():
     r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon")
     rows, end = r.read({"shard-0001": "2", "shard-0002": "10"})
     assert end["shard-0001"] == {"seq": "3", "at": "3"}  # only the tail beyond seq 2
@@ -197,7 +197,7 @@ def test_latest_offset_resumes_after_cursor():
     assert _seqs(rows) == [("shard-0001", "3")]
 
 
-def test_latest_offset_pending_plan_is_cached_not_repolled():
+def test_chained_reads_fetch_each_record_once():
     """Two chained reads fetch each record once, over either API: the second
     starts after the first one's end, finds nothing and returns its start
     unchanged."""
@@ -596,13 +596,29 @@ def test_read_between_offsets_skips_backwards_shard():
     assert end["shard-0001"] == {"seq": "3", "at": "1"}
 
 
-def test_read_raises_instead_of_truncating_planned_range():
-    """A planned range whose tail can't be fetched within the batch cap must
-    fail loudly — committing end_seq after a silent truncation would lose
-    the tail forever."""
-    r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon", maxRecordsPerBatch="2")
-    with pytest.raises(RuntimeError, match="not reached"):
-        list(r.readBetweenOffsets({}, {"shard-0001": "3"}))
+def test_read_between_offsets_rereads_a_range_planned_under_a_larger_cap(monkeypatch):
+    """A query restarted with a lower maxRecordsPerBatch re-reads its last
+    offset-log batch, planned under the old cap, whole over either API:
+    the bounded fetch repeats from the last record read until the planned
+    end. (Truncation still fails loudly: see the truncated-range test.)"""
+    clock = [100.0]
+
+    def sleep(s):  # the EFO re-read's second subscribe waits out the second
+        clock[0] += s
+
+    monkeypatch.setattr(
+        efo_mod, "time", SimpleNamespace(monotonic=lambda: clock[0], sleep=sleep, time=time.time)
+    )
+    planner = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon")
+    start = planner.initialOffset()
+    _rows, end = planner.read(start)
+    assert end["shard-0001"] == {"seq": "3", "at": "1"}
+    reread = {}
+    for opts in ({}, {"consumerArn": ARN}):
+        r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon", maxRecordsPerBatch="2", **opts)
+        reread[bool(opts)] = [(x[4], x[0], x[3]) for x in r.readBetweenOffsets(start, end)]
+    assert [seq for _shard, seq, _data in reread[False]] == ["1", "2", "3", "10"]
+    assert reread[True] == reread[False]
 
 
 def test_expired_chain_iterator_refreshes_at_timestamp_not_latest():
@@ -656,7 +672,7 @@ def _read(shards, **opts):
     return [(x[4], x[0], x[3]) for x in rows], end
 
 
-def test_small_ranges_share_one_task():
+def test_read_caps_each_shard_range_not_the_batch():
     rows, end = _read(FOUR_SHARDS)
     assert rows == FOUR_ROWS and end == FOUR_ENDS
     # the cap bounds each shard's range, not the batch
@@ -684,7 +700,7 @@ def test_read_between_offsets_reads_unfetched_ranges_in_order():
 
 
 @pytest.mark.parametrize("consumer_arn", [None, ARN])
-def test_multi_range_task_yields_each_exact_range_in_order(monkeypatch, consumer_arn):
+def test_read_between_offsets_yields_each_exact_range_with_one_client(monkeypatch, consumer_arn):
     shards = {s: recs + [rec(int(recs[-1]["SequenceNumber"]) + 1, b"beyond")] for s, recs in FOUR_SHARDS.items()}
     client = FakeKinesisClient(shards)
     built = []
@@ -697,7 +713,7 @@ def test_multi_range_task_yields_each_exact_range_in_order(monkeypatch, consumer
     assert len(built) == 1  # one reader, so one SDK client, for the whole batch
 
 
-def test_multi_range_task_raises_on_a_truncated_range():
+def test_read_between_offsets_raises_on_a_truncated_range():
     r = make_reader(FakeKinesisClient(SHARDS))
     end = {"shard-0001": {"seq": "3", "at": "1"}, "shard-0002": {"seq": "11", "at": "10"}}
     rows = []
