@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from broadway_kinesis_spark.operators.similarity import _dot, _sql_dot
 from broadway_kinesis_spark.registry import query
 from broadway_kinesis_spark.session import load
 
@@ -479,7 +480,62 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return bitsums.select("doc_id", fp_col.alias("simhash"))
 
 
-_SQL_DOT = "list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2]))"
+#: delta rows scored per kernel step: bounds the transient similarity
+#: matrix at chunk × block_rows × 8 bytes whatever the block size (at a
+#: 20 k-row block: ~650 MB), the "a block must fit one task" posture made
+#: chunk-exact.
+_KERNEL_CHUNK = 4096
+
+
+def vec_norms(e: DataFrame, *keys: str) -> DataFrame:
+    """(vec_id, *keys, v float64[], nrm) — the embedding near-dup family's
+    one vector projection: the float64 vector and its sequential-fold norm
+    that the candidate kernel and the exact verify both score."""
+    v = F.col("embedding").cast("array<double>")
+    return e.select("vec_id", *keys, v.alias("v"), F.sqrt(_dot(v, v)).alias("nrm"))
+
+
+def cosine_kernel(slack: float):
+    """The embedding near-dup family's one candidate kernel: a grouped-map
+    function over one block's (vec_id, v, nrm, is_delta) rows. For each
+    chunk of ``_KERNEL_CHUNK`` delta rows it scores ``u_delta @ u_all.T``
+    on the unit vectors and keeps the pairs whose OTHER id is smaller and
+    whose cosine is >= ``slack``, emitting (d1 long, d2 long), d1 < d2.
+    Keeping only the smaller other id yields each delta-delta pair once (at
+    its larger side) and every stored-delta pair (stored ids sit below
+    delta ids); with every row a delta it is the whole block's upper
+    triangle. Work is ``delta_rows × block_rows``, and the transient
+    similarity matrix is at most ``_KERNEL_CHUNK × block_rows``."""
+    import numpy as np
+    import pandas as pd
+
+    def cosine_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        d_mask = pdf["is_delta"].to_numpy()
+        if len(pdf) < 2 or not d_mask.any():
+            return pd.DataFrame({"d1": [], "d2": []}).astype("int64")
+        u = np.stack(pdf["v"].to_numpy()) / pdf["nrm"].to_numpy()[:, None]
+        ids = pdf["vec_id"].to_numpy()
+        ud, idd = u[d_mask], ids[d_mask]
+        outs = []
+        for c in range(0, len(idd), _KERNEL_CHUNK):
+            sim = ud[c : c + _KERNEL_CHUNK] @ u.T
+            keep = (sim >= slack) & (ids[None, :] < idd[c : c + _KERNEL_CHUNK, None])
+            i, j = np.nonzero(keep)
+            outs.append(pd.DataFrame({"d1": ids[j], "d2": idd[c + i]}))
+        return pd.concat(outs, ignore_index=True)
+
+    return cosine_pairs
+
+
+def cosine_candidates(blocks: DataFrame, key: str, threshold: float) -> DataFrame:
+    """Candidate pairs (d1, d2) of ``blocks`` grouped by ``key``, scored by
+    :func:`cosine_kernel` at a 1e-9 slack below ``threshold``: matmul and
+    the sequential fold agree to ~1e-15 relative, so the slack covers BLAS
+    reassociation and no true pair is missed. The caller's exact-fold
+    verify defines the final pair set."""
+    return blocks.groupBy(key).applyInPandas(
+        cosine_kernel(threshold - 1e-9), "d1 long, d2 long"
+    )
 
 
 @query(
@@ -487,12 +543,12 @@ _SQL_DOT = "list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2]))"
     oracle=f"""
     WITH e AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               sqrt({_SQL_DOT.format(a='embedding::DOUBLE[]', b='embedding::DOUBLE[]')}) AS nrm
+               sqrt({_sql_dot('embedding::DOUBLE[]', 'embedding::DOUBLE[]')}) AS nrm
         FROM embeddings
     )
     SELECT vec1, vec2, cos_sim FROM (
         SELECT a.vec_id AS vec1, b.vec_id AS vec2,
-               {_SQL_DOT.format(a='a.v', b='b.v')} / (a.nrm * b.nrm) AS cos_sim
+               {_sql_dot('a.v', 'b.v')} / (a.nrm * b.nrm) AS cos_sim
         FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
     ) WHERE cos_sim >= {COS_T}
     """,
@@ -501,11 +557,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs: blocking on the cluster id (`label`), then
     pairwise cosine >= {COS_T} within blocks, in two tiers:
 
-    1. CANDIDATES — per-block Arrow-batched ``applyInPandas``: one float64
-       numpy matmul scores the whole block and keeps pairs above
-       ``COS_T - 1e-9`` (the slack covers BLAS reassociation vs the fold
-       order; matmul and fold agree to ~1e-15 relative, so no true pair can
-       be missed). Only (vec1, vec2) id pairs leave the UDF.
+    1. CANDIDATES — the family's chunked :func:`cosine_kernel` per block,
+       every row marked delta: float64 numpy matmuls of ``_KERNEL_CHUNK``
+       rows against the block keep pairs above ``COS_T - 1e-9`` (see
+       :func:`cosine_candidates`). Only (vec1, vec2) id pairs leave the UDF.
     2. VERIFY — the surviving handful of pairs re-join their vectors and are
        re-scored with the same sequential-fold float64 dot as similarity.py,
        so the emitted cos_sim is bitwise-equal to the oracle.
@@ -515,37 +570,18 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bandwidth, the exact path touches only candidates. Measured ~3x the
     interpreted per-pair fold at sf0.1. At 100 TB the blocking key comes
     from a coarse quantizer / LSH bucket; a block must fit one task (bound
-    it by quantizer granularity), and the verify joins stay hash-partitioned
-    on vec_id."""
-    import numpy as np
-    import pandas as pd
-
-    e = load(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    e = e.select("vec_id", "label", v.alias("v"), F.sqrt(dot(v, v)).alias("nrm"))
-    slack = COS_T - 1e-9
-
-    def block_candidates(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec1": [], "vec2": []}).astype("int64")
-        m = np.stack(pdf["v"].to_numpy())
-        u = m / pdf["nrm"].to_numpy()[:, None]
-        sim = u @ u.T
-        i, j = np.triu_indices(len(pdf), k=1)
-        keep = sim[i, j] >= slack
-        ids = pdf["vec_id"].to_numpy()
-        a, b = ids[i[keep]], ids[j[keep]]
-        return pd.DataFrame({"vec1": np.minimum(a, b), "vec2": np.maximum(a, b)})
-
-    cand = e.groupBy("label").applyInPandas(block_candidates, "vec1 long, vec2 long")
-    a = e.select(F.col("vec_id").alias("vec1"), F.col("v").alias("v1"), F.col("nrm").alias("n1"))
-    b = e.select(F.col("vec_id").alias("vec2"), F.col("v").alias("v2"), F.col("nrm").alias("n2"))
-    pairs = cand.join(a, "vec1").join(b, "vec2")
-    cos = dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
-    return pairs.select("vec1", "vec2", cos.alias("cos_sim")).filter(F.col("cos_sim") >= COS_T)
+    it by quantizer granularity; the kernel's transient matrix is bounded
+    by ``_KERNEL_CHUNK × block_rows``), and the verify joins stay
+    hash-partitioned on vec_id."""
+    e = vec_norms(load(spark, sf_dir, "embeddings"), "label")
+    cand = cosine_candidates(e.select("*", F.lit(True).alias("is_delta")), "label", COS_T)
+    a = e.select(F.col("vec_id").alias("d1"), F.col("v").alias("v1"), F.col("nrm").alias("n1"))
+    b = e.select(F.col("vec_id").alias("d2"), F.col("v").alias("v2"), F.col("nrm").alias("n2"))
+    pairs = cand.join(a, "d1").join(b, "d2")
+    cos = _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
+    return pairs.select(
+        F.col("d1").alias("vec1"), F.col("d2").alias("vec2"), cos.alias("cos_sim")
+    ).filter(F.col("cos_sim") >= COS_T)
 
 
 @query(

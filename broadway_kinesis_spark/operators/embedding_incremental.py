@@ -15,13 +15,15 @@ Why cost tracks the DELTA, not the corpus: blocking is by ``label`` (the
 coarse-quantizer key, exactly as the inline ``dedup_embedding_cosine``),
 and a delta-touching pair shares its block with a delta vector — so the
 stored side first LEFT-SEMI prunes to the delta's label set (broadcast:
-the distinct labels of a delta are small by construction) and the
-per-block Arrow kernel scores only ``delta_rows x block_rows``
-(``u_delta @ u_all.T``), never the inline twin's ``block_rows²``. At
-100 TB the stored table is (id, label, unit-norm stats) — the artifact a
-production embedding pipeline maintains anyway — and blocks without new
-vectors are never read (partition-prunable on ``label`` in a real
-deployment; the semi-join states the same bound here).
+the distinct labels of a delta are small by construction). The per-block
+kernel is the inline twin's own (``dedup.cosine_candidates``): the inline
+query marks every row a delta and scores ``block_rows²``, while here only
+the delta is marked, so it scores ``delta_rows x block_rows``
+(``u_delta @ u_all.T``). At 100 TB the stored table is (id, label,
+unit-norm stats) — the artifact a production embedding pipeline
+maintains anyway — and blocks without new vectors are never read
+(partition-prunable on ``label`` in a real deployment; the semi-join
+states the same bound here).
 
 Oracle protocol: the registered oracle is the INLINE channel's oracle
 (read from the registry at module load, the dedup_persist pattern)
@@ -56,8 +58,8 @@ from broadway_kinesis_spark.functions.versioned_fold import (
     BOUNDARY,
     VersionedArtifact,
 )
-from broadway_kinesis_spark.operators.dedup import COS_T
-from broadway_kinesis_spark.operators import dedup as _dedup  # noqa: F401 (registers the inline twin)
+from broadway_kinesis_spark.operators.dedup import COS_T, cosine_candidates, vec_norms
+from broadway_kinesis_spark.operators.similarity import _dot
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
@@ -66,24 +68,13 @@ from broadway_kinesis_spark.session import load
 _INLINE_ORACLE = REGISTRY["dedup_embedding_cosine"].oracle
 
 
-def _norms(e: DataFrame) -> DataFrame:
-    """(vec_id, label, v float64[], nrm) — the exact projection the inline
-    channel computes per invocation; here it is computed once per corpus
-    version and persisted."""
-    v = F.col("embedding").cast("array<double>")
-    dot = F.aggregate(
-        F.zip_with(v, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return e.select("vec_id", "label", v.alias("v"), F.sqrt(dot).alias("nrm"))
-
-
 #: the normalized-vector table (vec_id, label, v, nrm) an embedding
 #: pipeline carries between corpus versions (normalization is paid once)
 EMBEDDING_NORMS = VersionedArtifact(
     name="embedding_norms",
     prefix="_bks_embnorms_",
     policy="r11:cosnorm",
-    rows=_norms,
+    rows=lambda e: vec_norms(e, "label"),
     source="embeddings",
 )
 ensure_embedding_norms = EMBEDDING_NORMS.ensure
@@ -107,13 +98,6 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_embedding_pairs(spark, sf_dir)
 
 
-#: delta rows scored per kernel step: bounds the transient similarity
-#: matrix at chunk x block_rows x 8 bytes regardless of block size (at a
-#: 20 k-row block: ~650 MB), the "a block must fit one task" posture made
-#: chunk-exact.
-_KERNEL_CHUNK = 4096
-
-
 def incremental_embedding_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -132,72 +116,36 @@ def incremental_embedding_pairs(
 
     Shape: delta normalizes fresh; stored side semi-join-prunes to the
     delta's labels (broadcast — a delta's distinct label set is small);
-    per-label Arrow kernel scores ``delta x block`` and emits id pairs
-    where the OTHER id is smaller (captures old-delta pairs and each
+    the family's per-label kernel scores ``delta x block`` and emits id
+    pairs where the OTHER id is smaller (captures old-delta pairs and each
     delta-delta pair exactly once); exact-fold verify re-joins vectors,
     candidate-bounded, exactly like the inline twin's tier 2."""
-    import numpy as np
-    import pandas as pd
-
     stored = spark.table(
         norms_tbl
         if norms_tbl is not None
         else ensure_embedding_norms(spark, sf_dir, boundary)
     )
     e = load(spark, sf_dir, "embeddings")
-    delta = _norms(e.filter(F.col("vec_id") >= boundary))
+    delta = vec_norms(e.filter(F.col("vec_id") >= boundary), "label")
     delta_labels = delta.select("label").distinct()
     old = stored.join(F.broadcast(delta_labels), "label", "left_semi")
     blocks = old.withColumn("is_delta", F.lit(False)).unionByName(
         delta.withColumn("is_delta", F.lit(True))
     )
-    slack = threshold - 1e-9
-
-    def probe_block(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        d_mask = pdf["is_delta"].to_numpy()
-        if not d_mask.any() or len(pdf) < 2:
-            return pd.DataFrame({"vec1": [], "vec2": []}).astype("int64")
-        m = np.stack(pdf["v"].to_numpy())
-        u = m / pdf["nrm"].to_numpy()[:, None]
-        ids = pdf["vec_id"].to_numpy()
-        ud, idd = u[d_mask], ids[d_mask]
-        # delta rows x ALL rows — O(|delta_block| * |block| * dim), never
-        # the inline twin's block². Keep (other < delta): old-delta pairs
-        # (old ids all < boundary <= delta ids) and each delta-delta pair
-        # exactly once (at i = its larger side). Chunked over the delta
-        # rows so the transient sim matrix is bounded by _KERNEL_CHUNK x
-        # block_rows whatever the block size.
-        outs = []
-        for c in range(0, len(idd), _KERNEL_CHUNK):
-            sim = ud[c : c + _KERNEL_CHUNK] @ u.T
-            keep = (sim >= slack) & (
-                ids[None, :] < idd[c : c + _KERNEL_CHUNK, None]
-            )
-            i, j = np.nonzero(keep)
-            outs.append(
-                pd.DataFrame({"vec1": ids[j], "vec2": idd[c + i]})
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    cand = blocks.groupBy("label").applyInPandas(
-        probe_block, "vec1 long, vec2 long"
-    )
+    cand = cosine_candidates(blocks, "label", threshold)
     # exact verify tier: same fold-order float64 dot as the inline twin,
     # so cos_sim is bitwise-equal to the oracle's list_sum. Vector sides
     # come from the STORED table (old) and the delta projection — never a
     # re-normalization of version N (parquet round-trips the doubles
     # exactly, so the stored nrm/v are bitwise the build-time ones).
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     a = blocks.select(
-        F.col("vec_id").alias("vec1"), F.col("v").alias("v1"), F.col("nrm").alias("n1")
+        F.col("vec_id").alias("d1"), F.col("v").alias("v1"), F.col("nrm").alias("n1")
     )
     b = delta.select(
-        F.col("vec_id").alias("vec2"), F.col("v").alias("v2"), F.col("nrm").alias("n2")
+        F.col("vec_id").alias("d2"), F.col("v").alias("v2"), F.col("nrm").alias("n2")
     )
-    pairs = cand.join(a, "vec1").join(b, "vec2")
-    cos = dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
-    return pairs.select("vec1", "vec2", cos.alias("cos_sim")).filter(
-        F.col("cos_sim") >= threshold
-    )
+    pairs = cand.join(a, "d1").join(b, "d2")
+    cos = _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
+    return pairs.select(
+        F.col("d1").alias("vec1"), F.col("d2").alias("vec2"), cos.alias("cos_sim")
+    ).filter(F.col("cos_sim") >= threshold)

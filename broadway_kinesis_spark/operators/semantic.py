@@ -5,9 +5,10 @@ minhash/simhash/jaccard find documents that SHARE SURFACE TEXT, semantic
 dedup finds documents that say the same thing in different words — the
 embedding space is the blocking structure, and the blocking key is LEARNED
 from the data (nearest seed centroid) instead of given (label, band, or
-shingle). Lives in its own module so a change to the syntactic family never
-stales this operator's driver row and vice versa (per-file staleness rule,
-tests/test_registry_window.py).
+shingle). The vector projection and the chunked candidate kernel are the
+embedding near-dup family's own (``dedup.vec_norms``,
+``dedup.cosine_candidates``), shared with ``dedup_embedding_cosine`` and
+both incremental channels.
 
 Reference parity: [TGT] — the reference has no dedup surface; engine
 extension per the BASELINE.json north star (SemDedup: Abbas et al. 2023,
@@ -19,10 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from broadway_kinesis_spark.operators.dedup import cosine_candidates, vec_norms
+from broadway_kinesis_spark.operators.similarity import _dot, _sql_dot
 from broadway_kinesis_spark.registry import query
 from broadway_kinesis_spark.session import load
-
-_SQL_DOT = "list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2]))"
 
 SEM_K = 8       # semantic-dedup coarse clusters (seed centroids)
 SEM_T = 0.35    # within-cluster near-dup cosine threshold
@@ -38,7 +39,7 @@ def sql_sem_pair_ctes(threshold: float = SEM_T) -> str:
     return f"""
     sme AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
-               sqrt({_SQL_DOT.format(a='embedding::DOUBLE[]', b='embedding::DOUBLE[]')}) AS nrm
+               sqrt({_sql_dot('embedding::DOUBLE[]', 'embedding::DOUBLE[]')}) AS nrm
         FROM embeddings
     ), smc AS (
         SELECT vec_id AS cid, v AS cv FROM sme ORDER BY vec_id LIMIT {SEM_K}
@@ -56,7 +57,7 @@ def sql_sem_pair_ctes(threshold: float = SEM_T) -> str:
         SELECT a.vec_id AS d1, b.vec_id AS d2
         FROM smasg a JOIN smasg b
           ON a.cid = b.cid AND a.vec_id < b.vec_id
-         AND {_SQL_DOT.format(a='a.v', b='b.v')} / (a.nrm * b.nrm) >= {threshold}
+         AND {_sql_dot('a.v', 'b.v')} / (a.nrm * b.nrm) >= {threshold}
     )"""
 
 
@@ -89,11 +90,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential-fold float64 dot as the rest of the similarity family
     (bitwise-equal to DuckDB's ``list_sum``/``list_transform``); the
     argmin window breaks distance ties on centroid id, so assignment is
-    deterministic in both engines. Candidate generation runs a numpy
-    matmul per cluster with a 1e-9 slack below {SEM_T} (matmul and fold
-    agree to ~1e-15 relative, so no true duplicate can be missed), and
-    the exact fold re-scores only the candidates — the same two-tier
-    shape as ``dedup_embedding_cosine``, which is what keeps the
+    deterministic in both engines. Candidate generation runs the family's
+    chunked numpy matmul kernel per cluster with a 1e-9 slack below
+    {SEM_T} (matmul and fold agree to ~1e-15 relative, so no true
+    duplicate can be missed), and the exact fold re-scores only the
+    candidates — the same two-tier shape and the same kernel as
+    ``dedup_embedding_cosine``, which is what keeps the
     quadratic-in-cluster-size work at memory bandwidth instead of in the
     interpreted expression evaluator (the fold-only form measured 18x at
     the x10 corpus; this form is matmul-bound).
@@ -101,8 +103,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: assignment is a broadcast nested-loop over {SEM_K}
     centroid rows (a projection — no shuffle of the vectors); candidate
     pairs come from a per-cluster Arrow batch, so pair work is bounded
-    by cluster size, never corpus-wide; the final keep flag is a left
-    join against the (small) duplicate-id set. At 100 TB the seeds come
+    by cluster size, never corpus-wide, and the kernel's transient
+    matrix by ``_KERNEL_CHUNK × cluster_rows``; the final keep flag is a
+    left join against the (small) duplicate-id set. At 100 TB the seeds come
     from the persisted k-means index (operators/ann_persist.py) and the
     cluster count scales WITH corpus size (K ∝ N) so cluster sizes — and
     with them the per-task matmul — stay constant; the fixed {SEM_K}
@@ -124,23 +127,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, nrm, cid) — each vector with its nearest seed centroid
-    (deterministic: sq-distance ties break on centroid id)."""
-    e = load(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    e = e.select("vec_id", v.alias("v"), F.sqrt(_dot(v, v)).alias("nrm"))
-    c = (
-        e.orderBy("vec_id")
-        .limit(SEM_K)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    )
+def assign_to_centroids(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Assign each (vec_id, v, nrm) row to its nearest centroid from the
+    given (cid, cv) set: sequential-fold float64 squared distance, ties
+    broken on centroid id, so assignment is deterministic in both engines."""
     sqdist = F.aggregate(
         F.zip_with(F.col("v"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -150,12 +140,29 @@ def _assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cid"))
     )
     return (
-        e.crossJoin(F.broadcast(c))
+        vecs.crossJoin(F.broadcast(centroids))
         .withColumn("dist", sqdist)
         .withColumn("rn", rn)
         .filter(F.col("rn") == 1)
         .select("vec_id", "v", "nrm", "cid")
     )
+
+
+def seeded_assignments(e: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm, cid) — each vector of an embeddings frame with its
+    nearest seed centroid; the seeds are the frame's lowest {SEM_K}
+    vec_ids."""
+    vecs = vec_norms(e)
+    c = (
+        vecs.orderBy("vec_id")
+        .limit(SEM_K)
+        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    )
+    return assign_to_centroids(vecs, c)
+
+
+def _assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return seeded_assignments(load(spark, sf_dir, "embeddings"))
 
 
 def semantic_dup_pairs(
@@ -166,48 +173,34 @@ def semantic_dup_pairs(
 ) -> DataFrame:
     """Verified within-cluster semantic near-dup pairs (d1, d2), d1 < d2 —
     the SQL twin is ``sql_sem_pair_ctes(threshold)``'s ``sm``. Two-tier as
-    in the module docstring: per-cluster matmul candidates at a 1e-9
-    slack, then the exact sequential-fold cosine as the emit filter, so
-    the pair set is defined by the fold (bitwise-equal to DuckDB) in both
-    engines. Shared with the leakage-safe split's evidence union
+    in the module docstring: per-cluster candidates from the family's
+    chunked kernel (``dedup.cosine_candidates``, every vector a delta) at
+    a 1e-9 slack, then the exact sequential-fold cosine as the emit
+    filter, so the pair set is defined by the fold (bitwise-equal to
+    DuckDB) in both engines. Shared with the leakage-safe split's evidence union
     (splits.py), which passes a paraphrase-level threshold: the cosine
     that means "near-duplicate" is a PER-CORPUS property — {SEM_T} is
     tuned for the near-orthogonal fixture tail and, measured on the
     label-clustered fresh x10 corpus, emits 14.68 M within-cluster pairs
     (ball density / topic membership, not dup structure — the round-6
     fingerprint lesson in embedding space)."""
-    import numpy as np
-    import pandas as pd
-
     if asg is None:
         asg = _assignments(spark, sf_dir)
-    slack = threshold - 1e-9
-
-    def block_candidates(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        m = np.stack(pdf["v"].to_numpy())
-        u = m / pdf["nrm"].to_numpy()[:, None]
-        sim = u @ u.T
-        i, j = np.triu_indices(len(pdf), k=1)
-        keep = sim[i, j] >= slack
-        ids = pdf["vec_id"].to_numpy()
-        a, b = ids[i[keep]], ids[j[keep]]
-        return pd.DataFrame({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b)})
-
-    cand = asg.groupBy("cid").applyInPandas(block_candidates, "id_a long, id_b long")
+    cand = cosine_candidates(
+        asg.select("*", F.lit(True).alias("is_delta")), "cid", threshold
+    )
     va = asg.select(
-        F.col("vec_id").alias("id_a"), F.col("v").alias("v_a"),
+        F.col("vec_id").alias("d1"), F.col("v").alias("v_a"),
         F.col("nrm").alias("nrm_a"),
     )
     vb = asg.select(
-        F.col("vec_id").alias("id_b"), F.col("v").alias("v_b"),
+        F.col("vec_id").alias("d2"), F.col("v").alias("v_b"),
         F.col("nrm").alias("nrm_b"),
     )
     cos = _dot(F.col("v_a"), F.col("v_b")) / (F.col("nrm_a") * F.col("nrm_b"))
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+        cand.join(va, "d1")
+        .join(vb, "d2")
         .filter(cos >= threshold)
-        .select(F.col("id_a").alias("d1"), F.col("id_b").alias("d2"))
+        .select("d1", "d2")
     )

@@ -23,8 +23,10 @@ Why a delta vector's keep flag needs no old-old comparison: keep(v) is
 false iff some SAME-CLUSTER vector with a SMALLER id sits within cosine
 {SEM_T} of v. Every version-N id is smaller than every delta id, so the
 candidate set for a delta vector is (stored members of its cluster) ∪
-(delta members with smaller id) — exactly what the delta-sided kernel
-scores (``delta_rows × block_rows``, never the inline twin's block²).
+(delta members with smaller id) — exactly what the family's kernel
+(``dedup.cosine_candidates``, the inline twin's own) keeps when only the
+delta rows are marked: it scores ``delta_rows × block_rows``, where the
+inline query, marking every row, scores ``block_rows²``.
 
 Persisted artifact (:func:`ensure_semantic_assignments`): ``(vec_id, v,
 nrm, cid)`` — the assignment table a SemDedup deployment carries anyway
@@ -39,52 +41,27 @@ SemDedup: Abbas et al. 2023, public literature).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from broadway_kinesis_spark.functions.versioned_fold import (
     BOUNDARY,
     VersionedArtifact,
 )
-from broadway_kinesis_spark.operators import semantic as _semantic  # noqa: F401 (registers the inline twin)
-from broadway_kinesis_spark.operators.semantic import SEM_K, SEM_T, _dot
+from broadway_kinesis_spark.operators.dedup import cosine_candidates, vec_norms
+from broadway_kinesis_spark.operators.semantic import (
+    SEM_K,
+    SEM_T,
+    assign_to_centroids,
+    seeded_assignments,
+)
+from broadway_kinesis_spark.operators.similarity import _dot
 from broadway_kinesis_spark.registry import REGISTRY, query
 from broadway_kinesis_spark.session import load
 
 #: the inline channel's oracle OBJECT — importing operators.semantic above
 #: ran its @query decorator, so this lookup can never miss nor drift.
 _INLINE_ORACLE = REGISTRY["dedup_semantic"].oracle
-
-#: delta rows scored per kernel step (embedding_incremental's bound: the
-#: transient sim matrix stays chunk × block_rows whatever the block size).
-_KERNEL_CHUNK = 4096
-
-
-def _norm_vecs(e: DataFrame) -> DataFrame:
-    """(vec_id, v float64[], nrm) — the inline channel's projection."""
-    v = F.col("embedding").cast("array<double>")
-    return e.select("vec_id", v.alias("v"), F.sqrt(_dot(v, v)).alias("nrm"))
-
-
-def _assign_to(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign each (vec_id, v, nrm) row to its nearest centroid from the
-    given (cid, cv) set — bitwise the inline math: sequential-fold float64
-    squared distance, ties broken on centroid id."""
-    sqdist = F.aggregate(
-        F.zip_with(F.col("v"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cid"))
-    )
-    return (
-        vecs.crossJoin(F.broadcast(centroids))
-        .withColumn("dist", sqdist)
-        .withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "nrm", "cid")
-    )
 
 
 def stored_centroids(stored: DataFrame) -> DataFrame:
@@ -99,29 +76,16 @@ def stored_centroids(stored: DataFrame) -> DataFrame:
     )
 
 
-def _seeded_assignments(e: DataFrame) -> DataFrame:
-    """Version N's assignment rows (vec_id, v, nrm, cid) — seeds are
-    version N's lowest {SEM_K} ids, which equal the full corpus's seeds
-    (module note)."""
-    vecs = _norm_vecs(e)
-    c = (
-        vecs.orderBy("vec_id")
-        .limit(SEM_K)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    )
-    return _assign_to(vecs, c)
-
-
 #: a fold assigns the delta under version N's FROZEN centroids, so fold ==
 #: scratch EXACTLY (the seed-set argument in the module note)
 SEMANTIC_ASSIGNMENTS = VersionedArtifact(
     name="semantic_assignments",
     prefix="_bks_semasg_",
     policy=f"r11s3:semasg:k{SEM_K}",
-    rows=_seeded_assignments,
+    rows=seeded_assignments,
     source="embeddings",
-    fold_rows=lambda e, stored: _assign_to(
-        _norm_vecs(e), stored_centroids(stored)
+    fold_rows=lambda e, stored: assign_to_centroids(
+        vec_norms(e), stored_centroids(stored)
     ),
 )
 ensure_semantic_assignments = SEMANTIC_ASSIGNMENTS.ensure
@@ -163,19 +127,16 @@ def incremental_semantic_rows(
     frozen centroid rows (a projection of the delta — no vector shuffle);
     the stored side LEFT-SEMI prunes to the delta's cluster set
     (broadcast — a delta touches few clusters); the per-cluster Arrow
-    kernel scores ``delta_rows × block_rows`` chunked at {_KERNEL_CHUNK};
+    kernel (``dedup.cosine_candidates``) scores ``delta_rows × block_rows``;
     the exact sequential-fold cosine re-scores candidates so the decision
     boundary is bitwise the oracle's."""
-    import numpy as np
-    import pandas as pd
-
     stored = spark.table(
         asg_tbl
         if asg_tbl is not None
         else ensure_semantic_assignments(spark, sf_dir, boundary)
     )
     e = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= boundary)
-    delta = _assign_to(_norm_vecs(e), stored_centroids(stored))
+    delta = assign_to_centroids(vec_norms(e), stored_centroids(stored))
     # the kernel + verify consume the delta's assignments twice and the
     # keep join a third time — materialize once, delta-bounded.
     delta = delta.localCheckpoint(eager=True)
@@ -184,27 +145,7 @@ def incremental_semantic_rows(
     blocks = old.withColumn("is_delta", F.lit(False)).unionByName(
         delta.withColumn("is_delta", F.lit(True))
     )
-    slack = threshold - 1e-9
-
-    def probe_block(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        d_mask = pdf["is_delta"].to_numpy()
-        if not d_mask.any() or len(pdf) < 2:
-            return pd.DataFrame({"d1": [], "d2": []}).astype("int64")
-        m = np.stack(pdf["v"].to_numpy())
-        u = m / pdf["nrm"].to_numpy()[:, None]
-        ids = pdf["vec_id"].to_numpy()
-        ud, idd = u[d_mask], ids[d_mask]
-        outs = []
-        for c in range(0, len(idd), _KERNEL_CHUNK):
-            sim = ud[c : c + _KERNEL_CHUNK] @ u.T
-            keep = (sim >= slack) & (
-                ids[None, :] < idd[c : c + _KERNEL_CHUNK, None]
-            )
-            i, j = np.nonzero(keep)
-            outs.append(pd.DataFrame({"d1": ids[j], "d2": idd[c + i]}))
-        return pd.concat(outs, ignore_index=True)
-
-    cand = blocks.groupBy("cid").applyInPandas(probe_block, "d1 long, d2 long")
+    cand = cosine_candidates(blocks, "cid", threshold)
     # exact verify: same fold-order float64 cosine as the inline twin and
     # the oracle's list_sum — the emit filter defines the pair set.
     va = blocks.select(

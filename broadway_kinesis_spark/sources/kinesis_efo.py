@@ -91,10 +91,13 @@ its read cursor), so the first read continues from the checkpoint, not from
 this reader did not fetch: a restart between offset commit and sink commit.
 It is the only read that runs on an executor. It reads each shard's range
 (start, end] — AFTER the start cursor, else AT the pinned first sequence —
-whole, by repeating the driver's bounded fetch from the last record read,
-so a batch planned under a larger ``maxRecordsPerBatch`` than the restarted
-query's still re-reads; it fails loudly rather than commit a range it could
-not read whole.
+whole, whatever ``maxRecordsPerBatch`` is now: the batch may have been
+planned under a larger cap than the restarted query's. With ``consumerArn``
+one subscription per shard reads the range to its planned end, the cap not
+applied, so the re-read waits out no per-second subscribe pacing (the cap
+would save no memory there: the range is held whole before it is yielded).
+Over ``get_records`` the capped poll repeats from the last record read. It
+fails loudly rather than commit a range it could not read whole.
 
 SDK testing tiers: both read paths are unit-tested hermetically against a
 fake client (tests/test_kinesis_efo.py — the SDK-free moral equivalent of
@@ -474,19 +477,20 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
     def _subscribe_batch(
         self, shard_id: str, position: dict, end_seq: str | None
     ) -> tuple[list[dict], bool]:
-        """The bounded EFO fetch from ``position``; returns (records,
-        shard_closed). Stops at ``maxRecordsPerBatch`` records (the last event
-        is cut there), at a null continuation (the shard closed, A7), when the
-        stream ends, and where the wanted data ends: the driver's read
-        (``end_seq`` None) at a caught-up event (``MillisBehindLatest`` 0); a
-        range re-read once ``end_seq`` arrives, or at a caught-up event with
-        no records (the tip, as for ``get_records``)."""
+        """The EFO fetch from ``position``; returns (records, shard_closed).
+        Stops at a null continuation (the shard closed, A7), when the stream
+        ends, and where the wanted data ends: the driver's read (``end_seq``
+        None) at ``maxRecordsPerBatch`` records (the last event is cut there)
+        or at a caught-up event (``MillisBehindLatest`` 0); a range re-read
+        once ``end_seq`` arrives, or at a caught-up event with no records (the
+        tip, as for ``get_records``). A range re-read is not capped: its end
+        was fixed when the batch was planned, so one subscription reads it."""
         out: list[dict] = []
         events = self._subscription_events(shard_id, position)
         try:
             for ev in events:
                 recs = _with_lag(ev.get("Records", []), ev.get("MillisBehindLatest"))
-                room = self.max_per_batch - len(out)
+                room = self.max_per_batch - len(out) if end_seq is None else len(recs)
                 out += recs[:room]
                 if len(recs) > room:
                     return out, False
@@ -498,8 +502,8 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
                         caught_up and not recs
                     )
                 else:
-                    done = caught_up
-                if done or len(out) >= self.max_per_batch:
+                    done = caught_up or len(out) >= self.max_per_batch
+                if done:
                     return out, False
         finally:
             events.close()
@@ -514,8 +518,9 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
     ) -> tuple[list[dict], bool]:
         """One bounded fetch of up to ``maxRecordsPerBatch`` records AFTER
         ``cursor``, else AT ``at_seq``, else at the configured position;
-        returns (records, shard_closed). ``end_seq`` marks a range re-read
-        (see :meth:`_subscribe_batch`)."""
+        returns (records, shard_closed). ``end_seq`` marks a range re-read,
+        which an EFO subscription reads past the cap (see
+        :meth:`_subscribe_batch`)."""
         floating = cursor is None and at_seq is None
         if self.consumer_arn and not (floating and self.position.kind == "latest"):
             if cursor is not None:
@@ -606,9 +611,10 @@ class KinesisEfoStreamReader(SimpleDataSourceStreamReader):
         when a prior cursor exists, else AT the pinned first sequence
         ``at_seq``, never a floating LATEST resolution at replay time —
         whole, whatever ``maxRecordsPerBatch`` is now: the batch may have
-        been planned under a larger cap. Repeats the bounded fetch from the
-        last record read until ``end_seq`` arrives or the shard closes (A7);
-        an EFO stream the server ends early is thereby re-requested AFTER
+        been planned under a larger cap. Repeats the fetch from the last
+        record read until ``end_seq`` arrives or the shard closes (A7): over
+        ``get_records`` once per cap, over EFO only when the server ends a
+        subscription early, which is thereby re-requested AFTER
         the last record read, or at the original position when none arrived
         (`subscribe_to_shard_test.exs:145-189`). Fails loudly rather than
         commit a range it cannot read whole: on a sequence numerically past

@@ -192,6 +192,69 @@ def test_incremental_embedding_randomized_mirror(spark):
         assert got[k] == v  # bitwise: same fold order on both sides
 
 
+def test_cosine_kernel_across_chunk_boundaries_matches_triu(monkeypatch):
+    """The embedding near-dup family's one candidate kernel, chunked at 3
+    delta rows, emits each pair exactly once and exactly the brute-force
+    upper triangle: every pair at or above the slack whose larger id is a
+    delta row (with every row a delta: the whole triangle, the inline
+    queries; with stored ids below delta ids: every delta-touching pair,
+    the incremental ones). Blocks below 2 rows or without a delta row emit
+    an empty int64 frame."""
+    import pandas as pd
+
+    from broadway_kinesis_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_KERNEL_CHUNK", 3)
+    slack = 0.9 - 1e-9
+    kernel = dedup.cosine_kernel(slack)
+    rng = np.random.default_rng(1207)
+
+    def block(n):
+        m = rng.normal(size=(n, 8))
+        half = n // 2
+        m[half:] = m[: n - half] + 0.05 * rng.normal(size=(n - half, 8))
+        return pd.DataFrame(
+            {
+                "vec_id": rng.choice(10_000, size=n, replace=False).astype("int64"),
+                "v": list(m),
+                "nrm": np.linalg.norm(m, axis=1),
+            }
+        )
+
+    def triu_pairs(pdf):
+        pdf = pdf.sort_values("vec_id")
+        u = np.stack(pdf["v"].to_numpy()) / pdf["nrm"].to_numpy()[:, None]
+        ids, delta = pdf["vec_id"].to_numpy(), pdf["is_delta"].to_numpy()
+        i, j = np.triu_indices(len(pdf), k=1)
+        keep = ((u @ u.T)[i, j] >= slack) & delta[j]
+        return sorted(zip(ids[i[keep]].tolist(), ids[j[keep]].tolist()))
+
+    n_pairs = 0
+    for n in (2, 3, 4, 5, 7, 10, 16):
+        pdf = block(n)
+        masks = (
+            np.ones(n, bool),  # inline: every row a delta
+            pdf["vec_id"].to_numpy() >= np.median(pdf["vec_id"]),  # stored below delta
+            rng.random(n) < 0.5,
+        )
+        for mask in masks:
+            pdf["is_delta"] = mask
+            out = kernel(pdf)
+            assert list(out.columns) == ["d1", "d2"]
+            assert (out.dtypes == "int64").all()
+            got = sorted(zip(out["d1"].tolist(), out["d2"].tolist()))
+            assert got == triu_pairs(pdf)
+            n_pairs += len(got)
+    assert n_pairs >= 50  # planted near-dups make the check non-vacuous
+
+    one = block(1).assign(is_delta=True)
+    no_delta = block(6).assign(is_delta=False)
+    for pdf in (one, no_delta):
+        out = kernel(pdf)
+        assert out.empty and list(out.columns) == ["d1", "d2"]
+        assert (out.dtypes == "int64").all()
+
+
 # ----------------------------------------------- fingerprint roll-forward
 def test_roll_forward_phash_bands_equals_scratch(spark, sf_dir):
     from broadway_kinesis_spark.operators.fingerprint_incremental import (

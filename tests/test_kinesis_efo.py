@@ -599,15 +599,13 @@ def test_read_between_offsets_skips_backwards_shard():
 def test_read_between_offsets_rereads_a_range_planned_under_a_larger_cap(monkeypatch):
     """A query restarted with a lower maxRecordsPerBatch re-reads its last
     offset-log batch, planned under the old cap, whole over either API:
-    the bounded fetch repeats from the last record read until the planned
-    end. (Truncation still fails loudly: see the truncated-range test.)"""
-    clock = [100.0]
-
-    def sleep(s):  # the EFO re-read's second subscribe waits out the second
-        clock[0] += s
-
+    get_records repeats the capped poll from the last record read until the
+    planned end; EFO reads each shard's range through one subscription,
+    uncapped, so no subscribe waits out the per-second pacing. (Truncation
+    still fails loudly: see the truncated-range test.)"""
+    sleeps = []
     monkeypatch.setattr(
-        efo_mod, "time", SimpleNamespace(monotonic=lambda: clock[0], sleep=sleep, time=time.time)
+        efo_mod, "time", SimpleNamespace(monotonic=lambda: 100.0, sleep=sleeps.append, time=time.time)
     )
     planner = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon")
     start = planner.initialOffset()
@@ -615,10 +613,13 @@ def test_read_between_offsets_rereads_a_range_planned_under_a_larger_cap(monkeyp
     assert end["shard-0001"] == {"seq": "3", "at": "1"}
     reread = {}
     for opts in ({}, {"consumerArn": ARN}):
-        r = make_reader(FakeKinesisClient(SHARDS), startingPosition="trim_horizon", maxRecordsPerBatch="2", **opts)
+        client = FakeKinesisClient(SHARDS)
+        r = make_reader(client, startingPosition="trim_horizon", maxRecordsPerBatch="2", **opts)
         reread[bool(opts)] = [(x[4], x[0], x[3]) for x in r.readBetweenOffsets(start, end)]
     assert [seq for _shard, seq, _data in reread[False]] == ["1", "2", "3", "10"]
     assert reread[True] == reread[False]
+    assert [shard for shard, _pos in client.subscribe_calls] == ["shard-0001", "shard-0002"]
+    assert sleeps == []
 
 
 def test_expired_chain_iterator_refreshes_at_timestamp_not_latest():

@@ -121,20 +121,24 @@ ARROW_PYTHON_OK = {
 #: whole execution-node family; every entry must state its boundedness.
 GROUPED_PYTHON_OK = {
     "dedup_embedding_cosine": (
-        "applyInPandas per CENTROID BLOCK: group count = K centroids, each"
-        " group a blocked candidate set, not the corpus (dedup.py)"
+        "applyInPandas per label block through the family's chunked cosine"
+        " kernel, every row a delta: transient matrix _KERNEL_CHUNK x"
+        " block_rows (dedup.py)"
     ),
     "dedup_incremental_embedding": (
-        "applyInPandas per delta-touched label block; kernel is delta_rows"
-        " x block_rows, never block² (embedding_incremental.py)"
+        "applyInPandas per delta-touched label block through the family's"
+        " chunked cosine kernel: delta_rows x block_rows, transient matrix"
+        " _KERNEL_CHUNK x block_rows (dedup.py)"
     ),
     "dedup_semantic": (
-        "applyInPandas per SemDedup cluster: K-seed blocking bounds each"
-        " group; pairwise work is within-cluster only (semantic.py)"
+        "applyInPandas per SemDedup cluster through the family's chunked"
+        " cosine kernel, every row a delta: transient matrix _KERNEL_CHUNK"
+        " x block_rows (dedup.py)"
     ),
     "dedup_incremental_semantic": (
-        "applyInPandas per delta-touched cluster; kernel is delta_rows x"
-        " block_rows, never block² (semantic_incremental.py)"
+        "applyInPandas per delta-touched cluster through the family's"
+        " chunked cosine kernel: delta_rows x block_rows, transient matrix"
+        " _KERNEL_CHUNK x block_rows (dedup.py)"
     ),
 }
 

@@ -11,8 +11,9 @@ Per channel, at a 90/10 old/delta boundary on the fresh corpus
 - the delta probe (the steady-state serving cost);
 - the full from-scratch comparator: the same kernel at boundary=0
   (everything is delta, stored side empty — exactly the inline channel's
-  work: block² for embeddings, full decode + banded self-join for
-  fingerprints);
+  work, which for embeddings is the one shared chunked cosine kernel,
+  ``dedup.cosine_candidates``, with every row a delta: block²; full
+  decode + banded self-join for fingerprints);
 - the roll-forward fold (N-1 -> N, delta-bounded) vs the from-scratch
   version-N build already timed.
 
